@@ -19,9 +19,10 @@ implement three interchangeable strategies and verify they agree:
     141.3k at local[32]). Fewer bus bytes is also the scaling lever on
     membw-ceilinged hosts (see BASELINE.md's strong-scaling closure).
     REQUIRES unique (keys, seq) — verbatim duplicate rows both survive
-    the semi join; at-least-once sources must run
-    :func:`collapse_redelivered` first (the debezium paths do, by
-    default).
+    the semi join; callers over at-least-once input run
+    :func:`collapse_redelivered` first, or the fused
+    :func:`lww_thin_collapse_redelivered` (every replay driver does,
+    always — see arc_spark.cdc.epoch).
 
 ``window``              row_number over (partitionBy keys, orderBy seq desc).
     This IS the north_rule's repartition-by-key + sortWithinPartitions +
@@ -51,8 +52,9 @@ implement three interchangeable strategies and verify they agree:
     boundaries (no per-row Python).
 
 All strategies produce identical output when (keys, seq) is unique (the
-native generator's invariant). At-least-once sources (Debezium) collapse
-verbatim re-deliveries first via :func:`collapse_redelivered`.
+native generator's invariant). The replay drivers make it unique in every
+epoch: verbatim re-deliveries collapse first via
+:func:`collapse_redelivered` (fused into the unsalted thin aggregate).
 """
 
 from __future__ import annotations
@@ -413,26 +415,17 @@ def collapse_redelivered(
 
 
 def lww_thin_collapse_redelivered(
-    df: DataFrame,
-    keys: list[str],
-    seq_col: str = "seq",
-    *,
-    max_broadcast: int = DEFAULT_MAX_BROADCAST_WINNERS,
+    df: DataFrame, keys: list[str], seq_col: str = "seq"
 ) -> tuple[DataFrame, int]:
-    """Fused ``collapse_redelivered`` + thin LWW for at-least-once tails.
-
-    The runner previously ran TWO full thin scans per epoch on
-    iceberg/debezium tails: one (keys, seq) aggregate to detect verbatim
-    re-deliveries, then the LWW winner aggregate. One grouped aggregate
-    answers both: per key, ``count(*) == count_distinct(seq)`` iff no
-    (keys, seq) group is duplicated (count_distinct ignores NULL seqs, so
-    a null-seq row also fails the equality and takes the safe path), and
-    ``max(seq)`` is already the LWW winner. On the clean path (the
-    overwhelmingly common case) the fat rows join back against that
-    winner set directly — identical output to collapse-then-LWW, one
-    thin scan instead of two. Duplicates fall back to the exact
-    collapse + plain thin LWW (rare, and the fallback recomputes the
-    redelivered count exactly).
+    """Fused ``collapse_redelivered`` + thin LWW: one thin scan instead
+    of two. One grouped aggregate answers both questions: per key,
+    ``count(*) == count_distinct(seq)`` iff no (keys, seq) group is
+    duplicated (count_distinct ignores NULL seqs, so a null-seq row also
+    fails the equality and takes the safe path), and ``max(seq)`` is
+    already the LWW winner. On the clean path (the overwhelmingly common
+    case) the fat rows join back against that winner set directly —
+    identical output to collapse-then-LWW. Duplicates fall back to the
+    exact collapse + plain thin LWW, which also counts them exactly.
 
     Returns ``(deduped_df, events_redelivered)``.
     """
@@ -442,19 +435,18 @@ def lww_thin_collapse_redelivered(
         F.count(F.lit(1)).alias("_nr"),
         F.count_distinct(F.col(seq_col)).alias("_nd"),
     ).localCheckpoint(eager=True)
-    extras_row = stats.agg(
-        F.coalesce(F.sum(F.col("_nr") - F.col("_nd")), F.lit(0)).alias("_e")
+    row = stats.agg(
+        F.coalesce(F.sum(F.col("_nr") - F.col("_nd")), F.lit(0)).alias("_e"),
+        F.count(F.lit(1)).alias("_k"),
     ).first()
-    if int(extras_row["_e"]) != 0:
-        collapsed, extras = collapse_redelivered(
-            df, keys, seq_col, max_broadcast=max_broadcast
-        )
+    if int(row["_e"]) != 0:
+        collapsed, extras = collapse_redelivered(df, keys, seq_col)
         return (
             last_writer_wins(collapsed, keys, seq_col, strategy="thin"),
             extras,
         )
     winners = stats.select(*keys, F.col(seq_col))
-    broadcast = stats.count() <= max_broadcast
+    broadcast = row["_k"] <= DEFAULT_MAX_BROADCAST_WINNERS
     return _key_seq_join(df, winners, keys, seq_col, "left_semi", broadcast), 0
 
 

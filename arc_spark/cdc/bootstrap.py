@@ -19,9 +19,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType, StringType
 
+from arc_spark.cdc.epoch import as_paths, check_source, read_events
 from arc_spark.lake.table import LakeTable, Snapshot
 
 log = logging.getLogger("arc_spark.cdc")
+
+# the generator's row key, and every new table's unless told otherwise
+DEFAULT_KEYS = ("repo", "path")
+
+
+def stream_table_schema(
+    stream_schema: StructType,
+    drop_cols: tuple[str, ...] = ("op",),
+    fingerprint: bool | str = True,
+) -> StructType:
+    """A lake table's schema for a change stream: the stream's columns
+    minus ``drop_cols``, plus the fingerprint."""
+    fields = [f for f in stream_schema.fields if f.name not in drop_cols]
+    if fingerprint and "content_sha256" not in {f.name for f in fields}:
+        fields.append(StructField("content_sha256", StringType(), True))
+    return StructType(fields)
 
 
 def create_table_for_stream(
@@ -29,7 +46,7 @@ def create_table_for_stream(
     events_path: str | list[str],
     table_root: str,
     *,
-    key_cols: list[str] = ("repo", "path"),
+    key_cols: list[str] = DEFAULT_KEYS,
     seq_col: str = "seq",
     num_buckets: int = 32,
     fingerprint: bool = True,
@@ -38,19 +55,16 @@ def create_table_for_stream(
     events_format: str = "parquet",
     payload_schema=None,
 ) -> tuple[LakeTable, Snapshot]:
+    check_source(
+        events_format, payload_schema, ("parquet", "debezium", "kafka", "iceberg")
+    )
     if events_format in ("debezium", "kafka"):
         # the table shape is the parsed envelope's canonical frame:
         # payload columns + seq (op is dropped below like any stream) —
         # identical for the file tail and the kafka topic, since both
         # carry the same Debezium JSON value
-        from pyspark.sql.types import LongType
-
         from arc_spark.cdc.debezium import _payload_struct
 
-        if payload_schema is None:
-            raise ValueError(
-                f"events_format={events_format!r} requires payload_schema"
-            )
         stream_schema = StructType(
             [*_payload_struct(payload_schema).fields,
              StructField(seq_col, LongType(), True)]
@@ -63,13 +77,8 @@ def create_table_for_stream(
         # must not silently drop it from the table
         from arc_spark.lake.iceberg_read import iceberg_table_schema
 
-        paths = (
-            list(events_path)
-            if isinstance(events_path, (list, tuple))
-            else [events_path]
-        )
         merged: dict[str, StructField] = {}
-        for p in paths:
+        for p in as_paths(events_path):
             for f in iceberg_table_schema(spark, p).fields:
                 seen = merged.get(f.name)
                 if seen is None:
@@ -82,18 +91,10 @@ def create_table_for_stream(
                     )
         stream_schema = StructType(list(merged.values()))
     else:
-        paths = (
-            list(events_path)
-            if isinstance(events_path, (list, tuple))
-            else [events_path]
-        )
-        stream_schema = spark.read.option("mergeSchema", "true").parquet(*paths).schema
-    fields = [f for f in stream_schema.fields if f.name not in drop_cols]
-    if fingerprint and "content_sha256" not in {f.name for f in fields}:
-        fields.append(StructField("content_sha256", StringType(), True))
+        stream_schema = read_events(spark, events_path).schema
     table = LakeTable(table_root)
     snap = table.create(
-        StructType(fields),
+        stream_table_schema(stream_schema, drop_cols, fingerprint),
         list(key_cols),
         seq_col=seq_col,
         num_buckets=num_buckets,

@@ -215,8 +215,8 @@ def parse_debezium(
         tx_cols.append(envc["source"]["table"].alias("_table"))
     return out.select(
         *cols,
-        # unknown Debezium ops pass through verbatim so the runner's
-        # valid_ops gate (on_bad=error/quarantine) sees them — mapping
+        # unknown Debezium ops pass through verbatim so the replay's
+        # malformed-event gate (on_bad=error/quarantine) sees them — mapping
         # them to NULL here would silently reclassify garbage as a
         # NULL-op bad row and lose the original op for the quarantine
         F.coalesce(op, envc["op"]).alias("op"),
@@ -333,9 +333,9 @@ def stage_debezium(
     the raw JSON instead would re-parse the whole tail (no pruning on
     JSON), doubling the staging cost for the common clean case; this way
     a clean tail pays one cheap (keys, seq) pass and the rewrite happens
-    only when duplicates actually exist. Downstream replay then runs with
-    ``redelivery_dedup`` off (staged parquet has unique (keys, seq) by
-    construction).
+    only when duplicates actually exist. Replay collapses re-deliveries
+    again in every epoch (see arc_spark.cdc.epoch); over deduplicated
+    staged parquet that check finds nothing and rides the LWW aggregate.
     """
     raw = spark.read.text(json_path)
     parsed = parse_debezium(

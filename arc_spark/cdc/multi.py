@@ -25,8 +25,9 @@ Scale notes:
   into directory pruning (zero waste). For multi-table epochs over
   non-partitioned input the epoch batch is persisted once
   (MEMORY_AND_DISK) so T tables cost one scan, not T.
-- The per-table apply reuses the single-table kernels unchanged
-  (thin LWW, Arrow fingerprint, salting) — the catalog adds only
+- Each table's events go through the shared epoch kernel
+  (arc_spark.cdc.epoch) over that table's own keys; a malformed event
+  fails the epoch before any table merges. The catalog adds only
   O(#tables) metadata per epoch.
 
 Reference parity: the reference executes multi-output pipelines as one
@@ -38,22 +39,31 @@ arc_spark/lake/table.py.
 
 from __future__ import annotations
 
-import json
-import logging
 import time
+from collections import Counter
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructField, StringType, StructType
+from pyspark.sql.observation import Observation
 
-from arc_spark.cdc.apply import last_writer_wins, normalize_and_fingerprint
+from arc_spark.cdc.bootstrap import DEFAULT_KEYS, stream_table_schema
+from arc_spark.cdc.epoch import (
+    MERGE_FIELDS,
+    EpochDriver,
+    EpochKernel,
+    applied_counters,
+    bad_event,
+    check_source,
+    epoch_record,
+    read_counters,
+    read_events,
+)
 from arc_spark.lake.catalog import LakeCatalog
+from arc_spark.lake.table import LakeTable
 
-log = logging.getLogger("arc_spark.cdc.multi")
 
-
-class MultiTableReplay:
+class MultiTableReplay(EpochDriver):
     """Replay a table-tagged change stream into a LakeCatalog.
 
     ``events_path``: parquet change stream whose rows carry
@@ -65,8 +75,8 @@ class MultiTableReplay:
       - ``"error"`` (default): an event for an unregistered table fails
         the epoch before anything commits (exactly-once → fix, rerun).
       - ``"create"``: auto-register the table with the stream's schema
-        (minus op/table columns, plus the fingerprint) — the bootstrap
-        behavior of a whole-database connector.
+        (minus op/table columns, plus the fingerprint) and ``keys`` —
+        the bootstrap behavior of a whole-database connector.
       - ``"ignore"``: drop those events (counted in metrics).
     """
 
@@ -90,12 +100,7 @@ class MultiTableReplay:
         events_format: str = "parquet",
         payload_schema=None,
     ):
-        if events_format not in ("parquet", "debezium"):
-            raise ValueError(
-                f"events_format must be parquet/debezium, got {events_format!r}"
-            )
-        if events_format == "debezium" and payload_schema is None:
-            raise ValueError("events_format='debezium' requires payload_schema")
+        check_source(events_format, payload_schema, ("parquet", "debezium"))
         if on_unknown_table not in ("error", "create", "ignore"):
             raise ValueError(
                 f"on_unknown_table must be error/create/ignore, got {on_unknown_table!r}"
@@ -105,10 +110,13 @@ class MultiTableReplay:
         self.catalog = catalog
         self.table_col = table_col
         self.batch_size = batch_size
-        self.strategy = strategy
-        self.salt_buckets = salt_buckets
-        self.fingerprint = fingerprint
-        self.keys = list(keys) if keys else ["repo", "path"]
+        self.kernel = EpochKernel(
+            strategy=strategy,
+            salt_buckets=salt_buckets,
+            fingerprint=fingerprint,
+            ddl_approved=events_format == "debezium",
+        )
+        self.keys = list(keys or DEFAULT_KEYS)
         self.seq_col = seq_col
         self.merge_mode = merge_mode
         self.metrics_path = metrics_path
@@ -121,68 +129,17 @@ class MultiTableReplay:
     # ------------------------------------------------------------------
 
     def _events(self) -> DataFrame:
-        paths = (
-            list(self.events_path)
-            if isinstance(self.events_path, (list, tuple))
-            else [self.events_path]
+        return read_events(
+            self.spark, self.events_path, self.events_format,
+            self.payload_schema, table_col=self.table_col,
         )
-        if self.events_format == "debezium":
-            from arc_spark.cdc.debezium import parse_debezium
-
-            raw = self.spark.read.text(paths)
-            return (
-                parse_debezium(
-                    raw, self.payload_schema, with_source_table=True
-                )
-                .drop("_ts_ms")
-                .withColumnRenamed("_table", self.table_col)
-            )
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
 
     def max_seq(self) -> int:
         row = self._events().agg(F.max(self.seq_col)).first()
         return -1 if row[0] is None else int(row[0])
 
-    # ------------------------------------------------------------------
-
-    def _table_schema_from(self, batch: DataFrame) -> StructType:
-        fields = [
-            f
-            for f in batch.schema.fields
-            if f.name not in ("op", self.table_col)
-        ]
-        if self.fingerprint and "content_sha256" not in {f.name for f in fields}:
-            fields.append(StructField("content_sha256", StringType(), True))
-        return StructType(fields)
-
-    def run(
-        self,
-        *,
-        max_epochs: int | None = None,
-        end_seq: int | None = None,
-        failure_injector: Callable[[int, str], None] | None = None,
-    ) -> list[dict]:
-        stream_end = self.max_seq() if end_seq is None else end_seq
-        epochs_done = 0
-        while True:
-            snap = self.catalog.snapshot()
-            next_seq = snap.end_seq + 1
-            if next_seq > stream_end:
-                break
-            if max_epochs is not None and epochs_done >= max_epochs:
-                break
-            epoch = snap.epoch + 1
-            batch_end = min(next_seq + self.batch_size - 1, stream_end)
-            self.run_epoch(epoch, next_seq, batch_end, failure_injector)
-            epochs_done += 1
-        if self.metrics_path:
-            from arc_spark.fs import get_fs
-
-            get_fs(self.metrics_path, self.spark).write_bytes(
-                self.metrics_path,
-                "".join(json.dumps(m) + "\n" for m in self.metrics).encode(),
-            )
-        return self.metrics
+    def _cursor(self):
+        return self.catalog.snapshot()
 
     # ------------------------------------------------------------------
 
@@ -195,27 +152,38 @@ class MultiTableReplay:
     ) -> dict:
         t0 = time.time()
         tcol = F.col(self.table_col)
-        batch = self._events().filter(
-            (F.col(self.seq_col) >= start_seq) & (F.col(self.seq_col) <= end_seq)
-        )
+        seq = F.col(self.seq_col)
+        window = self._events().filter((seq >= start_seq) & (seq <= end_seq))
+        snap = self.catalog.snapshot()
+        members = {
+            n: LakeTable(e["root"], locker=self.catalog.locker)
+            for n, e in snap.tables.items()
+        }
+        # malformed for the event's own table's keys (`keys` for tables
+        # seen for the first time)
+        bad = bad_event(self.keys, self.seq_col)
+        for n, t in members.items():
+            keys = t.snapshot().key_cols
+            if keys != self.keys:
+                bad = F.when(tcol == n, bad_event(keys, self.seq_col)).otherwise(bad)
+        batch = self.kernel.guard(window, bad, self.seq_col)
         # One driver-side pass over table names: O(#tables) rows — the
-        # same order as the catalog manifest itself. The per-name event
-        # counts ride along for free (metrics + empty-table skip).
-        name_rows = (
-            batch.groupBy(tcol.alias("_t"))
-            .agg(F.count(F.lit(1)).alias("_n"))
+        # same order as the catalog manifest itself. The per-name read
+        # counters ride along (metrics, DDL gate, empty-table skip), and
+        # a malformed event fails this job, before any table merges.
+        counts = {
+            r["_t"]: {k: v for k, v in r.asDict().items() if k != "_t"}
+            for r in batch.groupBy(tcol.alias("_t"))
+            .agg(*read_counters(bad))
             .collect()
-        )
-        counts = {r["_t"]: r["_n"] for r in name_rows}
+        }
         if None in counts:
             raise ValueError(
-                f"epoch {epoch}: {counts[None]} events with NULL "
-                f"{self.table_col!r} — not routable"
+                f"epoch {epoch}: {counts[None]['events_read']} events with "
+                f"NULL {self.table_col!r} — not routable"
             )
-        snap = self.catalog.snapshot()
-        known = set(snap.tables)
         names = sorted(counts)
-        unknown = [n for n in names if n not in known]
+        unknown = [n for n in names if n not in members]
         events_ignored = 0
         if unknown:
             if self.on_unknown_table == "error":
@@ -224,12 +192,14 @@ class MultiTableReplay:
                     f"{unknown} (on_unknown_table='error')"
                 )
             if self.on_unknown_table == "ignore":
-                events_ignored = sum(counts[n] for n in unknown)
-                names = [n for n in names if n in known]
+                events_ignored = sum(counts[n]["events_read"] for n in unknown)
+                names = [n for n in names if n in members]
             else:  # create
-                schema = self._table_schema_from(batch)
+                schema = stream_table_schema(
+                    window.schema, ("op", self.table_col), self.kernel.fingerprint
+                )
                 for n in unknown:
-                    self.catalog.register(
+                    members[n] = self.catalog.register(
                         n,
                         schema=schema,
                         key_cols=self.keys,
@@ -246,24 +216,17 @@ class MultiTableReplay:
             batch = batch.persist()
         try:
             table_versions: dict[str, int] = {}
-            per_table: dict[str, dict] = {}
+            results: dict[str, dict] = {}
+            applied: dict[str, tuple] = {}
             for name in names:
-                sub = batch.filter(tcol == name).drop(self.table_col)
-                deduped = last_writer_wins(
-                    sub.filter(F.col("op") != "schema-change"),
-                    self.keys,
-                    self.seq_col,
-                    strategy=self.strategy,
-                    salt_buckets=self.salt_buckets,
+                table = members[name]
+                deduped, redelivered = self.kernel.winners(
+                    batch.filter(tcol == name).drop(self.table_col),
+                    table.snapshot(),
+                    has_ddl=lambda: counts[name]["schema_changes"] > 0,
                 )
-                if self.fingerprint:
-                    impl = (
-                        self.fingerprint
-                        if isinstance(self.fingerprint, str)
-                        else "arrow"
-                    )
-                    deduped = normalize_and_fingerprint(deduped, impl=impl)
-                table = self.catalog.table(name)
+                obs = Observation(f"applied-{epoch}-{name}")
+                deduped = deduped.observe(obs, *applied_counters())
                 if failure_injector:
                     failure_injector(epoch, f"before_merge:{name}")
                 result = table.merge(
@@ -279,11 +242,8 @@ class MultiTableReplay:
                 table_versions[name] = int(
                     result.get("version", table.current_version())
                 )
-                per_table[name] = {
-                    "events_read": counts[name],
-                    "status": result.get("status"),
-                    "rows_written": result.get("rows_written"),
-                }
+                results[name] = result
+                applied[name] = (obs, redelivered)
             if failure_injector:
                 failure_injector(epoch, "before_catalog_commit")
             commit = self.catalog.commit_epoch(
@@ -292,7 +252,7 @@ class MultiTableReplay:
                 end_seq=end_seq,
                 table_versions=table_versions,
                 counters={
-                    "events_read": sum(counts[n] for n in names),
+                    "events_read": sum(counts[n]["events_read"] for n in names),
                     "events_ignored": events_ignored,
                 },
             )
@@ -300,19 +260,38 @@ class MultiTableReplay:
             if persisted:
                 batch.unpersist()
 
-        metric = {
-            "event": "epoch.complete",
-            "epoch": epoch,
-            "start_seq": start_seq,
-            "end_seq": end_seq,
-            "duration_sec": round(time.time() - t0, 3),
-            "status": commit.get("status"),
-            "catalog_version": commit.get("version"),
-            "tables": per_table,
-            "events_ignored": events_ignored,
-        }
+        # counted like the runner's epochs: only when this run committed
+        # the whole epoch (a member merged by a crashed run was its work)
+        counters = None
+        if all(
+            r.get("status") == "committed" for r in [commit, *results.values()]
+        ):
+            total = Counter()
+            for name, (obs, redelivered) in applied.items():
+                total.update(
+                    {**counts[name], **obs.get, "events_redelivered": redelivered}
+                )
+            counters = dict(total)
+        metric = epoch_record(
+            epoch, start_seq, end_seq, t0,
+            {
+                "status": commit.get("status"),
+                **{k: round(sum(r.get(k) or 0 for r in results.values()), 3)
+                   for k in MERGE_FIELDS},
+            },
+            counters,
+            tables={
+                n: {
+                    "events_read": counts[n]["events_read"],
+                    "status": r.get("status"),
+                    "rows_written": r.get("rows_written"),
+                }
+                for n, r in results.items()
+            },
+            catalog_version=commit.get("version"),
+            events_ignored=events_ignored,
+        )
         self.metrics.append(metric)
-        log.info(json.dumps(metric))
         return metric
 
 
@@ -322,7 +301,7 @@ def bootstrap_catalog_for_stream(
     catalog_root: str,
     *,
     table_col: str = "table",
-    keys: list[str] = ("repo", "path"),
+    keys: list[str] = DEFAULT_KEYS,
     seq_col: str = "seq",
     num_buckets: int = 32,
     fingerprint: bool = True,
@@ -337,25 +316,15 @@ def bootstrap_catalog_for_stream(
     per-table schema divergence is handled later by merge widening."""
     catalog = LakeCatalog(catalog_root, locker=locker)
     catalog.create(overwrite=overwrite)
-    replay = MultiTableReplay(
-        spark,
-        events_path,
-        catalog,
-        table_col=table_col,
-        keys=list(keys),
-        seq_col=seq_col,
-        num_buckets=num_buckets,
-        fingerprint=fingerprint,
-        events_format=events_format,
-        payload_schema=payload_schema,
+    ev = read_events(
+        spark, events_path, events_format, payload_schema, table_col=table_col
     )
-    ev = replay._events()
     names = [
         r["_t"]
         for r in ev.select(F.col(table_col).alias("_t")).distinct().collect()
         if r["_t"] is not None
     ]
-    schema = replay._table_schema_from(ev)
+    schema = stream_table_schema(ev.schema, ("op", table_col), fingerprint)
     for n in sorted(names):
         catalog.register(
             n,

@@ -25,28 +25,33 @@ import json
 import logging
 import time
 from collections.abc import Callable
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
-from arc_spark.cdc.apply import (
-    collapse_redelivered,
-    last_writer_wins,
-    normalize_and_fingerprint,
+from arc_spark.cdc.epoch import (
+    EpochDriver,
+    EpochKernel,
+    applied_counters,
+    as_paths,
+    bad_event,
+    check_source,
+    epoch_record,
+    read_counters,
+    read_events,
 )
 from arc_spark.lake.table import LakeTable
 
 log = logging.getLogger("arc_spark.cdc")
-
-KEYS = ["repo", "path"]
 
 
 class InjectedFailure(Exception):
     """Raised by a failure injector to simulate a crash (ChaosMonkey)."""
 
 
-class ReplayRunner:
+class ReplayRunner(EpochDriver):
     def __init__(
         self,
         spark: SparkSession,
@@ -59,20 +64,14 @@ class ReplayRunner:
         fingerprint: bool | str = True,
         metrics_path: str | None = None,
         merge_mode: str = "auto",
-        keys: list[str] | None = None,
-        seq_col: str = "seq",
         lineage: str = "global",
         on_bad: str = "error",
         quarantine_path: str | None = None,
-        valid_ops: tuple[str, ...] = ("insert", "update", "delete", "schema-change"),
         events_format: str = "parquet",
         payload_schema=None,
-        redelivery_dedup: bool | str = "auto",
         tx_metadata_path: str | None = None,
     ):
         self.spark = spark
-        self.keys = list(keys) if keys else list(KEYS)
-        self.seq_col = seq_col
         self.events_path = events_path
         self.table = table
         # "parquet" (default): staged change events, seq-range filters
@@ -83,19 +82,10 @@ class ReplayRunner:
         # tail — fine for small tails and tests, O(stream · epochs) at
         # scale: stage big tails once with stage_debezium() and replay
         # the parquet.
-        if events_format not in ("parquet", "debezium", "iceberg"):
-            raise ValueError(
-                "events_format must be parquet/debezium/iceberg, "
-                f"got {events_format!r}"
-            )
-        if events_format == "debezium" and payload_schema is None:
-            raise ValueError("events_format='debezium' requires payload_schema")
+        check_source(events_format, payload_schema, ("parquet", "debezium", "iceberg"))
         self.events_format = events_format
         self.payload_schema = payload_schema
         self.batch_size = batch_size
-        self.strategy = strategy
-        self.salt_buckets = salt_buckets
-        self.fingerprint = fingerprint
         self.metrics_path = metrics_path
         # "auto" commits small epochs as merge-on-read deltas and big ones
         # as copy-on-write rewrites (see LakeTable.merge)
@@ -108,38 +98,14 @@ class ReplayRunner:
         if lineage not in ("global", "bucket"):
             raise ValueError(f"lineage must be 'global' or 'bucket', got {lineage!r}")
         self.lineage = lineage
-        # Malformed events (op outside valid_ops, or a row op with a NULL
-        # key or seq) match what the reference replay REJECTS — they must
-        # not silently become upserts:
-        #   "error"      (default) fail the epoch BEFORE anything commits —
-        #                a codegen raise_error projection, zero extra jobs;
-        #                exactly-once means the crashed epoch is retryable
-        #                after the stream is fixed.
-        #   "quarantine" divert bad rows to quarantine_path (parquet,
-        #                appended per epoch) and apply the rest; count in
-        #                metrics as events_quarantined.
-        #   "ignore"     drop silently (counted in metrics only).
-        if on_bad not in ("error", "quarantine", "ignore"):
-            raise ValueError(f"on_bad must be error/quarantine/ignore, got {on_bad!r}")
-        if on_bad == "quarantine" and not quarantine_path:
-            raise ValueError("on_bad='quarantine' requires quarantine_path")
-        self.on_bad = on_bad
-        self.quarantine_path = quarantine_path
-        self.valid_ops = tuple(valid_ops)
-        # At-least-once redelivery collapse (see apply.collapse_redelivered):
-        # "auto" = on for debezium tails (the connector's delivery contract
-        # is at-least-once — a restart re-emits events verbatim) AND for
-        # iceberg landing zones (a producer that crashes between a
-        # successful write_iceberg commit and its own upstream checkpoint
-        # re-lands the SAME batch as a new snapshot — duplicate seqs in one
-        # epoch window, which the thin strategy's join-back would keep
-        # verbatim and the lake MERGE would double-apply); off for the
-        # native staged-parquet format (seq unique by construction).
-        # Costs one thin column-pruned aggregate per epoch when on; the
-        # fat rows are untouched unless duplicates actually exist.
-        if redelivery_dedup == "auto":
-            redelivery_dedup = events_format in ("debezium", "iceberg")
-        self.redelivery_dedup = bool(redelivery_dedup)
+        self.kernel = EpochKernel(
+            strategy=strategy,
+            salt_buckets=salt_buckets,
+            fingerprint=fingerprint,
+            on_bad=on_bad,
+            quarantine_path=quarantine_path,
+            ddl_approved=events_format == "debezium",
+        )
         # Transaction-boundary atomicity (debezium only): a tail of the
         # connector's transaction METADATA topic. When set, run() caps the
         # replay window at tx_safe_horizon() — events of transactions with
@@ -152,66 +118,23 @@ class ReplayRunner:
         self.tx_metadata_path = tx_metadata_path
         self.metrics: list[dict] = []
 
-    def _bad_event_cond(self):
-        """Codegen predicate: event is malformed."""
-        bad_op = ~F.col("op").isin(*self.valid_ops)
-        null_key = F.lit(False)
-        for k in [*self.keys, self.seq_col]:
-            null_key = null_key | F.col(k).isNull()
-        return bad_op | ((F.col("op") != "schema-change") & null_key)
+    @cached_property
+    def seq_col(self) -> str:
+        """The stream's seq column: the table's (one manifest read)."""
+        return self.table.snapshot().seq_col
+
+    def _cursor(self):
+        return self.table.snapshot()
 
     # ------------------------------------------------------------------
 
-    def _paths(self) -> list[str]:
-        """events_path normalized to a list — it may be a LIST of
-        directories (a sharded tail, e.g. one dir per Debezium topic
-        partition)."""
-        return (
-            list(self.events_path)
-            if isinstance(self.events_path, (list, tuple))
-            else [self.events_path]
-        )
-
     def _events(self, min_seq: int | None = None,
                 max_seq: int | None = None) -> DataFrame:
-        # Epochs window on the GLOBAL seq, so per-shard ordering needs no
-        # alignment here: LWW resolves by seq wherever the event landed,
-        # and each shard's parquet still prunes row groups by the epoch's
-        # seq band.
-        paths = self._paths()
-        if self.events_format == "debezium":
-            from arc_spark.cdc.debezium import parse_debezium
-
-            raw = self.spark.read.text(paths)
-            return parse_debezium(raw, self.payload_schema).drop("_ts_ms")
-        if self.events_format == "iceberg":
-            # the events source is an Iceberg table (the Kafka->Iceberg
-            # landing-zone shape): read the current snapshot with the
-            # engine's spec reader — no runtime jar. Resume stays the
-            # normal seq cursor (epochs window on seq), and for the
-            # append-only event tables this shape implies, the per-epoch
-            # seq filter pushes straight into the parquet scan (no delete
-            # joins in the plan). ``min_seq`` additionally prunes whole
-            # FILES from the scan via the landing manifest's seq bounds —
-            # a resuming/caught-up tail over a 10^10-event landing zone
-            # schedules only the files past its cursor instead of
-            # re-listing the entire table every epoch
-            from arc_spark.lake.iceberg_read import read_iceberg
-
-            df = None
-            for p in paths:
-                d = read_iceberg(
-                    self.spark, p, min_seq=min_seq, max_seq=max_seq,
-                    seq_field=self.seq_col,
-                )
-                df = d if df is None else df.unionByName(
-                    d, allowMissingColumns=True
-                )
-            return df
-        # mergeSchema: a binlog's later files may carry columns earlier
-        # files lack (the schema-evolution case); without it Spark infers
-        # the schema from ONE footer and can silently drop the new column
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        return read_events(
+            self.spark, self.events_path, self.events_format,
+            self.payload_schema, seq_col=self.seq_col,
+            min_seq=min_seq, max_seq=max_seq,
+        )
 
     def max_seq(self) -> int:
         cursor = None
@@ -231,7 +154,7 @@ class ReplayRunner:
             from arc_spark.lake.iceberg_read import max_seq_bound
 
             best, all_exact, all_bounded = None, True, True
-            for p in self._paths():
+            for p in as_paths(self.events_path):
                 v, exact = max_seq_bound(
                     p, seq_field=self.seq_col, spark=self.spark
                 )
@@ -244,11 +167,8 @@ class ReplayRunner:
                 all_exact = all_exact and exact
             if all_exact:
                 return -1 if best is None else int(best)
-            try:
-                cursor = self.table.snapshot().end_seq
-            except FileNotFoundError:
-                cursor = None
-            if cursor is not None and cursor < 0:
+            cursor = self.table.snapshot().end_seq
+            if cursor < 0:
                 cursor = None
             if (
                 all_bounded
@@ -263,67 +183,43 @@ class ReplayRunner:
         row = self._events(min_seq=cursor).agg(F.max(self.seq_col)).first()
         return -1 if row[0] is None else int(row[0])
 
-    def run(
-        self,
-        *,
-        max_epochs: int | None = None,
-        end_seq: int | None = None,
-        failure_injector: Callable[[int, str], None] | None = None,
-    ) -> list[dict]:
-        """Replay until the stream is exhausted (or max_epochs).
+    def _stream_end(self, end_seq: int | None) -> int:
+        stream_end = super()._stream_end(end_seq)
+        if not self.tx_metadata_path:
+            return stream_end
+        from arc_spark.cdc.debezium import (
+            parse_debezium,
+            parse_tx_metadata,
+            tx_safe_horizon,
+        )
 
-        ``failure_injector(epoch, phase)`` may raise InjectedFailure at
-        phase in {"before_merge", "after_merge"} to simulate crashes.
-        """
-        stream_end = self.max_seq() if end_seq is None else end_seq
-        if self.tx_metadata_path:
-            from arc_spark.cdc.debezium import (
-                parse_debezium,
-                parse_tx_metadata,
-                tx_safe_horizon,
-            )
-
-            ev_tx = parse_debezium(
-                self.spark.read.text(self._paths()), self.payload_schema,
-                with_tx=True,
-            ).select("_tx_id", "seq")
-            meta = parse_tx_metadata(self.spark.read.text(self.tx_metadata_path))
-            horizon = tx_safe_horizon(ev_tx, meta)
-            if horizon is not None and horizon < stream_end:
-                log.info(
-                    json.dumps(
-                        {
-                            "event": "tx_gate.hold",
-                            "stream_end": stream_end,
-                            "tx_safe_horizon": horizon,
-                        }
-                    )
+        ev_tx = parse_debezium(
+            self.spark.read.text(as_paths(self.events_path)),
+            self.payload_schema,
+            with_tx=True,
+        ).select("_tx_id", "seq")
+        meta = parse_tx_metadata(self.spark.read.text(self.tx_metadata_path))
+        horizon = tx_safe_horizon(ev_tx, meta)
+        if horizon is not None and horizon < stream_end:
+            log.info(
+                json.dumps(
+                    {
+                        "event": "tx_gate.hold",
+                        "stream_end": stream_end,
+                        "tx_safe_horizon": horizon,
+                    }
                 )
-                stream_end = horizon
-        epochs_done = 0
-        while True:
-            snap = self.table.snapshot()
-            next_seq = snap.end_seq + 1
-            if next_seq > stream_end:
-                break
-            if max_epochs is not None and epochs_done >= max_epochs:
-                break
-            epoch = snap.epoch + 1
-            batch_end = min(next_seq + self.batch_size - 1, stream_end)
-            self.run_epoch(epoch, next_seq, batch_end, failure_injector)
-            epochs_done += 1
-        if self.metrics_path:
-            # through arc_spark.fs: metrics land next to the table on any
-            # scheme (file/memory/hdfs/s3a/...), not just the local disk
-            from arc_spark.fs import get_fs
-
-            get_fs(self.metrics_path, self.spark).write_bytes(
-                self.metrics_path,
-                "".join(json.dumps(m) + "\n" for m in self.metrics).encode(),
             )
-        return self.metrics
+            return horizon
+        return stream_end
 
     # ------------------------------------------------------------------
+
+    def _window(self, start_seq: int, end_seq: int) -> DataFrame:
+        seq = F.col(self.seq_col)
+        return self._events(min_seq=start_seq - 1, max_seq=end_seq).filter(
+            (seq >= start_seq) & (seq <= end_seq)
+        )
 
     def run_epoch(
         self,
@@ -332,122 +228,42 @@ class ReplayRunner:
         end_seq: int,
         failure_injector: Callable[[int, str], None] | None = None,
     ) -> dict:
+        """Apply events ``start_seq..end_seq`` as ``epoch``: phase
+        ``before_merge``/``after_merge`` go to ``failure_injector``."""
         t0 = time.time()
+        snap = self.table.snapshot()
         obs_read = Observation(f"read-{epoch}")
         obs_applied = Observation(f"applied-{epoch}")
-
-        bad = self._bad_event_cond()
-        batch = (
-            self._events(min_seq=start_seq - 1, max_seq=end_seq)
-            .filter((F.col(self.seq_col) >= start_seq) & (F.col(self.seq_col) <= end_seq))
-            .observe(
-                obs_read,
-                F.count(F.lit(1)).alias("events_read"),
-                F.count_if(F.col("op") == "schema-change").alias("schema_changes"),
-                F.count_if(bad).alias("events_bad"),
-            )
+        bad = bad_event(snap.key_cols, snap.seq_col)
+        batch = self.kernel.guard(
+            self._window(start_seq, end_seq).observe(obs_read, *read_counters(bad)),
+            bad,
+            snap.seq_col,
         )
-        if self.on_bad == "error":
-            # zero-extra-job guard: a malformed row raises inside the same
-            # pass that would apply it, failing the epoch BEFORE commit
-            # (exactly-once → fix the stream, rerun, nothing duplicated)
-            batch = batch.withColumn(
-                "op",
-                F.when(
-                    bad,
-                    F.raise_error(
-                        F.concat(
-                            F.lit("malformed change event at seq="),
-                            F.coalesce(F.col(self.seq_col).cast("string"), F.lit("NULL")),
-                            F.lit(", op="),
-                            F.coalesce(F.col("op"), F.lit("NULL")),
-                        )
-                    ).cast("string"),
-                ).otherwise(F.col("op")),
-            )
-        else:
-            if self.on_bad == "quarantine":
-                # idempotent per-epoch quarantine dir (overwrite on retry)
-                batch.filter(bad).write.mode("overwrite").parquet(
-                    f"{self.quarantine_path}/epoch={epoch}"
-                )
-            batch = batch.filter(~bad)
-        # Schema evolution is DDL-gated: columns in the stream that the
-        # table doesn't know about are dropped UNLESS this batch contains a
-        # schema-change event, in which case merge() widens the table
-        # schema additively (Iceberg ALTER TABLE ADD COLUMN semantics).
-        row_ops = batch.filter(F.col("op") != "schema-change")
-
-        snap_cols = {f.name for f in self.table.snapshot().schema.fields}
-        extra_cols = [c for c in row_ops.columns if c not in snap_cols and c != "op"]
-        if extra_cols and self.events_format == "debezium":
-            # Debezium row streams never carry a schema-change op — DDL
-            # travels on the connector's separate schema-change topic.
-            # The caller widening payload_schema IS the DDL declaration
-            # (that's how registry-aware consumers learn new columns), so
-            # extra columns are DDL-approved; merge() widens additively.
-            extra_cols = []
-        if extra_cols:
-            has_ddl = (
-                self._events(min_seq=start_seq - 1, max_seq=end_seq)
-                .filter((F.col(self.seq_col) >= start_seq) & (F.col(self.seq_col) <= end_seq))
-                .filter(F.col("op") == "schema-change")
-                .limit(1)
-                .count()
-                > 0
-            )
-            if not has_ddl:
-                row_ops = row_ops.drop(*extra_cols)
-
-        events_redelivered = 0
-        if (
-            self.redelivery_dedup
-            and self.strategy == "thin"
-            and not self.salt_buckets
-        ):
-            # fused detect+LWW: one thin scan answers both the verbatim
-            # re-delivery check and the winner set (apply.py
-            # lww_thin_collapse_redelivered) — the split form paid a
-            # second full thin aggregate per epoch on clean batches
-            from arc_spark.cdc.apply import lww_thin_collapse_redelivered
-
-            deduped, events_redelivered = lww_thin_collapse_redelivered(
-                row_ops, self.keys, self.seq_col
-            )
-        else:
-            if self.redelivery_dedup:
-                row_ops, events_redelivered = collapse_redelivered(
-                    row_ops, self.keys, self.seq_col
-                )
-            deduped = last_writer_wins(
-                row_ops,
-                self.keys,
-                self.seq_col,
-                strategy=self.strategy,
-                salt_buckets=self.salt_buckets,
-            )
-        # Fingerprint AFTER dedup: the Arrow UDF then touches only winning
-        # rows, and runs post-shuffle where partitioning is uniform.
-        if self.fingerprint:
-            # True → "arrow" (mapInArrow kernel, the north_rule primitive);
-            # "pandas" → fused pandas UDF; "jvm" → codegen regexp+sha2 twin
-            impl = self.fingerprint if isinstance(self.fingerprint, str) else "arrow"
-            deduped = normalize_and_fingerprint(deduped, impl=impl)
-        deduped = deduped.observe(
-            obs_applied,
-            F.count(F.lit(1)).alias("keys_applied"),
-            F.count_if(F.col("op") == "delete").alias("deletes"),
+        batch = self.kernel.divert(batch, bad, f"epoch={epoch}")
+        deduped, events_redelivered = self.kernel.winners(
+            batch,
+            snap,
+            # a separate read: an action over the observed batch would
+            # fill obs_read with a partial count
+            has_ddl=lambda: self._window(start_seq, end_seq)
+            .filter(F.col("op") == "schema-change")
+            .limit(1)
+            .count()
+            > 0,
         )
+        deduped = deduped.observe(obs_applied, *applied_counters())
 
         read_per_bucket: dict[str, int] | None = None
         if self.lineage == "bucket":
             # events read per bucket: thin aggregate over the epoch's key
             # projection (parquet reads only the key columns, seq filter
             # pushed down) — O(epoch), not O(stream)
-            bexpr = self.table.bucket_expr(self.table.snapshot())
+            bexpr = self.table.bucket_expr(snap)
             read_per_bucket = {
                 str(r["_b"]): r["_n"]
-                for r in row_ops.select(bexpr.alias("_b"))
+                for r in batch.filter(F.col("op") != "schema-change")
+                .select(bexpr.alias("_b"))
                 .groupBy("_b")
                 .agg(F.count(F.lit(1)).alias("_n"))
                 .collect()
@@ -469,37 +285,11 @@ class ReplayRunner:
         if failure_injector:
             failure_injector(epoch, "after_merge")
 
-        wall = time.time() - t0
-        metric = {
-            "event": "epoch.complete",
-            "epoch": epoch,
-            "start_seq": start_seq,
-            "end_seq": end_seq,
-            "duration_sec": round(wall, 3),
-            "status": result.get("status"),
-            "mode": result.get("mode", "cow"),
-            **(obs_read.get if result.get("status") == "committed" else {}),
-            **(obs_applied.get if result.get("status") == "committed" else {}),
-            "rows_written": result.get("rows_written"),
-            "buckets_rewritten": result.get("buckets_rewritten"),
-            "materialize_sec": result.get("materialize_sec"),
-            "write_sec": result.get("write_sec"),
-            "finalize_sec": result.get("finalize_sec"),
-        }
-        if self.redelivery_dedup:
-            # verbatim at-least-once re-deliveries dropped pre-LWW; these
-            # rows are also inside events_deduped (read but not applied)
-            metric["events_redelivered"] = events_redelivered
-        if metric.get("events_read") is not None and metric.get("keys_applied") is not None:
-            metric["events_deduped"] = (
-                metric["events_read"]
-                - metric["schema_changes"]
-                - metric["keys_applied"]
-                - metric.get("events_bad", 0)
-            )
-        if read_per_bucket is not None and result.get("status") == "committed":
+        committed = result.get("status") == "committed"
+        extras = {}
+        if read_per_bucket is not None and committed:
             applied = result.get("bucket_lineage") or {}
-            metric["bucket_lineage"] = {
+            extras["bucket_lineage"] = {
                 b: {
                     "events_read": read_per_bucket.get(b, 0),
                     "keys_applied": applied.get(b, {}).get("keys_applied", 0),
@@ -511,6 +301,11 @@ class ReplayRunner:
                     set(read_per_bucket) | set(applied), key=lambda x: int(x)
                 )
             }
+        metric = epoch_record(
+            epoch, start_seq, end_seq, t0, result,
+            {**obs_read.get, **obs_applied.get,
+             "events_redelivered": events_redelivered} if committed else None,
+            **extras,
+        )
         self.metrics.append(metric)
-        log.info(json.dumps(metric))
         return metric

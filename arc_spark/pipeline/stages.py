@@ -1803,12 +1803,12 @@ class CDCReplayExecute(PipelineStage):
                 "numBuckets", "maxEpochs", "outputView", "commitLockURI",
                 "commitLockLeaseSeconds", "lineage", "onBad",
                 "quarantineURI", "metricsURI", "eventsFormat",
-                "payloadSchema", "stageURI", "redeliveryDedup",
+                "payloadSchema", "stageURI",
                 "txMetadataURI", "snapshotURI", "snapshotSeq",
                 "icebergMirror")
 
     def execute(self, ctx: PipelineContext) -> DataFrame | None:
-        from arc_spark.cdc.bootstrap import create_table_for_stream
+        from arc_spark.cdc.bootstrap import DEFAULT_KEYS
         from arc_spark.cdc.runner import ReplayRunner
         from arc_spark.lake.table import LakeTable
 
@@ -1823,41 +1823,23 @@ class CDCReplayExecute(PipelineStage):
             # epoch — fine for small tails.
             from arc_spark.cdc.debezium import stage_debezium
 
-            from arc_spark.cdc.runner import KEYS as _CDC_KEYS
-
+            existing = LakeTable(self.params["tableURI"])
             stage_debezium(
                 ctx.spark, events_uri, self.params["stageURI"], payload_schema,
-                # collapse at-least-once re-deliveries once, at staging —
-                # every downstream epoch then replays unique (keys, seq)
-                # parquet with redelivery_dedup off
+                # collapse at-least-once re-deliveries once, at staging,
+                # over the keys the table has (or is about to be created
+                # with)
                 dedup_keys=(
-                    list(_CDC_KEYS)
-                    if self.params.get("redeliveryDedup", "auto") in ("auto", True)
-                    else None
+                    existing.snapshot().key_cols
+                    if existing.exists()
+                    else list(DEFAULT_KEYS)
                 ),
                 tx_metadata_path=self.params.get("txMetadataURI"),
             )
             events_uri = self.params["stageURI"]
             events_format = "parquet"
 
-        # multi-writer safety on object stores: route the manifest CAS
-        # through a ConditionalPutLocker rooted at a store whose
-        # create-if-absent IS atomic (memory:// in tests, a consistent
-        # side-store in production — see arc_spark.fs.CommitLocker);
-        # commitLockLeaseSeconds adds crash recovery (lease caveats on
-        # ConditionalPutLocker)
-        locker = _locker_from_params(self.params, ctx.spark)
-        table = LakeTable(self.params["tableURI"], locker=locker)
-        if not table.exists():
-            table, _ = create_table_for_stream(
-                ctx.spark,
-                events_uri,
-                self.params["tableURI"],
-                num_buckets=int(self.params.get("numBuckets", 32)),
-                events_format=events_format,
-                payload_schema=payload_schema,
-            )
-            table.locker = locker  # bootstrap constructs its own LakeTable
+        table = _replay_table(self, ctx, events_uri, events_format, payload_schema)
         if self.params.get("snapshotURI"):
             # initial-load handoff (Debezium snapshot.mode=initial): commit
             # the source snapshot as the fenced first epoch at snapshotSeq;
@@ -1894,7 +1876,6 @@ class CDCReplayExecute(PipelineStage):
             on_bad=self.params.get("onBad", "error"),
             quarantine_path=self.params.get("quarantineURI"),
             metrics_path=self.params.get("metricsURI"),
-            redelivery_dedup=self.params.get("redeliveryDedup", "auto"),
             # inline-tail tx gate; the stageURI branch gates at staging
             # instead (events_format is 'parquet' by then)
             tx_metadata_path=(
@@ -1905,26 +1886,7 @@ class CDCReplayExecute(PipelineStage):
         )
         max_epochs = self.params.get("maxEpochs")
         metrics = runner.run(max_epochs=int(max_epochs) if max_epochs else None)
-        for m in metrics:
-            ctx.events.append({"stage": self.name, **m})
-        if self.params.get("icebergMirror"):
-            # continuous Iceberg publication: append a new Iceberg
-            # snapshot after the replay so downstream Iceberg readers
-            # track the lake. MOR debt exports zero-copy too (delta
-            # levels become sequence-numbered data + equality-delete
-            # files), so the mirror works at every compaction state
-            from arc_spark.lake.iceberg_export import export_iceberg
-
-            res = export_iceberg(ctx.spark, table)
-            mirror_event = {
-                "stage": self.name, "event": "iceberg.mirror", **res
-            }
-            ctx.events.append(mirror_event)
-            logger.info(json.dumps(mirror_event))
-        out = self.params.get("outputView")
-        if out:
-            return self.register_output(ctx, table.read(ctx.spark), out)
-        return None
+        return _publish_replay(self, ctx, metrics, table)
 
 
 @register_stage
@@ -1946,12 +1908,10 @@ class CDCStreamExecute(PipelineStage):
                 "maxFilesPerTrigger",
                 "outputView", "commitLockURI", "commitLockLeaseSeconds",
                 "onBad", "quarantineURI", "metricsURI", "eventsFormat",
-                "payloadSchema", "redeliveryDedup", "kafkaOptions",
+                "payloadSchema", "kafkaOptions",
                 "icebergMirror")
 
     def execute(self, ctx: PipelineContext) -> DataFrame | None:
-        from arc_spark.cdc.bootstrap import create_table_for_stream
-        from arc_spark.lake.table import LakeTable
         from arc_spark.streaming.replay import StreamingReplay
 
         events_format = self.params.get("eventsFormat", "parquet")
@@ -1966,18 +1926,9 @@ class CDCStreamExecute(PipelineStage):
                 )
         elif "eventsURI" not in self.params:
             raise ValueError(f"{self.name}: eventsURI is required")
-        locker = _locker_from_params(self.params, ctx.spark)
-        table = LakeTable(self.params["tableURI"], locker=locker)
-        if not table.exists():
-            table, _ = create_table_for_stream(
-                ctx.spark,
-                self.params.get("eventsURI"),
-                self.params["tableURI"],
-                num_buckets=int(self.params.get("numBuckets", 32)),
-                events_format=events_format,
-                payload_schema=payload_schema,
-            )
-            table.locker = locker  # bootstrap constructs its own LakeTable
+        table = _replay_table(
+            self, ctx, self.params.get("eventsURI"), events_format, payload_schema
+        )
         mft = self.params.get("maxFilesPerTrigger")
         replay = StreamingReplay(
             ctx.spark,
@@ -1993,26 +1944,50 @@ class CDCStreamExecute(PipelineStage):
             on_bad=self.params.get("onBad", "error"),
             quarantine_path=self.params.get("quarantineURI"),
             metrics_path=self.params.get("metricsURI"),
-            redelivery_dedup=self.params.get("redeliveryDedup", "auto"),
         )
-        for b in replay.run_available():
-            ctx.events.append({"stage": self.name, **b})
-        if self.params.get("icebergMirror"):
-            # availableNow drained everything present — publish ONE
-            # Iceberg snapshot for the drained state (MOR debt exports
-            # zero-copy as sequence-number levels, same as the batch twin)
-            from arc_spark.lake.iceberg_export import export_iceberg
+        return _publish_replay(self, ctx, replay.run_available(), table)
 
-            res = export_iceberg(ctx.spark, table)
-            mirror_event = {
-                "stage": self.name, "event": "iceberg.mirror", **res
-            }
-            ctx.events.append(mirror_event)
-            logger.info(json.dumps(mirror_event))
-        out = self.params.get("outputView")
-        if out:
-            return self.register_output(ctx, table.read(ctx.spark), out)
-        return None
+
+def _replay_table(stage, ctx: PipelineContext, events_uri, events_format,
+                  payload_schema):
+    """A single-table replay stage's ``tableURI`` table, created with the
+    stream's shape on the first run; its manifest CAS goes through the
+    stage's commit lock (multi-writer safety on object stores, see
+    _locker_from_params)."""
+    from arc_spark.cdc.bootstrap import create_table_for_stream
+    from arc_spark.lake.table import LakeTable
+
+    locker = _locker_from_params(stage.params, ctx.spark)
+    table = LakeTable(stage.params["tableURI"], locker=locker)
+    if not table.exists():
+        table, _ = create_table_for_stream(
+            ctx.spark, events_uri, stage.params["tableURI"],
+            num_buckets=int(stage.params.get("numBuckets", 32)),
+            events_format=events_format, payload_schema=payload_schema,
+        )
+        table.locker = locker  # bootstrap constructs its own LakeTable
+    return table
+
+
+def _publish_replay(stage, ctx: PipelineContext, records: list[dict], table):
+    """The tail of a single-table replay stage: its epoch records become
+    pipeline events; ``icebergMirror`` appends one Iceberg snapshot of
+    the replayed state (MOR debt exports zero-copy as sequence-number
+    levels, so the mirror works at every compaction state); and
+    ``outputView`` registers the table."""
+    for m in records:
+        ctx.events.append({"stage": stage.name, **m})
+    if stage.params.get("icebergMirror"):
+        from arc_spark.lake.iceberg_export import export_iceberg
+
+        res = export_iceberg(ctx.spark, table)
+        mirror_event = {"stage": stage.name, "event": "iceberg.mirror", **res}
+        ctx.events.append(mirror_event)
+        logger.info(json.dumps(mirror_event))
+    out = stage.params.get("outputView")
+    if out:
+        return stage.register_output(ctx, table.read(ctx.spark), out)
+    return None
 
 
 @register_stage
@@ -2043,7 +2018,6 @@ class CDCMultiReplayExecute(PipelineStage):
         catalog = LakeCatalog(self.params["catalogURI"], locker=locker)
         if not catalog.exists():
             catalog.create()
-        keys = self.params.get("keys")
         replay = MultiTableReplay(
             ctx.spark,
             self.params["eventsURI"],
@@ -2056,7 +2030,7 @@ class CDCMultiReplayExecute(PipelineStage):
                 if self.params.get("saltBuckets")
                 else None
             ),
-            keys=list(keys) if keys else None,
+            keys=self.params.get("keys"),
             seq_col=self.params.get("seqColumn", "seq"),
             merge_mode=self.params.get("mergeMode", "auto"),
             metrics_path=self.params.get("metricsURI"),

@@ -21,15 +21,21 @@ with the manifest as the second (transactional) layer.
 
 from __future__ import annotations
 
+import time
+
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arc_spark.cdc.apply import (
-    collapse_redelivered,
-    last_writer_wins,
-    normalize_and_fingerprint,
+from arc_spark.cdc.epoch import (
+    EpochKernel,
+    applied_counters,
+    bad_event,
+    check_source,
+    epoch_record,
+    read_counters,
+    read_events,
 )
-from arc_spark.cdc.runner import KEYS
 from arc_spark.lake.table import LakeTable
 
 
@@ -42,17 +48,15 @@ class StreamingReplay:
         *,
         checkpoint_dir: str,
         strategy: str = "thin",
-        fingerprint: bool = True,
+        fingerprint: bool | str = True,
         max_files_per_trigger: int | None = None,
         watermark: tuple[str, str] | None = None,  # (eventTime col, delay)
         merge_mode: str = "auto",
         on_bad: str = "error",
         quarantine_path: str | None = None,
-        valid_ops: tuple[str, ...] = ("insert", "update", "delete", "schema-change"),
         metrics_path: str | None = None,
         events_format: str = "parquet",
         payload_schema=None,
-        redelivery_dedup: bool | str = "auto",
         kafka_options: dict | None = None,
     ):
         self.spark = spark
@@ -70,15 +74,7 @@ class StreamingReplay:
         # the file-format tests certify the kafka parse byte-for-byte;
         # only the source connector differs (requires the
         # spark-sql-kafka runtime jar on the cluster classpath).
-        if events_format not in ("parquet", "debezium", "kafka"):
-            raise ValueError(
-                "events_format must be parquet/debezium/kafka, "
-                f"got {events_format!r}"
-            )
-        if events_format in ("debezium", "kafka") and payload_schema is None:
-            raise ValueError(
-                f"events_format={events_format!r} requires payload_schema"
-            )
+        check_source(events_format, payload_schema, ("parquet", "debezium", "kafka"))
         if events_format == "kafka":
             opts = kafka_options or {}
             if "kafka.bootstrap.servers" not in opts:
@@ -97,39 +93,26 @@ class StreamingReplay:
         self.events_format = events_format
         self.payload_schema = payload_schema
         self.checkpoint_dir = checkpoint_dir
-        self.strategy = strategy
-        self.fingerprint = fingerprint
         self.max_files_per_trigger = max_files_per_trigger
         self.watermark = watermark
         # micro-batches from a file tail are usually small vs the table —
         # exactly the merge-on-read regime (see LakeTable.merge)
         self.merge_mode = merge_mode
-        # same malformed-event policy as ReplayRunner: error fails the
-        # micro-batch before its merge commits; quarantine diverts bad
-        # rows to {quarantine_path}/batch={id} (overwrite — idempotent on
-        # Spark's micro-batch retry, same shape as the batch runner's
-        # per-epoch dirs); ignore drops and counts
-        if on_bad not in ("error", "quarantine", "ignore"):
-            raise ValueError(
-                f"on_bad must be error/quarantine/ignore, got {on_bad!r}"
-            )
-        if on_bad == "quarantine" and not quarantine_path:
-            raise ValueError("on_bad='quarantine' requires quarantine_path")
-        self.on_bad = on_bad
-        self.quarantine_path = quarantine_path
-        self.valid_ops = tuple(valid_ops)
+        # the batch runner's epoch kernel; quarantined rows of a batch go
+        # to {quarantine_path}/batch={id} (overwritten — idempotent on
+        # Spark's micro-batch retry)
+        self.kernel = EpochKernel(
+            strategy=strategy,
+            fingerprint=fingerprint,
+            on_bad=on_bad,
+            quarantine_path=quarantine_path,
+            ddl_approved=events_format in ("debezium", "kafka"),
+        )
         # batch-runner parity (ReplayRunner.metrics_path): persist the
         # per-micro-batch counter records so a long-running stream's
         # metrics survive a driver restart. One JSON line appended per
         # batch (any arc_spark.fs scheme).
         self.metrics_path = metrics_path
-        # At-least-once redelivery collapse (apply.collapse_redelivered):
-        # "auto" = on for debezium/kafka tails (the connector wire is
-        # at-least-once), off for staged parquet (seq unique by
-        # construction there). Batch-runner parity.
-        if redelivery_dedup == "auto":
-            redelivery_dedup = events_format in ("debezium", "kafka")
-        self.redelivery_dedup = bool(redelivery_dedup)
         self.batches: list[dict] = []
 
     def _record(self, rec: dict) -> None:
@@ -178,14 +161,9 @@ class StreamingReplay:
                 )
             df = self._parse_envelopes(reader.text(self.events_path))
         else:
-            # mergeSchema for the same reason as ReplayRunner._events:
-            # later stream files may carry evolved columns earlier files
-            # lack
-            schema = (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(self.events_path)
-                .schema
-            )
+            # the batch reader's merged schema: later stream files may
+            # carry evolved columns earlier files lack
+            schema = read_events(self.spark, self.events_path).schema
             reader = self.spark.readStream.schema(schema)
             if self.max_files_per_trigger:
                 reader = reader.option(
@@ -197,96 +175,57 @@ class StreamingReplay:
         return df
 
     def _apply_batch(self, batch: DataFrame, batch_id: int) -> None:
-        # NO df.observe/Observation in this path. Inside foreachBatch the
-        # micro-batch DataFrame is bound to a CLONED SparkSession; the
-        # merge's write actions execute on the MAIN session (their plans
-        # are rooted at the table's base read), so an Observation
-        # registered via the batch frame waits on a listener bus the
-        # write never posts to and Observation.get blocks FOREVER — it
-        # only ever worked when the merge's bucket-pruning path happened
-        # to run a discovery action directly on the clone-session frame.
-        # Explicit aggregates are deterministic on any session: the read
-        # counters fuse into the bounds job (one action, not two), and
-        # the applied counters run over the persisted winner set, which
-        # the merge then reuses instead of recomputing the dedup.
-        bad = ~F.col("op").isin(*self.valid_ops)
-        for k in [*KEYS, "seq"]:
-            bad = bad | ((F.col("op") != "schema-change") & F.col(k).isNull())
-        good_seq = F.when(~bad, F.col("seq"))
+        # Explicit aggregates, never observe(): the micro-batch frame is
+        # bound to a CLONED session while the merge's writes run on the
+        # main one, so Observation.get would block forever. The read
+        # counters fuse into the bounds job; the applied counters run over
+        # the persisted winner set, which the merge then reuses.
+        t0 = time.time()
+        snap = self.table.snapshot()
+        bad = bad_event(snap.key_cols, snap.seq_col)
+        batch = self.kernel.guard(batch, bad, snap.seq_col)
+        good_seq = F.when(~bad, F.col(snap.seq_col))
         stats = batch.agg(
-            F.count(F.lit(1)).alias("events_read"),
-            F.count_if(F.col("op") == "schema-change").alias("schema_changes"),
-            F.count_if(bad).alias("events_bad"),
+            *read_counters(bad),
             F.min(good_seq).alias("lo"),
             F.max(good_seq).alias("hi"),
-        ).first()
-        if stats["events_bad"] and self.on_bad == "error":
-            raise ValueError(
-                f"batch {batch_id}: {stats['events_bad']} malformed change "
-                f"event(s) (op outside {self.valid_ops} or NULL key/seq on "
-                f"a row op); nothing committed — fix the stream and rerun, "
-                f"or use on_bad='quarantine'/'ignore'"
-            )
-        if self.on_bad == "quarantine" and stats["events_bad"]:
-            batch.filter(bad).write.mode("overwrite").parquet(
-                f"{self.quarantine_path}/batch={batch_id}"
-            )
-        batch = batch.filter(~bad)
-        if stats["lo"] is None:
+        ).first().asDict()
+        lo, hi = stats.pop("lo"), stats.pop("hi")
+        batch = self.kernel.divert(batch, bad, f"batch={batch_id}")
+        if lo is None:
             # nothing mergeable — but the batch may still have READ events
             # (e.g. every row was quarantined/ignored as malformed): emit
             # the counters instead of letting those events vanish
             if stats["events_read"]:
-                self._record(
-                    {"batch_id": batch_id, "status": "no_mergeable_events",
-                     "events_read": stats["events_read"],
-                     "schema_changes": stats["schema_changes"],
-                     "events_bad": stats["events_bad"]}
-                )
+                self._record(epoch_record(
+                    batch_id, None, None, t0,
+                    {"status": "no_mergeable_events"}, stats,
+                    batch_id=batch_id,
+                ))
             return
-        row_ops = batch.filter(F.col("op") != "schema-change")
-        events_redelivered = 0
-        if self.redelivery_dedup:
-            row_ops, events_redelivered = collapse_redelivered(row_ops, KEYS, "seq")
-        deduped = last_writer_wins(row_ops, KEYS, "seq", strategy=self.strategy)
-        if self.fingerprint:
-            deduped = normalize_and_fingerprint(deduped)
-        from pyspark import StorageLevel
-
+        deduped, redelivered = self.kernel.winners(
+            batch, snap, has_ddl=lambda: stats["schema_changes"] > 0
+        )
         deduped = deduped.persist(StorageLevel.MEMORY_AND_DISK_DESER)
         try:
-            applied = deduped.agg(
-                F.count(F.lit(1)).alias("keys_applied"),
-                F.count_if(F.col("op") == "delete").alias("deletes"),
-            ).first()
+            applied = deduped.agg(*applied_counters()).first().asDict()
             result = self.table.merge(
                 self.spark,
                 deduped,
                 epoch=batch_id,
-                start_seq=int(stats["lo"]),
-                end_seq=int(stats["hi"]),
+                start_seq=int(lo),
+                end_seq=int(hi),
                 mode=self.merge_mode,
             )
         finally:
             deduped.unpersist()
-        counters = {}
-        if result.get("status") == "committed":
-            counters = {
-                "events_read": stats["events_read"],
-                "schema_changes": stats["schema_changes"],
-                "events_bad": stats["events_bad"],
-                "keys_applied": applied["keys_applied"],
-                "deletes": applied["deletes"],
-            }
-            counters["events_deduped"] = (
-                counters["events_read"]
-                - counters["schema_changes"]
-                - counters["keys_applied"]
-                - counters["events_bad"]
-            )
-            if self.redelivery_dedup:
-                counters["events_redelivered"] = events_redelivered
-        self._record({"batch_id": batch_id, **counters, **result})
+        committed = result.get("status") == "committed"
+        self._record(epoch_record(
+            batch_id, int(lo), int(hi), t0, result,
+            {**stats, **applied, "events_redelivered": redelivered}
+            if committed else None,
+            batch_id=batch_id,
+        ))
 
     def start(self):
         """Start the streaming query; caller awaits/stops it."""

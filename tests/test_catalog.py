@@ -120,6 +120,38 @@ def test_catalog_read_is_cross_table_consistent_mid_epoch(
         assert want.exceptAll(got).count() == 0
 
 
+def test_malformed_and_redelivered_events_in_a_multi_table_epoch(spark, tmp_path):
+    """The multi-table epoch runs the batch runner's kernel: an
+    op='garbage' event fails the epoch before the catalog moves, and a
+    verbatim redelivered event lands once per key."""
+    schema = "seq long, table string, repo string, path string, op string, content string"
+    clean = [
+        (0, "files", "r", "a", "insert", "a0"),
+        (1, "tags", "r", "x", "insert", "x1"),
+        (2, "files", "r", "c", "update", "c2"),
+        (2, "files", "r", "c", "update", "c2"),  # verbatim redelivery
+    ]
+    garbage = [(3, "files", "r", "g", "garbage", "g3")]
+    bad = _write_stream(
+        spark, spark.createDataFrame(clean + garbage, schema), str(tmp_path / "bad")
+    )
+    catalog = bootstrap_catalog_for_stream(
+        spark, bad, str(tmp_path / "cat"), num_buckets=2
+    )
+    version = catalog.current_version()
+    with pytest.raises(Exception, match="malformed change event"):
+        MultiTableReplay(spark, bad, catalog, num_buckets=2).run()
+    assert catalog.current_version() == version
+
+    good = _write_stream(
+        spark, spark.createDataFrame(clean, schema), str(tmp_path / "good")
+    )
+    (m,) = MultiTableReplay(spark, good, catalog, num_buckets=2).run()
+    assert m["status"] == "committed" and m["events_redelivered"] == 1
+    files = catalog.read(spark, "files").select("repo", "path", "seq").collect()
+    assert sorted(tuple(r) for r in files) == [("r", "a", 0), ("r", "c", 2)]
+
+
 def test_commit_epoch_is_fenced(spark, tmp_path, stream_path):
     catalog = bootstrap_catalog_for_stream(
         spark, stream_path, str(tmp_path / "cat"), num_buckets=4

@@ -412,7 +412,6 @@ def test_runner_debezium_redelivered_tail(spark, tmp_path, dbz_tail):
         spark, dup_js, table, batch_size=400, strategy="thin",
         events_format="debezium", payload_schema=STREAM_PAYLOAD,
     )
-    assert runner.redelivery_dedup  # auto = on for debezium
     metrics = runner.run()
     assert sum(m.get("events_redelivered", 0) for m in metrics) > 0
     assert _same(table.read(spark), ref)
@@ -420,8 +419,7 @@ def test_runner_debezium_redelivered_tail(spark, tmp_path, dbz_tail):
 
 def test_stage_debezium_collapses_redelivered(spark, tmp_path, dbz_tail):
     """Staging with dedup_keys collapses re-deliveries once; the staged
-    parquet then has unique (keys, seq) and replays clean with the
-    parquet-format default (redelivery_dedup off)."""
+    parquet then has unique (keys, seq) and replays clean."""
     from arc_spark.cdc.debezium import stage_debezium
 
     pq, js = dbz_tail
@@ -768,8 +766,6 @@ def test_kafka_parse_path_is_the_file_tail_parse_path(spark, tmp_path, raw):
     got = r._parse_envelopes(raw).orderBy("seq").collect()
     want = parse_debezium(raw, PAYLOAD).drop("_ts_ms").orderBy("seq").collect()
     assert got == want and len(got) == 4
-    # redelivery collapse defaults ON for the at-least-once kafka wire
-    assert r.redelivery_dedup is True
 
 
 def test_kafka_stream_wiring_is_jar_gated(spark, tmp_path):

@@ -813,10 +813,9 @@ def test_iceberg_tail_collapses_redelivered_batch(spark, tmp_path):
     """At-least-once landing: a producer that crashes between a
     successful write_iceberg commit and its own upstream checkpoint
     re-lands the SAME batch as a new snapshot — duplicate (keys, seq)
-    rows inside one replay epoch. events_format='iceberg' defaults
-    redelivery_dedup on (like debezium/kafka), so the tail collapses the
-    verbatim copies and the final lake equals the never-duplicated
-    replay."""
+    rows inside one replay epoch. The replay collapses the verbatim
+    copies (as for every format), so the final lake equals the
+    never-duplicated replay."""
     from arc_spark.lake.iceberg_export import write_iceberg
 
     d = str(tmp_path / "redeliver")
@@ -834,7 +833,6 @@ def test_iceberg_tail_collapses_redelivered_batch(spark, tmp_path):
     )
     runner = ReplayRunner(spark, f"{d}/ice", table, batch_size=500,
                           events_format="iceberg")
-    assert runner.redelivery_dedup is True  # the auto default
     metrics = runner.run()
     assert sum(m.get("events_redelivered", 0) for m in metrics) > 0
 
