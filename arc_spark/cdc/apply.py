@@ -10,41 +10,29 @@ implement three interchangeable strategies and verify they agree:
 ``thin``    (default)   thin (keys, seq) max-aggregate + explicit-broadcast
     null-safe semi join back (late materialization). The winner set is
     computed over ONLY the key/seq columns — Parquet column pruning means
-    the thin pass never reads the multi-KB content from disk — and with
-    ``broadcast_winners="auto"`` the join-back broadcasts the winner set,
-    so the fat rows NEVER cross the wire at all. Measured (2M events, 2
-    epochs, interleaved best-of-2): 179 MB total replay shuffle vs
-    window's 422 MB (2.36x fewer bytes), throughput equal-or-better in
-    every paired sample (155.7k vs 151.6k ev/s at local[8], 144.6k vs
-    141.3k at local[32]). Fewer bus bytes is also the scaling lever on
-    membw-ceilinged hosts (see BASELINE.md's strong-scaling closure).
-    REQUIRES unique (keys, seq) — verbatim duplicate rows both survive
-    the semi join; callers over at-least-once input run
-    :func:`collapse_redelivered` first, or the fused
-    :func:`lww_thin_collapse_redelivered` (every replay driver does,
-    always — see arc_spark.cdc.epoch).
+    the thin pass never reads the multi-KB content from disk — and the
+    join-back broadcasts the winner set whenever it holds at most
+    :data:`DEFAULT_MAX_BROADCAST_WINNERS` rows, so the fat rows NEVER
+    cross the wire at all. Measured (2M events, 2 epochs, interleaved
+    best-of-2): 179 MB total replay shuffle vs window's 422 MB (2.36x
+    fewer bytes), throughput equal-or-better in every paired sample
+    (155.7k vs 151.6k ev/s at local[8], 144.6k vs 141.3k at local[32]).
+    Fewer bus bytes is also the scaling lever on membw-ceilinged hosts
+    (see BASELINE.md's strong-scaling closure). The only strategy that
+    takes ``salt_buckets``. On its own it REQUIRES unique (keys, seq) —
+    verbatim duplicate rows both survive the semi join — so input that
+    may carry re-deliveries goes through :func:`dedup_by_key`, the
+    duplicate-safe entry every replay driver and ``DedupTransform`` use.
 
 ``window``              row_number over (partitionBy keys, orderBy seq desc).
     This IS the north_rule's repartition-by-key + sortWithinPartitions +
     LWW shape, and Spark ≥3.5 executes it with a WindowGroupLimit: each
     map task keeps only its local top-1 row per key BEFORE the shuffle,
-    so like max_by only ~min(E, K·P) rows cross the wire — but every
-    surviving row's full payload still crosses it. Duplicate-safe (ties
-    collapse to one row) — the right choice when (keys, seq) uniqueness
-    cannot be guaranteed and a pre-collapse is unwanted.
+    so only ~min(E, K·P) rows cross the wire — but every surviving row's
+    full payload still crosses it. Duplicate-safe on its own (ties
+    collapse to one row).
 
-``thin_window``         window over (keys, seq) only + null-safe semi join back.
-    Cuts the window exchange to thin rows; superseded by ``thin`` (same
-    late-materialization idea, but the max-aggregate needs no sort).
-    Kept for A/B and low-memory deployments.
-
-``max_by``              groupBy(keys).agg(max_by(struct(*), seq)).
-    Partial aggregation collapses local events per key map-side, but the
-    hash-agg state holds one full multi-KB payload struct per key and
-    spills once keys-per-task × row size exceeds task memory — and more
-    tasks per host = less memory per task, so it anti-scales on fat rows.
-
-``sort_partitions``     repartition(P, keys) → sortWithinPartitions(keys,
+``sort_partitions``     repartition(keys) → sortWithinPartitions(keys,
     seq desc) → stateful mapInPandas keep-first-per-key.
     The north_rule shape: all events for a key land in one partition,
     sorted so the winner is the first row of each key run; an Arrow batch
@@ -52,9 +40,9 @@ implement three interchangeable strategies and verify they agree:
     boundaries (no per-row Python).
 
 All strategies produce identical output when (keys, seq) is unique (the
-native generator's invariant). The replay drivers make it unique in every
-epoch: verbatim re-deliveries collapse first via
-:func:`collapse_redelivered` (fused into the unsalted thin aggregate).
+native generator's invariant); :func:`dedup_by_key` makes it unique first
+by collapsing verbatim re-deliveries (:func:`collapse_redelivered`, fused
+into the unsalted thin aggregate).
 """
 
 from __future__ import annotations
@@ -66,29 +54,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
 # ---------------------------------------------------------------------------
 # Normalization + fingerprint (vectorized; no per-row Python)
 # ---------------------------------------------------------------------------
-
-
-@pandas_udf(StringType())
-def normalize_content(s: pd.Series) -> pd.Series:
-    """Normalize source text: strip trailing whitespace per line, normalize
-    line endings, drop trailing newlines. Vectorized pandas string ops over
-    Arrow batches (north_rule: no per-row Python in the engine hot path).
-
-    Whitespace is the EXPLICIT ASCII class [ \\t\\r\\n\\f\\v] — never ``\\s``,
-    whose meaning differs across Python re (Unicode), Java regex (ASCII)
-    and RE2/DuckDB (ASCII): the explicit class keeps the Arrow kernel, the
-    codegen twin (normalize_and_fingerprint impl="jvm"), the Python
-    reference replay and the DuckDB oracle bit-identical on any input.
-    Unicode spaces (NBSP etc.) are treated as content, not formatting."""
-    out = s.str.replace("\r\n", "\n", regex=False)
-    out = out.str.replace(r"[ \t]+\n", "\n", regex=True)
-    out = out.str.replace(r"[ \t\r\n\f\v]+$", "", regex=True)
-    return out
 
 
 @pandas_udf(StringType())
@@ -98,40 +68,20 @@ def sha256_hex(s: pd.Series) -> pd.Series:
     hashlib releases the GIL for large buffers; per-batch overhead is
     amortized by Arrow transfer. (For the engine hot path prefer
     ``normalize_and_fingerprint`` — its default mapInArrow kernel skips
-    the pandas conversion entirely, and bench.py A/Bs all three impls.)
+    the pandas conversion entirely.)
     """
     return s.map(lambda x: None if x is None else hashlib.sha256(x.encode("utf-8")).hexdigest())
 
 
-from pyspark.sql.types import StructField, StructType
-
-
-@pandas_udf(StructType([
-    StructField("content", StringType(), True),
-    StructField("content_sha256", StringType(), True),
-]))
-def _normalize_sha(s: pd.Series) -> pd.DataFrame:
-    """Fused normalize+sha256 — ONE Arrow round trip instead of two chained
-    UDFs (chaining would ship the multi-KB content column through Python
-    twice)."""
-    out = s.str.replace("\r\n", "\n", regex=False)
-    out = out.str.replace(r"[ \t]+\n", "\n", regex=True)
-    out = out.str.replace(r"[ \t\r\n\f\v]+$", "", regex=True)
-    sha = out.map(
-        lambda x: None if x is None else hashlib.sha256(x.encode("utf-8")).hexdigest()
-    )
-    return pd.DataFrame({"content": out, "content_sha256": sha})
-
-
-def _normalize_sha_record_batches(batches, content_idx: int):
+def _fingerprint_record_batches(batches, content_idx: int):
     """mapInArrow kernel: normalize + sha256 one RecordBatch at a time.
 
     All string work happens in Arrow's C++ kernels (RE2 regex — our
     normalization classes are explicitly ASCII, so RE2/Java/Python regex
-    agree, see normalize_content) and the sha256 loop reads ZERO-COPY
-    memoryview slices of the utf8 data buffer — no pandas object Series,
-    no Python str materialization of multi-KB contents. hashlib releases
-    the GIL on large buffers.
+    agree, see normalize_and_fingerprint) and the sha256 loop reads
+    ZERO-COPY memoryview slices of the utf8 data buffer — no pandas object
+    Series, no Python str materialization of multi-KB contents. hashlib
+    releases the GIL on large buffers.
     """
     import numpy as np
     import pyarrow as pa
@@ -178,52 +128,45 @@ def normalize_and_fingerprint(
 ) -> DataFrame:
     """Add ``content`` (normalized in place) and ``content_sha256``.
 
-    ``impl`` — all three produce byte-identical output (equality pinned in
-    test_cdc_end_to_end; A/B-able per-level in bench.py ab_kernels):
+    Normalization strips trailing whitespace per line, turns CRLF into LF
+    and drops trailing newlines. Whitespace is the EXPLICIT ASCII class
+    [ \\t\\r\\n\\f\\v] — never ``\\s``, whose meaning differs across Python
+    re (Unicode), Java regex (ASCII) and RE2/DuckDB (ASCII): the explicit
+    class keeps both kernels, the Python reference replay and the DuckDB
+    oracle bit-identical on any input. Unicode spaces (NBSP etc.) are
+    treated as content, not formatting.
+
+    ``impl`` — both produce byte-identical output (equality pinned in
+    test_cdc_end_to_end; A/B-able per level in bench.py ab_kernels):
       - ``arrow`` (default): mapInArrow kernel — normalization in Arrow's
         RE2 C++ kernels, sha256 over zero-copy buffer slices. ONE Arrow
         round trip, no pandas conversion; the north_rule's
         vectorized-Arrow-UDF engine primitive at its fastest.
-      - ``pandas``: the fused pandas-UDF kernel (pandas str ops + per-row
-        hashlib). Slower: every content materializes as a Python str.
       - ``jvm``: a ``regexp_replace`` chain + ``F.sha2(_, 256)`` — stays
         entirely inside whole-stage codegen, no Python transfer at all.
     """
     if impl == "arrow":
         if "content_sha256" in df.columns:
             df = df.drop("content_sha256")
-        cols = df.columns
-        idx = cols.index(content_col)
-        from pyspark.sql.types import StringType as _St
-        from pyspark.sql.types import StructField as _Sf
-        from pyspark.sql.types import StructType as _Stt
-
-        out_schema = _Stt(
-            list(df.schema.fields) + [_Sf("content_sha256", _St(), True)]
+        idx = df.columns.index(content_col)
+        out_schema = StructType(
+            list(df.schema.fields) + [StructField("content_sha256", StringType(), True)]
         )
         return df.mapInArrow(
-            lambda it: _normalize_sha_record_batches(it, idx), schema=out_schema
+            lambda it: _fingerprint_record_batches(it, idx), schema=out_schema
         )
-    if impl == "jvm":
-        norm = F.regexp_replace(F.col(content_col), r"\r\n", "\n")
-        norm = F.regexp_replace(norm, r"[ \t]+\n", "\n")
-        norm = F.regexp_replace(norm, r"[ \t\r\n\f\x0B]+$", "")
-        other = [c for c in df.columns if c != content_col]
-        return df.withColumn("_nc", norm).select(
-            *other,
-            F.col("_nc").alias(content_col),
-            F.when(
-                F.col("_nc").isNotNull(), F.sha2(F.col("_nc"), 256)
-            ).alias("content_sha256"),
-        )
-    if impl != "pandas":
-        raise ValueError(f"impl must be 'arrow', 'pandas' or 'jvm', got {impl!r}")
-    packed = F.when(F.col(content_col).isNotNull(), _normalize_sha(F.col(content_col)))
+    if impl != "jvm":
+        raise ValueError(f"impl must be 'arrow' or 'jvm', got {impl!r}")
+    norm = F.regexp_replace(F.col(content_col), r"\r\n", "\n")
+    norm = F.regexp_replace(norm, r"[ \t]+\n", "\n")
+    norm = F.regexp_replace(norm, r"[ \t\r\n\f\x0B]+$", "")
     other = [c for c in df.columns if c != content_col]
-    return df.withColumn("_ns", packed).select(
+    return df.withColumn("_nc", norm).select(
         *other,
-        F.col(f"_ns.{content_col}").alias(content_col),
-        F.col("_ns.content_sha256").alias("content_sha256"),
+        F.col("_nc").alias(content_col),
+        F.when(
+            F.col("_nc").isNotNull(), F.sha2(F.col("_nc"), 256)
+        ).alias("content_sha256"),
     )
 
 
@@ -232,11 +175,27 @@ def normalize_and_fingerprint(
 # ---------------------------------------------------------------------------
 
 
-# Winner sets up to this many rows broadcast in the thin strategies'
-# join-back ("auto" mode). ~1M (key, seq) rows ≈ 100-200 MB of hash
-# relation per executor — inside a normal 4-8 GB executor budget; above
-# it the join falls back to AQE's shuffle/broadcast decision.
+# Winner sets up to this many rows broadcast in the thin strategy's
+# join-back. ~1M (key, seq) rows ≈ 100-200 MB of hash relation per
+# executor — inside a normal 4-8 GB executor budget; above it the join
+# falls back to AQE's shuffle/broadcast decision.
 DEFAULT_MAX_BROADCAST_WINNERS = 1_000_000
+
+LWW_STRATEGIES = ("thin", "window", "sort_partitions")
+
+
+def check_lww(strategy: str, salt_buckets: int | None = None) -> None:
+    """Reject an unknown strategy, and a salt the strategy would ignore:
+    only ``thin`` aggregates in two salted phases."""
+    if strategy not in LWW_STRATEGIES:
+        raise ValueError(
+            f"unknown LWW strategy: {strategy!r} (expected one of {LWW_STRATEGIES})"
+        )
+    if salt_buckets and strategy != "thin":
+        raise ValueError(
+            f"salt_buckets={salt_buckets!r} is only supported by strategy "
+            f"'thin'; strategy {strategy!r} would ignore it"
+        )
 
 
 def last_writer_wins(
@@ -245,86 +204,53 @@ def last_writer_wins(
     seq_col: str = "seq",
     *,
     strategy: str = "thin",
-    num_partitions: int | None = None,
     salt_buckets: int | None = None,
-    broadcast_winners: bool | str = "auto",
-    max_broadcast_winners: int = DEFAULT_MAX_BROADCAST_WINNERS,
 ) -> DataFrame:
     """Collapse ``df`` to one row per ``keys`` — the row with max ``seq_col``.
+    Assumes unique (keys, seq); :func:`dedup_by_key` does not.
 
-    ``salt_buckets`` (max_by/thin): explicit two-phase aggregation for hot
+    ``salt_buckets`` (thin only): explicit two-phase aggregation for hot
     keys — phase 1 groups by (keys, pmod(xxhash64(seq), S)) so a hot key's
     events split across S reducers, phase 2 merges the S finalists.
     The ``window`` strategy needs no salt: its partial WindowGroupLimit
     already collapses every key to ≤1 row per MAP task, so a hot key
     reaches the reducer with at most P rows (P = upstream partitions) —
     the pathological single-key-dominates-a-reducer case cannot occur.
-
-    ``broadcast_winners`` (thin / thin_window only) controls the
-    join-back build side: ``True`` = always ``F.broadcast(winners)``,
-    ``False`` = leave it to AQE, ``"auto"`` (default) = count the winner
-    set (one thin, column-pruned job) and broadcast iff ≤
-    ``max_broadcast_winners``. Measured (2M events, 2 epochs): relying
-    on AQE the semi join ran as SMJ and the replay shuffled 656 MB;
-    explicit broadcast cut it to 156 MB vs window's 438 MB — the fat
-    rows never cross the wire at all.
     """
-    if strategy == "max_by":
-        return _lww_max_by(df, keys, seq_col, salt_buckets)
+    check_lww(strategy, salt_buckets)
     if strategy == "thin":
-        return _lww_thin(
-            df, keys, seq_col, salt_buckets,
-            broadcast=broadcast_winners, max_broadcast=max_broadcast_winners,
-        )
+        return _lww_thin(df, keys, seq_col, salt_buckets)
     if strategy == "window":
         return _lww_window(df, keys, seq_col)
-    if strategy == "thin_window":
-        return _lww_thin_window(
-            df, keys, seq_col,
-            broadcast=broadcast_winners, max_broadcast=max_broadcast_winners,
-        )
-    if strategy == "sort_partitions":
-        return _lww_sort_partitions(df, keys, seq_col, num_partitions)
-    raise ValueError(f"unknown LWW strategy: {strategy!r}")
+    return _lww_sort_partitions(df, keys, seq_col)
 
 
-def _lww_semi_join_back(
+def dedup_by_key(
     df: DataFrame,
-    winners: DataFrame,
     keys: list[str],
-    seq_col: str,
-    broadcast: bool | str = False,
-    max_broadcast: int = DEFAULT_MAX_BROADCAST_WINNERS,
-) -> DataFrame:
-    """Null-safe LEFT SEMI join of the full rows onto the winning
-    (keys, seq) set. A null-unsafe join would silently drop NULL-keyed
-    rows, while max_by/window keep them as a group — every strategy must
-    produce identical output.
+    seq_col: str = "seq",
+    *,
+    strategy: str = "thin",
+    salt_buckets: int | None = None,
+) -> tuple[DataFrame, int]:
+    """Duplicate-safe last-writer-wins: verbatim re-deliveries of a
+    (keys, seq) row collapse first, so every strategy returns one row per
+    key on at-least-once input. Unsalted ``thin`` takes the fused
+    :func:`lww_thin_collapse_redelivered`; anything else runs
+    :func:`collapse_redelivered` and then :func:`last_writer_wins`.
 
-    ``broadcast="auto"`` counts the winner set first: the count job reads
-    only the thin (keys, seq) projection (Parquet column pruning), and a
-    winner set under ``max_broadcast`` rows is broadcast explicitly —
-    AQE alone was measured leaving this join as SMJ (the pre-shuffle
-    size estimate of an aggregate output is not trusted for the
-    conversion), which re-shuffles every fat row and erases the whole
-    point of late materialization.
-
-    The winner set is ``localCheckpoint(eager=True)``-materialized before
-    the count: previously the thin aggregation ran TWICE per epoch (once
-    for the count job, once again when the broadcast relation was built),
-    i.e. two full column-pruned scans of the batch. The checkpoint runs
-    it once; the count and the broadcast build both read the cached thin
-    rows, and the RDD cache is ContextCleaner-managed (freed when the
-    epoch's plan is garbage-collected), so nothing leaks across epochs.
-    Availability trade-off: checkpoint blocks are unreplicated, so losing
-    an executor between the checkpoint and its last read fails the epoch
-    job instead of recomputing — the epoch is exactly-once-fenced, so a
-    rerun resumes cleanly, and the exposure window is the seconds between
-    the winner materialization and the merge commit."""
-    if broadcast == "auto":
-        winners = winners.localCheckpoint(eager=True)
-        broadcast = winners.count() <= max_broadcast
-    return _key_seq_join(df, winners, keys, seq_col, "left_semi", broadcast)
+    Returns ``(winners, events_redelivered)``.
+    """
+    check_lww(strategy, salt_buckets)
+    if strategy == "thin" and not salt_buckets:
+        return lww_thin_collapse_redelivered(df, keys, seq_col)
+    collapsed, redelivered = collapse_redelivered(df, keys, seq_col)
+    return (
+        last_writer_wins(
+            collapsed, keys, seq_col, strategy=strategy, salt_buckets=salt_buckets
+        ),
+        redelivered,
+    )
 
 
 def _key_seq_join(
@@ -335,7 +261,10 @@ def _key_seq_join(
     how: str,
     broadcast: bool,
 ) -> DataFrame:
-    """Null-safe semi/anti join of full rows onto a thin (keys, seq) set."""
+    """Null-safe semi/anti join of full rows onto a thin (keys, seq) set.
+    A null-unsafe join would silently drop NULL-keyed rows, while window
+    keeps them as a group — every strategy must produce identical
+    output."""
     if broadcast:
         other = F.broadcast(other)
     d, w = df.alias("_d"), other.alias("_w")
@@ -451,26 +380,35 @@ def lww_thin_collapse_redelivered(
 
 
 def _lww_thin(
-    df: DataFrame,
-    keys: list[str],
-    seq_col: str,
-    salt_buckets: int | None,
-    broadcast: bool | str = "auto",
-    max_broadcast: int = DEFAULT_MAX_BROADCAST_WINNERS,
+    df: DataFrame, keys: list[str], seq_col: str, salt_buckets: int | None
 ) -> DataFrame:
     """Late-materialization LWW — the scale default.
 
-    ``max_by(struct(*))`` drags the full payload (content ~KBs/row) through
-    the aggregation: partial-agg hash state holds one fat struct per key,
-    which spills once keys-per-partition × row-size exceeds task memory —
-    and MORE tasks per host = LESS memory per task, so it anti-scales.
+    Aggregating the full payload (``max_by(struct(*), seq)``)
+    drags content ~KBs/row through the partial-agg hash state, which
+    spills once keys-per-partition × row-size exceeds task memory — and
+    MORE tasks per host = LESS memory per task, so it anti-scales.
 
     Instead: (1) aggregate max(seq) over ONLY (keys, seq) — Parquet column
     pruning means the thin pass doesn't even read the payload columns from
-    disk; per-key state is a single long. (2) semi-join the winning
-    (keys, seq) set back onto the full rows — AQE turns this into a
-    broadcast semi join whenever the winner set is small, making the fat
-    side shuffle-free.
+    disk; per-key state is a single long. (2) null-safe semi-join the
+    winning (keys, seq) set back onto the full rows, broadcast explicitly
+    when it holds at most :data:`DEFAULT_MAX_BROADCAST_WINNERS` rows. AQE
+    alone was measured leaving this join as SMJ (the pre-shuffle size
+    estimate of an aggregate output is not trusted for the conversion),
+    which re-shuffles every fat row: 656 MB replay shuffle vs 156 MB with
+    the explicit broadcast (2M events, 2 epochs).
+
+    The winner set is ``localCheckpoint(eager=True)``-materialized before
+    it is counted, so the thin aggregation runs once per epoch: the count
+    and the broadcast build both read the cached thin rows, and the RDD
+    cache is ContextCleaner-managed (freed when the epoch's plan is
+    garbage-collected), so nothing leaks across epochs. Availability
+    trade-off: checkpoint blocks are unreplicated, so losing an executor
+    between the checkpoint and its last read fails the epoch job instead
+    of recomputing — the epoch is exactly-once-fenced, so a rerun resumes
+    cleanly, and the exposure window is the seconds between the winner
+    materialization and the merge commit.
     """
     thin = df.select(*keys, F.col(seq_col))
     if salt_buckets and salt_buckets > 1:
@@ -483,22 +421,9 @@ def _lww_thin(
         )
     else:
         winners = thin.groupBy(*keys).agg(F.max(seq_col).alias(seq_col))
-    return _lww_semi_join_back(df, winners, keys, seq_col, broadcast, max_broadcast)
-
-
-def _lww_max_by(df: DataFrame, keys: list[str], seq_col: str, salt_buckets: int | None) -> DataFrame:
-    payload = [c for c in df.columns if c not in keys]
-    packed = F.struct(*[F.col(c) for c in payload]).alias("_w")
-    if salt_buckets and salt_buckets > 1:
-        salt = F.pmod(F.xxhash64(F.col(seq_col)), F.lit(salt_buckets)).alias("_salt")
-        phase1 = df.groupBy(*keys, salt).agg(F.max_by(packed, F.col(seq_col)).alias("_w"))
-        phase2 = phase1.groupBy(*keys).agg(
-            F.max_by(F.col("_w"), F.col(f"_w.{seq_col}")).alias("_w")
-        )
-        out = phase2
-    else:
-        out = df.groupBy(*keys).agg(F.max_by(packed, F.col(seq_col)).alias("_w"))
-    return out.select(*keys, *[F.col(f"_w.{c}").alias(c) for c in payload])
+    winners = winners.localCheckpoint(eager=True)
+    broadcast = winners.count() <= DEFAULT_MAX_BROADCAST_WINNERS
+    return _key_seq_join(df, winners, keys, seq_col, "left_semi", broadcast)
 
 
 def _lww_window(df: DataFrame, keys: list[str], seq_col: str) -> DataFrame:
@@ -512,36 +437,7 @@ def _lww_window(df: DataFrame, keys: list[str], seq_col: str) -> DataFrame:
     )
 
 
-def _lww_thin_window(
-    df: DataFrame,
-    keys: list[str],
-    seq_col: str,
-    broadcast: bool | str = "auto",
-    max_broadcast: int = DEFAULT_MAX_BROADCAST_WINNERS,
-) -> DataFrame:
-    """Window LWW over ONLY (keys, seq), then null-safe semi join back.
-
-    ``window`` shuffles the surviving FULL rows (≤1 per key per map task,
-    but each multi-KB); here the window's exchange carries thin
-    (keys, seq) rows — a fraction of the bytes — and the fat rows never
-    shuffle at all (AQE broadcast semi join). The tradeoff is a second
-    pass over the source batch for the join-back; callers that persist
-    the batch (ReplayRunner does) pay ~nothing for it."""
-    from pyspark.sql.window import Window
-
-    thin = df.select(*keys, seq_col)
-    w = Window.partitionBy(*keys).orderBy(F.col(seq_col).desc())
-    winners = (
-        thin.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    return _lww_semi_join_back(df, winners, keys, seq_col, broadcast, max_broadcast)
-
-
-def _lww_sort_partitions(
-    df: DataFrame, keys: list[str], seq_col: str, num_partitions: int | None
-) -> DataFrame:
+def _lww_sort_partitions(df: DataFrame, keys: list[str], seq_col: str) -> DataFrame:
     cols = df.columns
     key_idx = [cols.index(k) for k in keys]
 
@@ -559,8 +455,8 @@ def _lww_sort_partitions(
                 continue
             keymat = pdf.iloc[:, key_idx]
             # boundary mask: row differs from the previous row's key.
-            # NULL keys group like every other strategy's (window/max_by
-            # treat nulls as one group): a bare `!=` calls NaN != NaN True
+            # NULL keys group like every other strategy's (window treats
+            # nulls as one group): a bare `!=` calls NaN != NaN True
             # — Arrow hands nullable ints to pandas as float NaN — and a
             # null-keyed run would then never collapse, so mask out the
             # both-null case explicitly.
@@ -574,8 +470,7 @@ def _lww_sort_partitions(
             if not out.empty:
                 yield out
 
-    part = df.repartition(num_partitions, *keys) if num_partitions else df.repartition(*keys)
-    ordered = part.sortWithinPartitions(*keys, F.col(seq_col).desc())
+    ordered = df.repartition(*keys).sortWithinPartitions(*keys, F.col(seq_col).desc())
     return ordered.mapInPandas(drop_dupes, schema=df.schema)
 
 

@@ -18,13 +18,13 @@ events into MERGE input through the same phases, in this order:
    events_deduped + events_bad`` (``events_redelivered`` is counted
    inside ``events_deduped``).
 
-The redelivery collapse is always on: the thin LWW strategies keep every
-verbatim copy of a duplicated ``(keys, seq)`` row and the MERGE would
-write each, and any source can deliver such copies (a Debezium restart,
-a producer re-landing an Iceberg batch). Keys and seq come from the
-target table's snapshot, so LWW resolves over the keys the MERGE
-matches on. The batch drivers also share :func:`read_events` and the
-epoch loop of :class:`EpochDriver`.
+The redelivery collapse is always on (``apply.dedup_by_key``): the thin
+LWW strategy keeps every verbatim copy of a duplicated ``(keys, seq)``
+row and the MERGE would write each, and any source can deliver such
+copies (a Debezium restart, a producer re-landing an Iceberg batch).
+Keys and seq come from the target table's snapshot, so LWW resolves over
+the keys the MERGE matches on. The batch drivers also share
+:func:`read_events` and the epoch loop of :class:`EpochDriver`.
 """
 
 from __future__ import annotations
@@ -38,12 +38,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from arc_spark.cdc.apply import (
-    collapse_redelivered,
-    last_writer_wins,
-    lww_thin_collapse_redelivered,
-    normalize_and_fingerprint,
-)
+from arc_spark.cdc.apply import check_lww, dedup_by_key, normalize_and_fingerprint
 
 log = logging.getLogger("arc_spark.cdc")
 
@@ -156,6 +151,10 @@ def applied_counters() -> list[Column]:
 class EpochKernel:
     """A driver's epoch policy.
 
+    ``strategy``/``salt_buckets``: the LWW strategy, checked at
+    construction (``apply.check_lww``), so a bad pair fails before any
+    epoch commits.
+
     ``on_bad``: a malformed event fails the epoch before commit
     (``"error"``), or is set aside and counted as ``events_bad``
     (``"quarantine"`` into a per-epoch directory under
@@ -177,6 +176,7 @@ class EpochKernel:
     ddl_approved: bool = False
 
     def __post_init__(self):
+        check_lww(self.strategy, self.salt_buckets)
         if self.on_bad not in ("error", "quarantine", "ignore"):
             raise ValueError(
                 f"on_bad must be error/quarantine/ignore, got {self.on_bad!r}"
@@ -229,17 +229,10 @@ class EpochKernel:
         if extra and not self.ddl_approved and not has_ddl():
             row_ops = row_ops.drop(*extra)
 
-        keys, seq_col = list(snap.key_cols), snap.seq_col
-        if self.strategy == "thin" and not self.salt_buckets:
-            deduped, redelivered = lww_thin_collapse_redelivered(
-                row_ops, keys, seq_col
-            )
-        else:
-            collapsed, redelivered = collapse_redelivered(row_ops, keys, seq_col)
-            deduped = last_writer_wins(
-                collapsed, keys, seq_col,
-                strategy=self.strategy, salt_buckets=self.salt_buckets,
-            )
+        deduped, redelivered = dedup_by_key(
+            row_ops, list(snap.key_cols), snap.seq_col,
+            strategy=self.strategy, salt_buckets=self.salt_buckets,
+        )
         # fingerprint AFTER dedup: the kernel touches only winning rows,
         # post-shuffle where partitioning is uniform. True → "arrow"
         if self.fingerprint:

@@ -17,7 +17,8 @@ import hashlib
 
 
 def _normalize(content: str) -> str:
-    """Must match arc_spark.cdc.apply.normalize_content exactly."""
+    """Must match both kernels of
+    arc_spark.cdc.apply.normalize_and_fingerprint exactly."""
     import re
 
     out = content.replace("\r\n", "\n")

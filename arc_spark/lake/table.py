@@ -1188,8 +1188,18 @@ class LakeTable:
         attempt_id = f"epoch={epoch}-{uuid.uuid4().hex[:8]}"
         out_dir = fs_join(self.root, DATA_DIR, attempt_id)
         t0 = time.time()
+        # one file per touched bucket: hash-partitioning on _bucket puts a
+        # bucket's rows in one task. Tasks are capped at the session's
+        # shuffle parallelism — a small epoch touching hundreds of
+        # buckets otherwise ran one near-empty task per bucket (measured:
+        # 600 touched of 1024 buckets, 16 s of write on 4 cores).
+        n_tasks = min(
+            len(touched_set),
+            snap.num_buckets,
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+        )
         (
-            merged.repartition(max(1, min(len(touched_set), snap.num_buckets)), "_bucket")
+            merged.repartition(max(1, n_tasks), "_bucket")
             .write.partitionBy("_bucket")
             .mode("overwrite")
             .parquet(out_dir)

@@ -300,6 +300,56 @@ def lsh_bucket_expr(vec: Column, planes: list[list[float]], band: int, rows_per_
     return key
 
 
+def _topk_pairs(
+    idx: DataFrame,
+    probes: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    *,
+    broadcast_probes: bool = False,
+) -> DataFrame:
+    """Per-query exact top-``k`` over the (band, _bucket) join of index
+    rows and probe rows → (query_id, rank, id, cosine_sim), ties broken
+    by id.
+
+    Each side's vector norm is computed once per side row, before the
+    join, so a candidate pair evaluates only the dot product — the same
+    expressions as :func:`cosine` in the same order, so scores are
+    bit-identical to it (the brute-force paths compare equal).
+
+    A (query, id) pair hit in several bands arrives once per band, and
+    every copy carries the same two vectors, hence the same score. So the
+    copies tie exactly under ``dense_rank`` over (score desc, id), and the
+    window ranks them WITHOUT a prior dedup: its WindowGroupLimit keeps
+    only the top-k ranks per query map-side, and the copies collapse in a
+    ``dropDuplicates`` over that k-per-query remainder. Deduplicating the
+    full candidate set first (the earlier plan) sorted or hashed every
+    candidate row a second time — at 10^5 queries, tens of millions of
+    rows for nothing."""
+    from pyspark.sql.window import Window
+
+    vec = F.col(vec_col).cast("array<double>")
+    probes = probes.withColumn("_qn", _norm(F.col("_qvec")))
+    cand = idx.withColumn("_vn", _norm(vec)).join(
+        F.broadcast(probes) if broadcast_probes else probes, ["band", "_bucket"]
+    )
+    scored = cand.select(
+        "query_id",
+        F.col(id_col),
+        (_dot(vec, F.col("_qvec")) / (F.col("_vn") * F.col("_qn"))).alias(
+            "cosine_sim"
+        ),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine_sim").desc(), F.col(id_col))
+    return (
+        scored.withColumn("rank", F.dense_rank().over(w))
+        .filter(F.col("rank") <= k)
+        .dropDuplicates(["query_id", id_col])
+        .select("query_id", "rank", id_col, "cosine_sim")
+    )
+
+
 def _band_keys_kernel(planes: list[list[float]], bands: int, rpb: int):
     """Arrow kernel computing ALL band keys per row in one numpy matmul
     (n×dim @ dim×planes) — shared by index build, incremental append and
@@ -606,8 +656,8 @@ class LshIndex:
     def topk(
         self, spark, query_vec: list[float], k: int = 10, *, probe_bits: int = 0
     ) -> DataFrame:
-        """Union of the query's bucket in every band (each a pruned scan
-        of one partition directory) → dedup ids → exact cosine top-k.
+        """The query's bucket in every band (one index scan pruned to
+        those partition directories) → dedup ids → exact cosine top-k.
 
         ``probe_bits``: multi-probe — also read buckets whose key differs
         from the query's in ≤ this many hyperplane signs (the planes the
@@ -617,21 +667,24 @@ class LshIndex:
         rebuild and keeps the scan partition-pruned."""
         from functools import reduce
 
-        from arc_spark.fs import join as fs_join
-
         m = self.meta
         planes = _hyperplanes(m["dim"], m["num_planes"], m["seed"])
         rpb = m["num_planes"] // m["bands"]
         q_keys = _query_band_keys(query_vec, planes, m["bands"], rpb)
 
-        parts = [
-            spark.read.parquet(fs_join(self.path, f"band={b}")).filter(
-                F.col("_bucket").isin(self._probe_keys(q_keys[b], probe_bits, rpb))
-            )
-            for b in range(m["bands"])
-        ]
+        # ONE index scan with a partition-column-only predicate (the
+        # topk_batch shape): one listing and one schema pass per query
+        # instead of one per band
+        pred = reduce(
+            lambda a, b: a | b,
+            [
+                (F.col("band") == b)
+                & F.col("_bucket").isin(self._probe_keys(q_keys[b], probe_bits, rpb))
+                for b in range(m["bands"])
+            ],
+        )
         cand = self._live(
-            spark, reduce(lambda a, b: a.unionByName(b), parts)
+            spark, spark.read.parquet(self.path).filter(pred)
         ).dropDuplicates([m["id_col"]])
         q = F.array(*[F.lit(float(x)) for x in query_vec])
         return (
@@ -724,26 +777,8 @@ class LshIndex:
         idx = self._live(spark, spark.read.parquet(self.path).filter(pred)).select(
             m["id_col"], m["vec_col"], "band", "_bucket"
         )
-        cand = (
-            idx.join(F.broadcast(probes_df), ["band", "_bucket"])
-            .dropDuplicates(["query_id", m["id_col"]])
-        )
-        from pyspark.sql.window import Window
-
-        scored = cand.select(
-            "query_id",
-            F.col(m["id_col"]),
-            cosine(
-                F.col(m["vec_col"]).cast("array<double>"), F.col("_qvec")
-            ).alias("cosine_sim"),
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine_sim").desc(), F.col(m["id_col"])
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", m["id_col"], "cosine_sim")
+        return _topk_pairs(
+            idx, probes_df, m["id_col"], m["vec_col"], k, broadcast_probes=True
         )
 
     @staticmethod
@@ -794,12 +829,10 @@ class LshIndex:
            driver stays O(1) in the query count.
         3. Probe rows join the pruned index on the two partition columns
            (AQE picks broadcast vs shuffle vs skew-split by actual probe
-           size), (query_id, id) dedups multi-band hits, and the exact
-           cosine re-rank runs JVM-side under a per-query window top-k
-           (WindowGroupLimit keeps hot queries partial-aggregated
-           map-side)."""
-        from pyspark.sql.window import Window
-
+           size), and the exact cosine re-rank runs JVM-side under a
+           per-query window top-k (WindowGroupLimit keeps hot queries
+           partial-aggregated map-side); multi-band hits of one (query,
+           id) pair collapse after the top-k (``_topk_pairs``)."""
         m = self.meta
         planes = _hyperplanes(m["dim"], m["num_planes"], m["seed"])
         bands, rpb = m["bands"], m["num_planes"] // m["bands"]
@@ -850,24 +883,7 @@ class LshIndex:
         idx = self._live(spark, scan).select(
             m["id_col"], m["vec_col"], "band", "_bucket"
         )
-        cand = idx.join(probes, ["band", "_bucket"]).dropDuplicates(
-            ["query_id", m["id_col"]]
-        )
-        scored = cand.select(
-            "query_id",
-            F.col(m["id_col"]),
-            cosine(
-                F.col(m["vec_col"]).cast("array<double>"), F.col("_qvec")
-            ).alias("cosine_sim"),
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine_sim").desc(), F.col(m["id_col"])
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", m["id_col"], "cosine_sim")
-        )
+        return _topk_pairs(idx, probes, m["id_col"], m["vec_col"], k)
 
 
 def _lloyd_kmeans(X, k: int, seed: int, max_iter: int = 25):

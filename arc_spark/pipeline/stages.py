@@ -869,24 +869,31 @@ class SimilarityJoinTransform(PipelineStage):
         return self.register_output(ctx, df, self.params["outputView"])
 
 
+def _salt_buckets(params: dict) -> int | None:
+    """A stage's ``saltBuckets`` as the drivers take it."""
+    return int(params["saltBuckets"]) if params.get("saltBuckets") else None
+
+
 @register_stage
 class DedupTransform(PipelineStage):
     """Engine-specific: last-writer-wins dedup per key (the CDC apply
-    kernel as a standalone pipeline stage; SURVEY.md §2.5 dedup-by-key)."""
+    kernel as a standalone pipeline stage; SURVEY.md §2.5 dedup-by-key).
+    Duplicate-safe like the replay drivers: verbatim repeats of a
+    (keys, seq) row collapse to one (apply.dedup_by_key)."""
 
     stage_type = "DedupTransform"
     REQUIRED = ("inputView", "outputView", "keys")
     OPTIONAL = ("seqColumn", "strategy", "saltBuckets")
 
     def execute(self, ctx: PipelineContext) -> DataFrame:
-        from arc_spark.cdc.apply import last_writer_wins
+        from arc_spark.cdc.apply import dedup_by_key
 
-        df = last_writer_wins(
+        df, _ = dedup_by_key(
             ctx.spark.table(self.params["inputView"]),
             list(self.params["keys"]),
             self.params.get("seqColumn", "seq"),
             strategy=self.params.get("strategy", "thin"),
-            salt_buckets=self.params.get("saltBuckets"),
+            salt_buckets=_salt_buckets(self.params),
         )
         return self.register_output(ctx, df, self.params["outputView"])
 
@@ -1840,10 +1847,34 @@ class CDCReplayExecute(PipelineStage):
             events_format = "parquet"
 
         table = _replay_table(self, ctx, events_uri, events_format, payload_schema)
+        # built before the bootstrap: the runner's constructor rejects a
+        # bad strategy/salt pair before any epoch commits
+        runner = ReplayRunner(
+            ctx.spark,
+            events_uri,
+            table,
+            events_format=events_format,
+            payload_schema=payload_schema,
+            batch_size=int(self.params.get("batchSize", 100_000)),
+            strategy=self.params.get("strategy", "thin"),
+            salt_buckets=_salt_buckets(self.params),
+            merge_mode=self.params.get("mergeMode", "auto"),
+            lineage=self.params.get("lineage", "global"),
+            on_bad=self.params.get("onBad", "error"),
+            quarantine_path=self.params.get("quarantineURI"),
+            metrics_path=self.params.get("metricsURI"),
+            # inline-tail tx gate; the stageURI branch gates at staging
+            # instead (events_format is 'parquet' by then)
+            tx_metadata_path=(
+                self.params.get("txMetadataURI")
+                if events_format == "debezium"
+                else None
+            ),
+        )
         if self.params.get("snapshotURI"):
             # initial-load handoff (Debezium snapshot.mode=initial): commit
             # the source snapshot as the fenced first epoch at snapshotSeq;
-            # the runner below then tails from snapshotSeq + 1. Idempotent
+            # the runner then tails from snapshotSeq + 1. Idempotent
             # on retry; rejected over a table that already replayed epochs.
             from arc_spark.cdc.bootstrap import bootstrap_snapshot
 
@@ -1858,32 +1889,6 @@ class CDCReplayExecute(PipelineStage):
             bootstrap_snapshot(
                 ctx.spark, table, snap_df, int(self.params["snapshotSeq"])
             )
-        runner = ReplayRunner(
-            ctx.spark,
-            events_uri,
-            table,
-            events_format=events_format,
-            payload_schema=payload_schema,
-            batch_size=int(self.params.get("batchSize", 100_000)),
-            strategy=self.params.get("strategy", "thin"),
-            salt_buckets=(
-                int(self.params["saltBuckets"])
-                if self.params.get("saltBuckets")
-                else None
-            ),
-            merge_mode=self.params.get("mergeMode", "auto"),
-            lineage=self.params.get("lineage", "global"),
-            on_bad=self.params.get("onBad", "error"),
-            quarantine_path=self.params.get("quarantineURI"),
-            metrics_path=self.params.get("metricsURI"),
-            # inline-tail tx gate; the stageURI branch gates at staging
-            # instead (events_format is 'parquet' by then)
-            tx_metadata_path=(
-                self.params.get("txMetadataURI")
-                if events_format == "debezium"
-                else None
-            ),
-        )
         max_epochs = self.params.get("maxEpochs")
         metrics = runner.run(max_epochs=int(max_epochs) if max_epochs else None)
         return _publish_replay(self, ctx, metrics, table)
@@ -2025,11 +2030,7 @@ class CDCMultiReplayExecute(PipelineStage):
             table_col=self.params.get("tableColumn", "table"),
             batch_size=int(self.params.get("batchSize", 100_000)),
             strategy=self.params.get("strategy", "thin"),
-            salt_buckets=(
-                int(self.params["saltBuckets"])
-                if self.params.get("saltBuckets")
-                else None
-            ),
+            salt_buckets=_salt_buckets(self.params),
             keys=self.params.get("keys"),
             seq_col=self.params.get("seqColumn", "seq"),
             merge_mode=self.params.get("mergeMode", "auto"),

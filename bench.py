@@ -404,21 +404,17 @@ def main() -> None:
                 weak_low.append(
                     _cdc_replay(f"local[{low}]", weak_path, n_events // 4, batches)
                 )
-            # strategy A/B at the high parallelism level vs the window
-            # default measured above: max_by (documented anti-scaler),
-            # thin_window (thin-shuffle window variant), and thin (thin
-            # agg + explicit-broadcast join-back, broadcast_winners=auto —
-            # measured 182 MB shuffled vs window's 438 MB at 2M events;
-            # see cdc/apply._lww_semi_join_back)
+            # strategy A/B at the high parallelism level: window vs the
+            # thin default measured above (thin agg + explicit-broadcast
+            # join-back — measured 182 MB shuffled vs window's 438 MB at
+            # 2M events; see cdc/apply._lww_thin)
             if os.environ.get("ARC_BENCH_SKIP_AB") != "1":
-                for strat in ("max_by", "thin_window", "window"):
-                    tp, m = _cdc_replay(
-                        f"local[{high}]", stream_path, n_events, batches,
-                        strategy=strat, want_metrics=True,
-                    )
-                    ab[strat] = tp
-                    if m:
-                        bytes_by_level[f"{high}_{strat}"] = m
+                ab["window"], m = _cdc_replay(
+                    f"local[{high}]", stream_path, n_events, batches,
+                    strategy="window", want_metrics=True,
+                )
+                if m:
+                    bytes_by_level[f"{high}_window"] = m
                 # kernel A/Bs vs the defaults measured above:
                 # - jvm_fp: codegen regexp+sha2 fingerprint (no Arrow
                 #   transfer of winner content) vs the Arrow kernel
@@ -427,7 +423,6 @@ def main() -> None:
                 # visible, not just peak throughput.
                 for name, kw in (
                     ("jvm_fp", {"fingerprint": "jvm"}),
-                    ("pandas_fp", {"fingerprint": "pandas"}),
                     ("zstd", {"codec": "zstd"}),
                 ):
                     for cpus in (low, high):
@@ -480,12 +475,6 @@ def main() -> None:
             "weak_events_per_sec_low": round(tp_weak, 1),
             "weak_scaling_efficiency": round(tp_high / (4.0 * tp_weak), 3),
             "strategy": "thin",  # the engine default (apply.last_writer_wins)
-            "ab_max_by_events_per_sec_high": (
-                round(ab["max_by"], 1) if "max_by" in ab else None
-            ),
-            "ab_thin_window_events_per_sec_high": (
-                round(ab["thin_window"], 1) if "thin_window" in ab else None
-            ),
             "ab_window_events_per_sec_high": (
                 round(ab["window"], 1) if "window" in ab else None
             ),
@@ -493,7 +482,7 @@ def main() -> None:
             "ab_kernels": {
                 k: round(v, 1)
                 for k, v in ab.items()
-                if k not in ("max_by", "thin_window", "window")
+                if k != "window"
             }
             or None,
             # executor byte totals per level (rep 0) + per A/B strategy:

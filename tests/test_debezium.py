@@ -150,13 +150,14 @@ def test_to_debezium_json_rejects_schema_change(spark):
         to_debezium_json(ddl).collect()
 
 
-@pytest.fixture()
-def dbz_tail(spark, tmp_path):
+@pytest.fixture(scope="module")
+def dbz_tail(spark, tmp_path_factory):
     """A change stream materialized BOTH ways: staged parquet and a raw
-    Debezium JSON tail, row ops only."""
+    Debezium JSON tail, row ops only. Read-only for the tests."""
     src = _row_ops(spark)
-    pq = str(tmp_path / "events_pq")
-    js = str(tmp_path / "events_dbz")
+    root = tmp_path_factory.mktemp("dbz_tail")
+    pq = str(root / "events_pq")
+    js = str(root / "events_dbz")
     src.repartitionByRange(4, "seq").write.parquet(pq)
     to_debezium_json(src).write.text(js)
     return pq, js
@@ -184,9 +185,16 @@ def _replay(spark, events, root, **kw):
     return table.read(spark)
 
 
-def test_runner_debezium_tail_matches_parquet_replay(spark, tmp_path, dbz_tail):
+@pytest.fixture(scope="module")
+def pq_ref(spark, dbz_tail, tmp_path_factory):
+    """The parquet tail replayed with the default runner — the state
+    every Debezium path must reach (built once for the module)."""
+    return _replay(spark, dbz_tail[0], str(tmp_path_factory.mktemp("pq_ref") / "lake"))
+
+
+def test_runner_debezium_tail_matches_parquet_replay(spark, tmp_path, dbz_tail, pq_ref):
     pq, js = dbz_tail
-    ref = _replay(spark, pq, str(tmp_path / "lake_pq"))
+    ref = pq_ref
     got = _replay(
         spark, js, str(tmp_path / "lake_dbz"),
         events_format="debezium", payload_schema=STREAM_PAYLOAD,
@@ -195,7 +203,7 @@ def test_runner_debezium_tail_matches_parquet_replay(spark, tmp_path, dbz_tail):
     assert ref.count() > 0
 
 
-def test_stage_debezium_then_replay(spark, tmp_path, dbz_tail):
+def test_stage_debezium_then_replay(spark, tmp_path, dbz_tail, pq_ref):
     import glob
 
     from arc_spark.cdc.debezium import stage_debezium
@@ -205,17 +213,17 @@ def test_stage_debezium_then_replay(spark, tmp_path, dbz_tail):
     stage_debezium(spark, js, staged, STREAM_PAYLOAD, num_files=4)
     files = glob.glob(f"{staged}/*.parquet")
     assert len(files) == 4  # seq-range-clustered output for pushdown
-    ref = _replay(spark, pq, str(tmp_path / "lake_pq2"))
+    ref = pq_ref
     got = _replay(spark, staged, str(tmp_path / "lake_staged"))
     assert _same(got, ref)
 
 
-def test_streaming_replay_debezium_tail(spark, tmp_path, dbz_tail):
+def test_streaming_replay_debezium_tail(spark, tmp_path, dbz_tail, pq_ref):
     from arc_spark.cdc.bootstrap import create_table_for_stream
     from arc_spark.streaming.replay import StreamingReplay
 
     pq, js = dbz_tail
-    ref = _replay(spark, pq, str(tmp_path / "lake_pq3"))
+    ref = pq_ref
     table, _ = create_table_for_stream(
         spark, js, str(tmp_path / "lake_stream"), num_buckets=8,
         events_format="debezium", payload_schema=STREAM_PAYLOAD,
@@ -271,13 +279,13 @@ def test_debezium_schema_widening_without_ddl_event(spark, tmp_path):
     ).count() == 0
 
 
-def test_cdc_replay_stage_debezium_config(spark, tmp_path, dbz_tail):
+def test_cdc_replay_stage_debezium_config(spark, tmp_path, dbz_tail, pq_ref):
     """Config-driven: CDCReplayExecute over a raw Debezium tail with a
     stageURI (parse once → seq-clustered parquet → pushdown replay)."""
     from arc_spark.pipeline import run_config
 
     pq, js = dbz_tail
-    ref = _replay(spark, pq, str(tmp_path / "lake_pq4"))
+    ref = pq_ref
     cfg = {
         "stages": [
             {
@@ -393,7 +401,7 @@ def _duplicate_tail(spark, js_in, js_out, frac_files=0.5):
         shutil.copy(f, f"{js_out}/redelivered-{i}.txt")
 
 
-def test_runner_debezium_redelivered_tail(spark, tmp_path, dbz_tail):
+def test_runner_debezium_redelivered_tail(spark, tmp_path, dbz_tail, pq_ref):
     """A tail with verbatim re-delivered events replays (strategy=thin)
     to the same final state as the clean tail; the per-epoch metrics
     count the collapsed copies."""
@@ -403,7 +411,7 @@ def test_runner_debezium_redelivered_tail(spark, tmp_path, dbz_tail):
     pq, js = dbz_tail
     dup_js = str(tmp_path / "events_dbz_dup")
     _duplicate_tail(spark, js, dup_js)
-    ref = _replay(spark, pq, str(tmp_path / "lake_pq_rd"))
+    ref = pq_ref
     table, _ = create_table_for_stream(
         spark, dup_js, str(tmp_path / "lake_dup"), num_buckets=8,
         events_format="debezium", payload_schema=STREAM_PAYLOAD,
@@ -417,7 +425,7 @@ def test_runner_debezium_redelivered_tail(spark, tmp_path, dbz_tail):
     assert _same(table.read(spark), ref)
 
 
-def test_stage_debezium_collapses_redelivered(spark, tmp_path, dbz_tail):
+def test_stage_debezium_collapses_redelivered(spark, tmp_path, dbz_tail, pq_ref):
     """Staging with dedup_keys collapses re-deliveries once; the staged
     parquet then has unique (keys, seq) and replays clean."""
     from arc_spark.cdc.debezium import stage_debezium
@@ -434,12 +442,12 @@ def test_stage_debezium_collapses_redelivered(spark, tmp_path, dbz_tail):
     assert (
         st.groupBy("repo", "path", "seq").count().filter("count > 1").count() == 0
     )
-    ref = _replay(spark, pq, str(tmp_path / "lake_pq_st"))
+    ref = pq_ref
     got = _replay(spark, staged, str(tmp_path / "lake_staged_dup"), strategy="thin")
     assert _same(got, ref)
 
 
-def test_streaming_debezium_redelivered_tail(spark, tmp_path, dbz_tail):
+def test_streaming_debezium_redelivered_tail(spark, tmp_path, dbz_tail, pq_ref):
     """Streaming twin: re-delivered envelopes inside micro-batches
     collapse before the merge (per-batch counters record them)."""
     from arc_spark.cdc.bootstrap import create_table_for_stream
@@ -449,7 +457,7 @@ def test_streaming_debezium_redelivered_tail(spark, tmp_path, dbz_tail):
     dup_js = str(tmp_path / "events_dbz_dup3")
     # one big batch so duplicate copies land in the SAME micro-batch
     _duplicate_tail(spark, js, dup_js)
-    ref = _replay(spark, pq, str(tmp_path / "lake_pq_sd"))
+    ref = pq_ref
     table, _ = create_table_for_stream(
         spark, dup_js, str(tmp_path / "lake_stream_dup"), num_buckets=8,
         events_format="debezium", payload_schema=STREAM_PAYLOAD,

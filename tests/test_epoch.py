@@ -6,6 +6,8 @@ redelivery, which must land once whatever the source format."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from arc_spark.cdc.bootstrap import create_table_for_stream
@@ -77,3 +79,60 @@ def test_drivers_share_record_counters_and_state(spark, tmp_path, drive):
     # one row per key: the redelivered update landed once, b was deleted
     got = [tuple(r) for r in state.select("repo", "path", "seq", "content").collect()]
     assert got == [("r", "a", 3, "a3")]
+
+
+def test_dedup_transform_default_collapses_redelivered_rows(spark):
+    """A DedupTransform with default settings gives one row per key when a
+    (keys, seq) row arrives twice — the replay drivers' guarantee, through
+    the same entry (apply.dedup_by_key)."""
+    from arc_spark.pipeline import run_config
+
+    spark.createDataFrame(
+        [("a", 1, "x"), ("a", 2, "y"), ("a", 2, "y"), ("b", 5, "z")],
+        "k string, seq long, payload string",
+    ).createOrReplaceTempView("dedup_dups")
+    cfg = {"stages": [{
+        "type": "DedupTransform", "name": "dedup",
+        "inputView": "dedup_dups", "outputView": "dedup_out", "keys": ["k"],
+    }]}
+    out, _ = run_config(spark, json.dumps(cfg))
+    assert sorted(tuple(r) for r in out.collect()) == [("a", 2, "y"), ("b", 5, "z")]
+
+
+@pytest.mark.parametrize("strategy", ["window", "sort_partitions"])
+def test_salt_rejected_where_it_would_be_ignored(spark, tmp_path, strategy):
+    """Only thin aggregates in salted phases: a salt with any other
+    strategy is an error naming the strategy, from the pipeline stage and
+    from a driver's constructor — before any epoch commits."""
+    from arc_spark.pipeline import run_config
+
+    spark.createDataFrame([("a", 1)], "k string, seq long").createOrReplaceTempView(
+        "salt_in"
+    )
+    cfg = {"stages": [{
+        "type": "DedupTransform", "name": "dedup", "inputView": "salt_in",
+        "outputView": "salt_out", "keys": ["k"], "strategy": strategy,
+        "saltBuckets": 4,
+    }]}
+    with pytest.raises(ValueError, match=strategy):
+        run_config(spark, json.dumps(cfg))
+
+    events = str(tmp_path / "events")
+    spark.createDataFrame(ROWS, SCHEMA).coalesce(1).write.parquet(events)
+    table, _ = create_table_for_stream(spark, events, str(tmp_path / "lake"), num_buckets=2)
+    before = table.snapshot()
+    with pytest.raises(ValueError, match=strategy):
+        ReplayRunner(spark, events, table, strategy=strategy, salt_buckets=4)
+    after = table.snapshot()
+    assert (after.version, after.epoch) == (before.version, before.epoch)
+
+
+def test_retired_strategies_and_kernels_raise(spark):
+    from arc_spark.cdc.apply import last_writer_wins, normalize_and_fingerprint
+
+    df = spark.createDataFrame([("a", 1, "x")], "k string, seq long, content string")
+    for strategy in ("max_by", "thin_window"):
+        with pytest.raises(ValueError, match="unknown LWW strategy"):
+            last_writer_wins(df, ["k"], "seq", strategy=strategy)
+    with pytest.raises(ValueError, match="impl must be"):
+        normalize_and_fingerprint(df, impl="pandas")

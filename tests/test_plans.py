@@ -79,11 +79,10 @@ def test_broadcast_join_for_small_dim(spark):
 
 
 def test_window_lww_plan_has_partial_group_limit(spark):
-    """The default window LWW strategy must plan a PARTIAL WindowGroupLimit
+    """The window LWW strategy must plan a PARTIAL WindowGroupLimit
     (local top-1 per key before the shuffle) — the property that makes it
-    shuffle ~one row per key per task like max_by, without max_by's fat
-    hash-agg state. If a Spark upgrade loses this, the strategy choice
-    needs re-measuring."""
+    shuffle ~one row per key per task without a fat hash-agg state. If a
+    Spark upgrade loses this, the strategy choice needs re-measuring."""
     from arc_spark.cdc.apply import last_writer_wins
     from arc_spark.cdc.generator import change_stream
 

@@ -75,7 +75,7 @@ def test_integer_typing_matches_python_semantics(spark, values):
         min_size=1,
         max_size=60,
     ),
-    strategy=st.sampled_from(["max_by", "thin", "window", "thin_window", "sort_partitions"]),
+    strategy=st.sampled_from(["thin", "window", "sort_partitions"]),
 )
 @settings(**_SETTINGS)
 def test_lww_picks_global_max_seq(spark, events, strategy):

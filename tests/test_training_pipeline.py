@@ -20,7 +20,7 @@ def test_training_data_pipeline_config(spark, tmp_path):
              "inputURI": f"{SF}/documents.parquet", "outputView": "docs"},
             {"type": "DedupTransform", "name": "dedup by text fingerprint",
              "inputView": "docs", "outputView": "docs_unique",
-             "keys": ["text"], "seqColumn": "doc_id", "strategy": "max_by"},
+             "keys": ["text"], "seqColumn": "doc_id"},
             {"type": "SQLTransform", "name": "quality + tokens",
              "outputView": "docs_scored",
              "sql": """
