@@ -24,7 +24,8 @@ own minimal table format with the same semantics the north_rule needs:
   between rewriting gigabytes and rewriting the lake.
 - **Additive schema evolution**: the manifest holds the table schema; a
   merge whose change batch carries new columns widens the schema, old
-  files read back with nulls (mergeSchema read), matching Iceberg
+  files read back with nulls (the manifest schema is handed to the
+  parquet scan, which widens narrower physical types), matching Iceberg
   ``ALTER TABLE ADD COLUMN`` semantics.
 
 Reference parity: the MERGE condition (change wins iff ``seq`` newer)
@@ -732,24 +733,29 @@ class LakeTable:
 
             return empty_df(spark, schema)
         paths = [fs_join(self.root, p) for p in rel_paths]
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
-        # Align to snapshot schema. Old files may lack evolved columns
-        # (NULL), carry narrower types (cast up), or carry a column under
-        # a PRE-RENAME name (coalesce over the name history — each row was
-        # written whole under exactly one naming epoch, so at most one of
-        # the candidate columns is non-NULL per row; a metadata-only
-        # rename therefore needs no data rewrite, Iceberg-style).
-        have = set(df.columns)
+        # The manifest is the schema of record, as the log is in Iceberg
+        # and Delta: the scan is handed the snapshot schema plus every
+        # pre-rename alias, typed as its current column, so Spark reads no
+        # footers to infer a schema and never has to reconcile them (footer
+        # merging rejects INT beside BIGINT, which a widening COW merge of
+        # some buckets leaves behind). Old files may lack evolved columns
+        # (NULL), carry narrower types (the vectorized and the row parquet
+        # readers both widen every _safe_promotion on read), or carry a
+        # column under a PRE-RENAME name (coalesce over the name history —
+        # each row was written whole under exactly one naming epoch, so at
+        # most one of the candidate columns is non-NULL per row; a
+        # metadata-only rename therefore needs no data rewrite). Dropped
+        # columns are simply not in the read schema.
+        aliases = [
+            StructField(a, f_.dataType, True)
+            for f_ in schema.fields
+            for a in snap.column_renames.get(f_.name, ())
+        ]
+        df = spark.read.schema(StructType(list(schema.fields) + aliases)).parquet(*paths)
         cols = []
         for f_ in schema.fields:
-            sources = [
-                n
-                for n in (f_.name, *snap.column_renames.get(f_.name, ()))
-                if n in have
-            ]
-            if not sources:
-                cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
-            elif len(sources) == 1:
+            sources = [f_.name, *snap.column_renames.get(f_.name, ())]
+            if len(sources) == 1:
                 cols.append(F.col(sources[0]).cast(f_.dataType).alias(f_.name))
             else:
                 cols.append(
@@ -943,8 +949,8 @@ class LakeTable:
         # promotion rules: int family upward, float->double, decimal
         # precision growth at fixed scale). Narrowing never happens — a
         # narrower change column is cast UP to the table type. Old data
-        # files keep their narrower physical type; reads reconcile via
-        # mergeSchema + cast to the manifest schema (_read_files).
+        # files keep their narrower physical type; reads hand the manifest
+        # schema to the parquet scan, which widens on read (_read_files).
         src_types = {f_.name: f_.dataType for f_ in changes.schema.fields}
         evolved_fields = []
         for f_ in snap.schema.fields:

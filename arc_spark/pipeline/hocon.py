@@ -247,6 +247,9 @@ class _Subst:
         inner = raw[2:-1]
         self.optional = inner.startswith("?")
         self.path = inner[1:] if self.optional else inner
+        # the value this field held before an optional substitution
+        # overrode it: an undefined ``${?x}`` leaves that value standing
+        self.fallback = None
 
     def __repr__(self) -> str:  # pragma: no cover
         return f"_Subst({self.raw})"
@@ -279,19 +282,24 @@ def _set_path(obj: dict, path: list[str], val: Any) -> None:
             nxt = {}
             cur[p] = nxt
         cur = nxt
-    key = path[-1]
-    if isinstance(val, dict) and isinstance(cur.get(key), dict):
-        _deep_merge(cur[key], val)
-    else:
-        cur[key] = val
+    _assign(cur, path[-1], val)
+
+
+def _assign(obj: dict, key: str, val: Any) -> None:
+    """One HOCON field assignment: objects deep-merge, anything else
+    overrides. An optional substitution keeps what it overrides as its
+    fallback (``a = 1024`` then ``a = ${?UNSET}`` leaves ``a = 1024``)."""
+    if isinstance(val, dict) and isinstance(obj.get(key), dict):
+        _deep_merge(obj[key], val)
+        return
+    if isinstance(val, _Subst) and val.optional:
+        val.fallback = obj.get(key)
+    obj[key] = val
 
 
 def _deep_merge(dst: dict, src: dict) -> None:
     for k, v in src.items():
-        if isinstance(v, dict) and isinstance(dst.get(k), dict):
-            _deep_merge(dst[k], v)
-        else:
-            dst[k] = v
+        _assign(dst, k, v)
 
 
 def _get_path(obj: Any, path: str) -> Any:
@@ -306,12 +314,15 @@ def _get_path(obj: Any, path: str) -> Any:
 def _resolve_substitutions(node: Any, root: dict) -> Any:
     if isinstance(node, _Subst):
         try:
-            return _resolve_substitutions(_get_path(root, node.path), root)
+            target = _get_path(root, node.path)
+            if target is node:  # ``a = ${?a}``: the earlier value of a
+                raise KeyError(node.path)
+            return _resolve_substitutions(target, root)
         except KeyError:
             if node.path in os.environ:
                 return os.environ[node.path]
             if node.optional:
-                return None
+                return _resolve_substitutions(node.fallback, root)
             return node.raw  # leave for the pipeline's ${param} pass
     if isinstance(node, dict):
         return {k: _resolve_substitutions(v, root) for k, v in node.items()}

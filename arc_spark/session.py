@@ -32,6 +32,7 @@ if _PKG_ROOT not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
     )
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+_LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
 
 
 def get_spark(
@@ -88,4 +89,15 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # Lake reads hand Spark the manifest's exact file list. Past 32 root
+    # paths Spark lists them in a distributed job with one task per path
+    # (the parallelism default is 10000), so a 96-file read would run a
+    # 96-task job just to stat its files. One listing task per core keeps
+    # that job to one wave; cluster-scale listings stay distributed. An
+    # explicit setting wins: extra_conf, spark-defaults or spark-submit
+    # --conf. Use --conf on dynamic-allocation clusters, where
+    # defaultParallelism at session start undercounts the executors to come.
+    if spark.conf.get(_LISTING_PARALLELISM, None) is None:
+        spark.conf.set(_LISTING_PARALLELISM, str(spark.sparkContext.defaultParallelism))
+    return spark

@@ -241,3 +241,94 @@ def test_reserved_internal_names_rejected(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="reserved"):
         LakeTable(str(tmp_path / "t2")).create(bad_schema, ["repo"])
+
+
+@pytest.mark.parametrize("vectorized", ["true", "false"])
+def test_manifest_schema_read_over_mixed_file_layouts(spark, tmp_path, vectorized):
+    """Reads hand the manifest schema to the parquet scan instead of
+    inferring it from footers. Over files that mix int/long, float/double
+    and decimal(5,2)/decimal(10,2), a renamed column, a dropped column and
+    a column added later, the clean read, the MOR read, the read after a
+    COW fold and changes_since all return the manifest's rows, with the
+    vectorized and the row-based parquet reader alike."""
+    from decimal import Decimal
+
+    import pyarrow.parquet as pq
+
+    from arc_spark.fs import join as fs_join
+
+    old = "repo string, path string, seq long, n int, x float, d decimal(5,2), content string, gone string, op string"
+    new = "repo string, path string, seq long, n long, x double, d decimal(10,2), body string, lang string, op string"
+    prev = spark.conf.get("spark.sql.parquet.enableVectorizedReader")
+    spark.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
+    try:
+        rows = [
+            ("r", f"p{i}", i + 1, i, i + 0.5, Decimal(f"{i}.25"), f"c{i}", f"g{i}", "update")
+            for i in range(8)
+        ]
+        base = spark.createDataFrame(rows, old)
+        table = LakeTable(str(tmp_path / "t"))
+        table.create(base.drop("op").schema, ["repo", "path"], num_buckets=4)
+        table.merge(spark, base, epoch=0, start_seq=1, end_seq=8, mode="cow")
+        table.alter_schema(rename={"content": "body"}, drop=["gone"])
+        big = Decimal("12345678.90")
+        # wider types and a column added by the merge, rewriting one bucket
+        table.merge(
+            spark,
+            spark.createDataFrame([("r", "p0", 20, 2**40, 1e300, big, "b0", "py", "update")], new),
+            epoch=1, start_seq=20, end_seq=20, mode="cow",
+        )
+        snap = table.snapshot()
+        types = {f.name: f.dataType.simpleString() for f in snap.schema.fields}
+        assert types == {
+            "repo": "string", "path": "string", "seq": "bigint", "n": "bigint",
+            "x": "double", "d": "decimal(10,2)", "body": "string", "lang": "string",
+        }
+        # the live files really mix both layouts
+        layouts = {
+            tuple(pq.read_schema(fs_join(table.root, p)).names)
+            for p in snap.file_list()
+        }
+        assert any("content" in n and "gone" in n for n in layouts)
+        assert any("body" in n and "lang" in n for n in layouts)
+
+        want = {
+            f"p{i}": (i + 1, i, i + 0.5, Decimal(f"{i}.25"), f"c{i}", None) for i in range(8)
+        }
+        want["p0"] = (20, 2**40, 1e300, big, "b0", "py")
+
+        def _rows(df):
+            assert "gone" not in df.columns and "content" not in df.columns
+            return {
+                r["path"]: (r["seq"], r["n"], r["x"], r["d"], r["body"], r["lang"])
+                for r in df.collect()
+            }
+
+        assert _rows(table.read(spark)) == want  # clean read
+
+        # MOR read: a delta over an old-layout bucket
+        table.merge(
+            spark,
+            spark.createDataFrame([("r", "p1", 30, 2**41, 2.0, Decimal("1.5"), "b1", "rs", "update")], new),
+            epoch=2, start_seq=30, end_seq=30, mode="delta",
+        )
+        assert table.snapshot().delta_files
+        want["p1"] = (30, 2**41, 2.0, Decimal("1.50"), "b1", "rs")
+        assert _rows(table.read(spark)) == want
+
+        # changes_since: only keys changed after seq 8, all as upserts
+        got = table.changes_since(spark, 8)
+        assert {r["op"] for r in got.collect()} == {"upsert"}
+        assert _rows(got.drop("op")) == {p: want[p] for p in ("p0", "p1")}
+
+        # COW fold of the delta-bearing bucket, then read again
+        table.merge(
+            spark,
+            spark.createDataFrame([("r", "p1", 40, 7, 3.0, Decimal("2.25"), "b1x", None, "update")], new),
+            epoch=3, start_seq=40, end_seq=40, mode="cow",
+        )
+        assert not any(table.snapshot().delta_files.values())
+        want["p1"] = (40, 7, 3.0, Decimal("2.25"), "b1x", None)
+        assert _rows(table.read(spark)) == want
+    finally:
+        spark.conf.set("spark.sql.parquet.enableVectorizedReader", prev)

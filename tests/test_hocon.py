@@ -48,6 +48,34 @@ def test_parse_hocon_env_and_unresolved(monkeypatch):
     assert doc["y"] == "${NOPE_VAR}/z"  # left for the pipeline ${param} pass
 
 
+def test_optional_substitution_keeps_earlier_value(monkeypatch):
+    monkeypatch.delenv("UNSET", raising=False)
+    # an undefined ${?x} is no assignment at all: the earlier value stands
+    assert parse_hocon("a = 1024\na = ${?UNSET}") == {"a": 1024}
+    assert parse_hocon("b { n = 1, m = 2 }\nb.n = ${?UNSET}") == {"b": {"n": 1, "m": 2}}
+    assert parse_hocon("b { n = 1 }\nb { n = ${?UNSET} }") == {"b": {"n": 1}}
+    assert parse_hocon("a { k = 1 }\na = ${?UNSET}") == {"a": {"k": 1}}
+    # self-reference reads the earlier value
+    assert parse_hocon("a = 5\na = ${?a}") == {"a": 5}
+    # with no earlier value the field stays null
+    assert parse_hocon("a = ${?UNSET}") == {"a": None}
+
+
+def test_optional_substitution_overrides_when_defined(monkeypatch):
+    monkeypatch.setenv("HOCON_BUCKETS", "16")
+    doc = parse_hocon(
+        "x = 7\na = 1\na = ${?x}\nnumBuckets = 1024\nnumBuckets = ${?HOCON_BUCKETS}"
+    )
+    assert doc == {"x": 7, "a": 7, "numBuckets": "16"}
+
+
+def test_optional_substitution_through_include(tmp_path, monkeypatch):
+    monkeypatch.delenv("UNSET", raising=False)
+    (tmp_path / "over.conf").write_text("job { n = ${?UNSET} }")
+    doc = parse_hocon(f'job {{ n = 3 }}\ninclude "{tmp_path}/over.conf"')
+    assert doc == {"job": {"n": 3}}
+
+
 def test_parse_hocon_is_json_superset():
     j = {"stages": [{"type": "X", "name": "n", "params": {"a": [1, 2]}}]}
     assert parse_hocon(json.dumps(j)) == j

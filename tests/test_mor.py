@@ -317,6 +317,48 @@ def test_changes_since_incremental_read(spark, tmp_path, monkeypatch):
     assert t.changes_since(spark, 101).count() == 0
 
 
+def test_mor_read_job_shape_lists_by_core_and_infers_no_footers(spark, tmp_path):
+    """A full read of a table with more than 32 delta files (past Spark's
+    parallel-listing threshold) hands the scan the manifest schema and
+    lists the manifest's files with one task per core. Pinned shape:
+    one listing job per file set (base, delta), each with at most
+    defaultParallelism tasks, and no footer schema-merge job; then the
+    window's map job and the sink. Inferring footers added one
+    schema-merge job per file set and listed with one task per file
+    (6 jobs, two of them 48-task listings, for this table)."""
+    t = LakeTable(str(tmp_path / "shape"))
+    schema = "repo string, path string, seq long, content string, op string"
+    base = spark.createDataFrame(
+        [("r", f"p{i}", i + 1, f"v{i}", "upsert") for i in range(400)], schema
+    )
+    t.create(base.drop("op").schema, ["repo", "path"], num_buckets=48)
+    t.merge(spark, base, epoch=0, start_seq=1, end_seq=400, mode="cow")
+    upd = spark.createDataFrame(
+        [("r", f"p{i}", 1000 + i, f"w{i}", "upsert") for i in range(0, 400, 2)], schema
+    )
+    t.merge(spark, upd, epoch=1, start_seq=1000, end_seq=1399, mode="delta")
+    snap = t.snapshot()
+    assert sum(len(v) for v in snap.delta_files.values()) > 32
+    assert set(snap.delta_files) == set(snap.files)  # every bucket windows
+
+    sc = spark.sparkContext
+    group = "test-mor-read-job-shape"
+    sc.setJobGroup(group, group)
+    try:
+        t.read(spark).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    tasks = []
+    for j in sorted(st.getJobIdsForGroup(group)):
+        stages = [st.getStageInfo(s) for s in st.getJobInfo(j).stageIds]
+        tasks.append(sum(s.numTasks for s in stages if s is not None))
+    assert len(tasks) == 4, tasks
+    # the two planning jobs are the listings of the base and delta sets
+    assert all(n <= sc.defaultParallelism for n in tasks[:2]), tasks
+
+
 def test_compact_sorts_within_buckets(spark, stream, tmp_path):
     """Default compaction clusters each bucket file by (keys, seq) so
     parquet row-group stats give tight key ranges (sort_within=True)."""
