@@ -60,6 +60,20 @@ only metadata, per the public Iceberg table spec
 The Avro manifests are produced by the repo's own from-scratch OCF codec
 (arc_spark/formats/avro.py) with the spec's field-id annotations.
 
+One commit path: the export, the landing-zone writer (``write_iceberg``),
+its compaction (``compact_iceberg``) and both expiries
+(``expire_iceberg_snapshots`` for the lake mirror,
+``expire_iceberg_landing`` for landing zones) differ only in policy —
+what a snapshot contains, which snapshots survive, what gets reaped.
+They share ``_head`` (previous metadata -> next version, sequence number,
+snapshot id, timestamp), ``_entry`` (one manifest-entry builder),
+``_write_manifest`` (manifests + manifest list), ``_snapshot_metadata``
+/ ``_expired`` (the metadata JSON) and ``_commit``: one CAS loop of at
+most four attempts that re-runs only the metadata derivation against a
+winner's chain. Spark work (batch writes, bin-packs, the export's delete
+files) runs once per call, before the loop. Manifests are read back with
+``iceberg_read._walk``, the one manifest walker.
+
 Scale: the export is O(#files) driver-side metadata + one Spark job over
 the resolved tombstoned keys and one tiny job per outstanding delta
 level (key columns of small delta files only). Verification story in
@@ -77,14 +91,25 @@ from __future__ import annotations
 
 import json
 import re
+import struct
 import time
 import uuid
+from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from arc_spark.fs import get_fs, join as fs_join
 from arc_spark.formats.avro import write_ocf_bytes
+from arc_spark.fs import get_fs, join as fs_join
+from arc_spark.lake.iceberg_read import (
+    _current_schema,
+    _load_snapshot_files,
+    _read_data,
+    _walk,
+    resolve_metadata_file,
+)
+from arc_spark.lake.table import TOMBSTONE_COL, _footer_seq_bounds
 
 # ---------------------------------------------------------------------------
 # schema mapping: Spark -> Iceberg JSON types with assigned field ids
@@ -277,105 +302,279 @@ def _manifest_file_schema():
 
 
 # ---------------------------------------------------------------------------
+# the one commit path: head -> derive (entries, manifests, metadata) -> CAS
+# ---------------------------------------------------------------------------
+
+_ATTEMPTS = 4
+_VERSION = re.compile(r"v(\d+)\.metadata\.json$")
+
+
+@dataclass
+class _Head:
+    """The chain head a commit derives from: the previous metadata (None
+    before the first commit) and what the next version takes from it."""
+
+    fs: object
+    root: str
+    prev: dict | None
+    prev_path: str | None
+    out_version: int  # the metadata version this commit publishes
+    seq: int  # the next data sequence number
+    snapshot_id: int  # the next snapshot id
+    now_ms: int
+
+    @property
+    def path(self) -> str:
+        return fs_join(self.root, "metadata", f"v{self.out_version}.metadata.json")
+
+    @cached_property
+    def files(self):
+        """(data_files, deletes) of the current snapshot; empty without one."""
+        if not self.prev or self.prev.get("current-snapshot-id") is None:
+            return [], []
+        return _load_snapshot_files(self.fs, self.prev)
+
+
+def _head(fs, root: str) -> _Head:
+    """Resolve the true head (never a stale hint) and derive the next
+    version, sequence number, snapshot id and a timestamp past the
+    head's."""
+    now_ms = int(time.time() * 1000)
+    try:
+        path = resolve_metadata_file(fs, root, prefer_hint=False)
+    except FileNotFoundError:
+        return _Head(fs, root, None, None, 1, 1, 1, now_ms)
+    prev = json.loads(fs.read_bytes(path))
+    return _Head(
+        fs, root, prev, path,
+        out_version=int(_VERSION.search(path).group(1)) + 1,
+        seq=int(prev.get("last-sequence-number", 0)) + 1,
+        snapshot_id=max(
+            (s["snapshot-id"] for s in prev.get("snapshots", [])), default=0
+        ) + 1,
+        now_ms=max(now_ms, int(prev.get("last-updated-ms", 0)) + 1),
+    )
+
+
+def _commit(fs, root: str, locker, what: str, derive, head: _Head | None = None):
+    """The one CAS loop every Iceberg commit runs.
+
+    ``derive(head)`` returns ``(metadata, result)``: the metadata dict to
+    publish as ``head.path`` (None: nothing to commit) and what the
+    caller gets back. A lost CAS means a concurrent writer published that
+    version first — re-read the head and re-run ``derive`` against the
+    winner's chain (fresh snapshot id, sequence numbers and manifest
+    names), never clobber it. Spark work belongs before the loop: only
+    the metadata derivation repeats. ``head``: an already-resolved head
+    for the first attempt. Raises RuntimeError naming ``what`` after
+    losing ``_ATTEMPTS`` times."""
+    for _ in range(_ATTEMPTS):
+        head = head or _head(fs, root)
+        metadata, result = derive(head)
+        if metadata is None or _cas_metadata(
+            fs, locker, root, head.path,
+            json.dumps(metadata, indent=2).encode(), head.out_version,
+        ):
+            return result
+        head = None
+    raise RuntimeError(
+        f"{what}: lost the metadata CAS at {root} {_ATTEMPTS} times — "
+        "concurrent writers are racing faster than the retry budget"
+    )
+
+
+def _entry(status: int, snapshot_id: int, seq: int, path: str, rows: int,
+           size: int, *, file_seq: int | None = None, content: int = 0,
+           bounds=(None, None), equality_ids=None) -> dict:
+    """One manifest entry (status 0 EXISTING / 1 ADDED) for a parquet data
+    file (content 0) or equality-delete file (content 2)."""
+    return {
+        "status": status,
+        "snapshot_id": snapshot_id,
+        "sequence_number": seq,
+        "file_sequence_number": seq if file_seq is None else file_seq,
+        "data_file": {
+            "content": content,
+            "file_path": path,
+            "file_format": "PARQUET",
+            "partition": {},
+            "record_count": rows,
+            "file_size_in_bytes": size,
+            "lower_bounds": bounds[0],
+            "upper_bounds": bounds[1],
+            "equality_ids": equality_ids,
+        },
+    }
+
+
+def _write_manifest(fs, head: _Head, snapshot_id: int, seq: int,
+                    schema_json: dict, schema_id: int, manifests,
+                    deleted=(0, 0)) -> str:
+    """Write a snapshot's manifests and its manifest list; return the
+    list's path. ``manifests``: [(content, entries, sequence_number,
+    min_sequence_number)], content 0 data / 1 deletes; list-record counts
+    follow the entries' status. ``deleted``: (files, rows) the data
+    manifest's snapshot removed without DELETED entries (a compaction's
+    rewritten inputs). Names carry a per-ATTEMPT uid, never one derived
+    from (root, version): two writers racing from the same head must not
+    share a path, or the winner's snapshot could point at the loser's
+    bytes; a loser's avros are orphans the next expiry reaps."""
+    meta_dir = fs_join(head.root, "metadata")
+    uid = f"{head.out_version}-{uuid.uuid4().hex[:16]}"
+    records = []
+    for content, entries, m_seq, min_seq in manifests:
+        label = "deletes" if content else "data"
+        path = fs_join(meta_dir, f"manifest-{label}-{uid}.avro")
+        fs.write_bytes(path, write_ocf_bytes(
+            _manifest_entry_schema(), entries, codec="null",
+            extra_meta={
+                "schema": json.dumps(schema_json),
+                "schema-id": str(schema_id),
+                "partition-spec": "[]",
+                "partition-spec-id": "0",
+                "format-version": "2",
+                "content": label,
+            },
+        ))
+        n_del, del_rows = (0, 0) if content else deleted
+
+        def count(status, rows=False):
+            return sum(e["data_file"]["record_count"] if rows else 1
+                       for e in entries if e["status"] == status)
+
+        records.append({
+            "manifest_path": path,
+            "manifest_length": fs.size(path),
+            "partition_spec_id": 0,
+            "content": content,
+            "sequence_number": m_seq,
+            "min_sequence_number": min_seq,
+            "added_snapshot_id": snapshot_id,
+            "added_files_count": count(1),
+            "existing_files_count": count(0),
+            "deleted_files_count": n_del,
+            "added_rows_count": count(1, rows=True),
+            "existing_rows_count": count(0, rows=True),
+            "deleted_rows_count": del_rows,
+        })
+    manifest_list = fs_join(meta_dir, f"snap-{snapshot_id}-{uid}.avro")
+    fs.write_bytes(manifest_list, write_ocf_bytes(
+        _manifest_file_schema(), records, codec="null",
+        extra_meta={"snapshot-id": str(snapshot_id),
+                    "sequence-number": str(seq), "format-version": "2"},
+    ))
+    return manifest_list
+
+
+def _metadata_log(head: _Head) -> list:
+    prev = head.prev or {}
+    return [*prev.get("metadata-log", []),
+            *([{"metadata-file": head.prev_path,
+                "timestamp-ms": int(prev.get("last-updated-ms", 0))}]
+              if head.prev else [])]
+
+
+def _snapshot_metadata(head: _Head, *, snapshot_id: int, seq: int,
+                       manifest_list: str, schemas: list, schema_id: int,
+                       last_col_id: int, properties: dict,
+                       summary: dict) -> dict:
+    """The metadata JSON that appends one snapshot to ``head``'s chain and
+    makes it current. The caller supplies the table properties and the
+    snapshot summary (its policy); history, ids and logs are derived."""
+    prev = head.prev or {}
+    return {
+        "format-version": 2,
+        # the table identity must be STABLE across commits
+        "table-uuid": prev.get("table-uuid")
+        or str(uuid.uuid5(uuid.NAMESPACE_URL, head.root)),
+        "location": head.root,
+        "last-sequence-number": seq,
+        "last-updated-ms": head.now_ms,
+        "last-column-id": max(last_col_id, int(prev.get("last-column-id", 0))),
+        "current-schema-id": schema_id,
+        "schemas": schemas,
+        "default-spec-id": 0,
+        "partition-specs": [{"spec-id": 0, "fields": []}],
+        "last-partition-id": 999,
+        "default-sort-order-id": 0,
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "properties": properties,
+        "current-snapshot-id": snapshot_id,
+        "refs": {"main": {"snapshot-id": snapshot_id, "type": "branch"}},
+        "snapshots": [*prev.get("snapshots", []), {
+            "snapshot-id": snapshot_id,
+            "timestamp-ms": head.now_ms,
+            "sequence-number": seq,
+            "summary": summary,
+            "manifest-list": manifest_list,
+            "schema-id": schema_id,
+        }],
+        "snapshot-log": [
+            *prev.get("snapshot-log", []),
+            {"snapshot-id": snapshot_id, "timestamp-ms": head.now_ms},
+        ],
+        "metadata-log": _metadata_log(head),
+    }
+
+
+def _expired(head: _Head, kept: list, **changes) -> dict:
+    """``head``'s metadata with only the ``kept`` snapshots listed (old
+    v*.metadata.json files stay on disk, as real Iceberg leaves them)."""
+    ids = {s["snapshot-id"] for s in kept}
+    return {
+        **head.prev,
+        **changes,
+        "last-updated-ms": head.now_ms,
+        "snapshots": kept,
+        "snapshot-log": [e for e in head.prev.get("snapshot-log", [])
+                         if e["snapshot-id"] in ids],
+        "metadata-log": _metadata_log(head),
+    }
+
+
+# ---------------------------------------------------------------------------
 # the export
 # ---------------------------------------------------------------------------
 
-def export_iceberg(
-    spark, table, *, version: int | None = None, _retry: int = 0
-) -> dict:
+def export_iceberg(spark, table, *, version: int | None = None) -> dict:
     """Write Iceberg v2 metadata for ``table``'s snapshot (current by
     default) next to its data. Returns a summary dict (metadata path,
     data/delete file counts, row counts). See module docstring."""
     snap = table.snapshot(version)
     fs = table.fs
     root = table.root
-    meta_dir = fs_join(root, "metadata")
-    fs.mkdirs(meta_dir)
-
-    # Repeated exports APPEND a snapshot to the existing metadata chain
-    # (v2, v3, ... metadata files) so Iceberg readers get real history /
-    # time travel — each export's manifests enumerate the FULL current
-    # file set (an "overwrite"-shaped snapshot), and older snapshots stay
-    # readable until the lake's own expire_snapshots removes their files.
-    prev, prev_path = None, None
-    try:
-        from arc_spark.lake.iceberg_read import resolve_metadata_file
-
-        # writers append to the true head, never a stale hint
-        prev_path = resolve_metadata_file(fs, root, prefer_hint=False)
-        prev = json.loads(fs.read_bytes(prev_path))
-    except (FileNotFoundError, ValueError):
-        pass
-
     schema_json, name_mapping, ids, last_col_id = _build_schema(
         snap.schema, snap.column_renames
     )
-    now_ms = int(time.time() * 1000)
-    if prev:
-        out_version = int(
-            re.match(r".*v(\d+)\.metadata\.json$", prev_path).group(1)
-        ) + 1
-        base_seq = int(prev.get("last-sequence-number", 0))
-        snapshot_id = max(
-            (s["snapshot-id"] for s in prev.get("snapshots", [])), default=0
-        ) + 1
-        now_ms = max(now_ms, int(prev.get("last-updated-ms", 0)) + 1)
-    else:
-        out_version, base_seq = 1, 0
-        snapshot_id = snap.version + 1
+    # names this call's export-owned files under data/ (unique per call,
+    # so concurrent exporters never overwrite each other's delete files)
+    uid = uuid.uuid4().hex[:16]
 
-    # the uid names this ATTEMPT's manifest avros and re-encode/delete
-    # data dirs. It must be unique per attempt, not deterministic per
-    # (root, version): two concurrent exporters racing from the same
-    # prev would otherwise write the SAME paths with plain write_bytes
-    # and Spark overwrite-writes — the winner's committed snapshot could
-    # end up pointing at the loser's content, which no metadata CAS can
-    # undo. Iceberg's own commit UUID plays this role; a loser's files
-    # really are orphans (distinct paths) the next expire reaps.
-    uid = f"{out_version}-{uuid.uuid4().hex[:16]}"
-
-    def _key_exprs(df):
-        # metadata-only renames: parquet still carries historical names —
-        # resolve each column through its name history (the same
-        # coalescing LakeTable.read does), emitting the CURRENT name so
-        # delete-file columns match the exported schema
-        exprs = []
-        for k in snap.key_cols:
-            present = [n for n in [k, *snap.column_renames.get(k, [])]
-                       if n in df.columns]
-            exprs.append(F.coalesce(*[F.col(n) for n in present]).alias(k))
-        return exprs
-
-    def _seq_expr(df):
-        present = [n for n in
-                   [snap.seq_col, *snap.column_renames.get(snap.seq_col, [])]
-                   if n in df.columns]
-        return F.coalesce(*[F.col(n) for n in present])
+    def _pruned(rel_paths: list[str], lvl) -> "DataFrame":
+        # the lake's own manifest-schema read: renames coalesced to the
+        # current names, narrower files (before a widening) read widened
+        df = table._read_files(spark, snap, rel_paths, with_tombstone=True)
+        return df.select(
+            *snap.key_cols,
+            F.col(snap.seq_col).alias("_seq"),
+            F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)).alias("_tomb"),
+            lvl.alias("_lvl"),
+        )
 
     # MOR delta chains -> sequence-number levels (module docstring):
     # level j = the j-th delta file in its bucket's chronological chain
     # (keys never cross buckets, so per-bucket positions compose into
-    # global levels without any epoch bookkeeping)
+    # global levels without any epoch bookkeeping); root-relative paths
     delta_levels: dict[int, list[str]] = {}
     for bucket in sorted(snap.delta_files, key=int):
         for j, rel in enumerate(snap.delta_files[bucket], start=1):
-            delta_levels.setdefault(j, []).append(fs_join(root, rel))
+            delta_levels.setdefault(j, []).append(rel)
     n_levels = max(delta_levels, default=0)
+    base = [rel for b in sorted(snap.files, key=int) for rel in snap.files[b]]
     resolved = None
     dead_keys = None  # keys whose resolved row is a tombstone
     stats = None
     zero_copy_chain = True
-
-    from arc_spark.lake.table import TOMBSTONE_COL
-
-    def _pruned(paths: list[str], lvl) -> "DataFrame":
-        raw = spark.read.option("mergeSchema", "true").parquet(*paths)
-        return raw.select(
-            *_key_exprs(raw),
-            _seq_expr(raw).alias("_seq"),
-            F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)).alias("_tomb"),
-            lvl.alias("_lvl"),
-        )
 
     if n_levels:
         # The level encoding is valid ONLY when per-key seq order matches
@@ -392,12 +591,7 @@ def export_iceberg(
         for j in sorted(delta_levels):
             d = _pruned(delta_levels[j], F.lit(j))
             lv = d if lv is None else lv.unionByName(d)
-        allk = lv
-        base_paths = [
-            fs_join(root, rel) for b in snap.files for rel in snap.files[b]
-        ]
-        if base_paths:
-            allk = _pruned(base_paths, F.lit(0)).unionByName(lv)
+        allk = _pruned(base, F.lit(0)).unionByName(lv) if base else lv
         from pyspark import StorageLevel
 
         stats = (
@@ -431,110 +625,30 @@ def export_iceberg(
             live = winners.filter(
                 ~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False))
             ).drop(TOMBSTONE_COL)
-            reenc_dir = fs_join(root, "data", f"iceberg-reencode-{uid}")
-            live.write.mode("overwrite").parquet(reenc_dir)
+            reenc = f"data/iceberg-reencode-{uid}"
+            live.write.mode("overwrite").parquet(fs_join(root, reenc))
             delta_levels = {1: [
-                fs_join(reenc_dir, name) for name in fs.listdir(reenc_dir)
+                f"{reenc}/{name}" for name in fs.listdir(fs_join(root, reenc))
                 if name.endswith(".parquet")
             ]}
             n_levels = 1
 
-    seq_data = base_seq + 1  # base files; delta level j at seq_data + j
-    seq_del = seq_data + n_levels + 1  # top: resolved-tombstone delete
-
-    # -- data manifest: every base + delta file, footer-counted, in place
-    # (footer reads are IO-bound and independent — the pooled helper
-    # keeps a many-hundred-file MOR export off the serial driver path)
-    file_seqs = [
-        (fs_join(root, rel), seq_data)
-        for bucket in sorted(snap.files, key=int)
-        for rel in snap.files[bucket]
-    ] + [
-        (path, seq_data + j)
-        for j in sorted(delta_levels) for path in delta_levels[j]
+    # -- data files: every base + delta file, footer-counted, in place,
+    # as (path, level); level j sits at data sequence base + j. The seq
+    # column's bounds come from the same footer read: Iceberg engines use
+    # them for scan planning, exactly as the lake's file_stats do
+    data = [(fs_join(root, rel), 0) for rel in base] + [
+        (fs_join(root, rel), j)
+        for j in sorted(delta_levels) for rel in delta_levels[j]
     ]
+    seq_cols = {k: v for k, v in _numeric_bound_cols(schema_json["fields"]).items()
+                if k == snap.seq_col}
+    data_stats = _pooled_stats_multi(fs, [p for p, _ in data], seq_cols)
+    total_rows = sum(n for n, _, _ in data_stats)
 
-    fstats = _pooled_stats_bounds(fs, [p for p, _ in file_seqs], snap.seq_col)
-    seq_fid = ids[snap.seq_col]
-    entries, total_rows = [], 0
-    for (path, seq), (n, size, bnd) in zip(file_seqs, fstats):
-        total_rows += n
-        entries.append({
-            "status": 1,  # ADDED
-            "snapshot_id": snapshot_id,
-            "sequence_number": seq,
-            "file_sequence_number": seq,
-            "data_file": {
-                "content": 0,  # DATA
-                "file_path": path,
-                "file_format": "PARQUET",
-                "partition": {},
-                "record_count": n,
-                "file_size_in_bytes": size,
-                # seq-column bounds from the same footer read: Iceberg
-                # engines use these for scan planning (min/max pruning),
-                # exactly as the lake's own file_stats do internally
-                "lower_bounds": _seq_bound_cell(seq_fid, bnd, 0),
-                "upper_bounds": _seq_bound_cell(seq_fid, bnd, 1),
-                "equality_ids": None,
-            },
-        })
-
-    manifest_meta = {
-        "schema": json.dumps(schema_json),
-        "schema-id": "0",
-        "partition-spec": "[]",
-        "partition-spec-id": "0",
-        "format-version": "2",
-    }
-    data_manifest = fs_join(meta_dir, f"manifest-data-{uid}.avro")
-    fs.write_bytes(
-        data_manifest,
-        write_ocf_bytes(
-            _manifest_entry_schema(), entries, codec="null",
-            extra_meta={**manifest_meta, "content": "data"},
-        ),
-    )
-    manifests = [{
-        "manifest_path": data_manifest,
-        "manifest_length": fs.size(data_manifest),
-        "partition_spec_id": 0,
-        "content": 0,
-        "sequence_number": seq_data + n_levels,
-        "min_sequence_number": seq_data,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": total_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }]
-
-    # -- equality deletes: per-level key kills + resolved tombstones -----
-    del_entries, del_counts = [], {}
-
-    def _del_entry(path: str, seq: int, label: str) -> None:
-        n, size = _footer_stats(fs, path)
-        if not n:
-            return
-        del_counts[label] = del_counts.get(label, 0) + n
-        del_entries.append({
-            "status": 1,
-            "snapshot_id": snapshot_id,
-            "sequence_number": seq,
-            "file_sequence_number": seq,
-            "data_file": {
-                "content": 2,  # EQUALITY_DELETES
-                "file_path": path,
-                "file_format": "PARQUET",
-                "partition": {},
-                "record_count": n,
-                "file_size_in_bytes": size,
-                "equality_ids": [ids[k] for k in snap.key_cols],
-            },
-        })
-
+    # -- equality deletes: per-level key kills + resolved tombstones, as
+    # (path, level); the tombstone delete sits one level above the chain
+    deletes = []
     if n_levels:
         # ALL keys present in level j — kills every older version of
         # those keys (base + levels < j); the level's own rows survive
@@ -555,175 +669,109 @@ def export_iceberg(
             .parquet(keys_dir)
         )
         for entry in sorted(fs.listdir(keys_dir)):
-            if not entry.startswith("_lvl="):
-                continue
-            j = int(entry.split("=", 1)[1])
-            for fn in fs.listdir(fs_join(keys_dir, entry)):
-                if fn.endswith(".parquet"):
-                    _del_entry(fs_join(keys_dir, entry, fn),
-                               seq_data + j, f"level{j}")
-    if entries:
+            if entry.startswith("_lvl="):
+                j = int(entry.split("=", 1)[1])
+                deletes += [
+                    (fs_join(keys_dir, entry, fn), j)
+                    for fn in fs.listdir(fs_join(keys_dir, entry))
+                    if fn.endswith(".parquet")
+                ]
+    tomb_dir = None
+    if data:
         # keys whose RESOLVED (max-seq) row is a tombstone: the only
         # tombstone rows the per-level key deletes leave standing. With
         # MOR levels these come from the pruned stats aggregation above;
         # a compacted table takes the no-shuffle clean-read path.
-        if dead_keys is not None:
-            dead = dead_keys
-        else:
+        if dead_keys is None:
             if resolved is None:
                 resolved = table._resolve(spark, snap)
-            dead = resolved.filter(F.col(TOMBSTONE_COL)).select(*snap.key_cols)
+            dead_keys = resolved.filter(F.col(TOMBSTONE_COL)).select(*snap.key_cols)
         tomb_dir = fs_join(root, "data", f"iceberg-deletes-{uid}-tombstones")
-        dead.coalesce(1).write.mode("overwrite").parquet(tomb_dir)
-        for fn in fs.listdir(tomb_dir):
-            if fn.endswith(".parquet"):
-                _del_entry(fs_join(tomb_dir, fn), seq_del, "tombstones")
-        if "tombstones" not in del_counts:  # nothing tombstoned — drop it
-            fs.rmtree(tomb_dir)
-    if del_entries:
-        del_manifest = fs_join(meta_dir, f"manifest-deletes-{uid}.avro")
-        fs.write_bytes(
-            del_manifest,
-            write_ocf_bytes(
-                _manifest_entry_schema(), del_entries, codec="null",
-                extra_meta={**manifest_meta, "content": "deletes"},
-            ),
-        )
-        manifests.append({
-            "manifest_path": del_manifest,
-            "manifest_length": fs.size(del_manifest),
-            "partition_spec_id": 0,
-            "content": 1,  # DELETES
-            "sequence_number": seq_del,
-            "min_sequence_number": min(
-                e["sequence_number"] for e in del_entries
-            ),
-            "added_snapshot_id": snapshot_id,
-            "added_files_count": len(del_entries),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": sum(del_counts.values()),
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-        })
+        dead_keys.coalesce(1).write.mode("overwrite").parquet(tomb_dir)
+        deletes += [(fs_join(tomb_dir, fn), n_levels + 1)
+                    for fn in fs.listdir(tomb_dir) if fn.endswith(".parquet")]
+    # (delete, (rows, size)); empty delete files are dropped
+    deletes = [
+        (d, (n, size)) for d, (n, size, _) in
+        zip(deletes, _pooled_stats_multi(fs, [d[0] for d in deletes], {}))
+        if n
+    ]
+    tomb_n = sum(n for (_, j), (n, _) in deletes if j > n_levels)
+    if tomb_dir is not None and not tomb_n:  # nothing tombstoned — drop it
+        fs.rmtree(tomb_dir)
 
-    manifest_list = fs_join(meta_dir, f"snap-{snapshot_id}-{uid}.avro")
-    fs.write_bytes(
-        manifest_list,
-        write_ocf_bytes(
-            _manifest_file_schema(), manifests, codec="null",
-            extra_meta={
-                "snapshot-id": str(snapshot_id),
-                "sequence-number": str(seq_del),
-                "format-version": "2",
+    def derive(head: _Head):
+        # the first export starts the snapshot ids after the lake version
+        sid = head.snapshot_id if head.prev else snap.version + 1
+        seq_data = head.seq  # base files; delta level j at seq_data + j
+        seq_del = seq_data + n_levels + 1  # top: resolved-tombstone delete
+        entries = [
+            _entry(1, sid, seq_data + j, path, n, size,
+                   bounds=_bounds_cells(bnds, seq_cols))
+            for (path, j), (n, size, bnds) in zip(data, data_stats)
+        ]
+        manifests = [(0, entries, seq_data + n_levels, seq_data)]
+        del_entries = [
+            _entry(1, sid, seq_data + j, path, n, size, content=2,
+                   equality_ids=[ids[k] for k in snap.key_cols])
+            for (path, j), (n, size) in deletes
+        ]
+        if del_entries:
+            manifests.append((1, del_entries, seq_del,
+                              min(e["sequence_number"] for e in del_entries)))
+        # schema history: reuse the prior schema-id when unchanged, else
+        # append with the next id (positional field ids are stable for
+        # the lake's additive evolution; see module docstring)
+        schemas, schema_id = _schema_history(head.prev, schema_json)
+        manifest_list = _write_manifest(fs, head, sid, seq_del,
+                                        schema_json, schema_id, manifests)
+        metadata = _snapshot_metadata(
+            head, snapshot_id=sid, seq=seq_del, manifest_list=manifest_list,
+            schemas=schemas, schema_id=schema_id, last_col_id=last_col_id,
+            properties={
+                "schema.name-mapping.default": json.dumps(name_mapping),
+                "write.format.default": "parquet",
+                # provenance breadcrumbs for operators
+                "arc-spark.lake.version": str(snap.version),
+                "arc-spark.lake.end-seq": str(snap.end_seq or 0),
             },
-        ),
-    )
-
-    # schema history: reuse the prior schema-id when unchanged, else
-    # append with the next id (positional field ids are stable for the
-    # lake's additive evolution; see module docstring)
-    schemas, schema_id = _schema_history(prev, schema_json)
-
-    new_snapshot = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": now_ms,
-        "sequence-number": seq_del,
-        "summary": {
             # each export enumerates the FULL current file set
-            "operation": "overwrite" if prev else "append",
-            "added-data-files": str(len(entries)),
-            "added-records": str(total_rows),
-        },
-        "manifest-list": manifest_list,
-        "schema-id": schema_id,
-    }
-    metadata = {
-        "format-version": 2,
-        # the table identity must be STABLE across exports
-        "table-uuid": prev["table-uuid"] if prev else str(
-            uuid.uuid5(uuid.NAMESPACE_URL, root)
-        ),
-        "location": root,
-        "last-sequence-number": seq_del,
-        "last-updated-ms": now_ms,
-        "last-column-id": max(
-            last_col_id,
-            int(prev.get("last-column-id", 0)) if prev else 0,
-        ),
-        "current-schema-id": schema_id,
-        "schemas": schemas,
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": []}],
-        "last-partition-id": 999,
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {
-            "schema.name-mapping.default": json.dumps(name_mapping),
-            "write.format.default": "parquet",
-            # provenance breadcrumbs for operators
-            "arc-spark.lake.version": str(snap.version),
-            "arc-spark.lake.end-seq": str(snap.end_seq or 0),
-        },
-        "current-snapshot-id": snapshot_id,
-        "refs": {"main": {"snapshot-id": snapshot_id, "type": "branch"}},
-        "snapshots": [*(prev.get("snapshots", []) if prev else []),
-                      new_snapshot],
-        "snapshot-log": [
-            *(prev.get("snapshot-log", []) if prev else []),
-            {"snapshot-id": snapshot_id, "timestamp-ms": now_ms},
-        ],
-        "metadata-log": [
-            *(prev.get("metadata-log", []) if prev else []),
-            *([{"metadata-file": prev_path,
-                "timestamp-ms": int(prev.get("last-updated-ms", 0))}]
-              if prev else []),
-        ],
-    }
-    # CAS commit (same discipline as the lake's manifest commits): two
-    # concurrent exporters would mint the SAME snapshot-id/sequence
-    # numbers from the same prev — the loser must re-read the winner's
-    # metadata and re-derive, not clobber. With the table's CommitLocker
-    # the check-then-put (and the hint update) serialize on ANY backend;
-    # without one, create_exclusive detects the race where the fs CAS is
-    # honest (POSIX, HDFS, native S3 conditional PUT) and the Hadoop-
-    # connector object-store caveat is the lake's own, warned once there.
-    # Either way the loser retries: the recursion re-reads prev and
-    # produces fresh ids (the losing attempt's manifest Avro / delete
-    # files are orphans the next expire_snapshots reaps).
-    meta_path = fs_join(meta_dir, f"v{out_version}.metadata.json")
-    committed = _cas_metadata(
-        fs, getattr(table, "locker", None), root, meta_path,
-        json.dumps(metadata, indent=2).encode(), out_version,
-    )
-    if not committed:
+            summary={
+                "operation": "overwrite" if head.prev else "append",
+                "added-data-files": str(len(entries)),
+                "added-records": str(total_rows),
+            },
+        )
+        return metadata, (head.path, manifest_list)
+
+    # With the table's CommitLocker the check-then-put (and the hint
+    # update) serialize on ANY backend; without one, create_exclusive
+    # detects the race where the fs CAS is honest (POSIX, HDFS, native S3
+    # conditional PUT) and the Hadoop-connector object-store caveat is
+    # the lake's own, warned once there.
+    try:
+        meta_path, manifest_list = _commit(
+            fs, root, getattr(table, "locker", None), "export_iceberg", derive
+        )
         if stats is not None:
-            stats.unpersist()  # the retry builds (and persists) a fresh one
-        if _retry >= 3:
-            raise RuntimeError(
-                f"export_iceberg: lost the metadata CAS at {meta_path} "
-                "3 times — concurrent exporters are racing faster than "
-                "the retry budget"
-            )
-        return export_iceberg(spark, table, version=version, _retry=_retry + 1)
-    tomb_n = del_counts.get("tombstones", 0)
-    if stats is not None:
-        # with MOR levels the per-level key deletes also kill shadowed
-        # versions, so total_rows - delete_rows over-subtracts (a fresh
-        # delta insert's key-delete kills nothing); the pruned stats
-        # aggregation already knows each key's winner — live rows are
-        # the keys whose winner is not a tombstone
-        live_rows = stats.filter(~F.col("_win_tomb")).count()
-        stats.unpersist()
-    else:
-        # LWW keeps ONE row per key, so each deleted key's only physical
-        # row is its tombstone — the equality delete removes exactly it
-        live_rows = total_rows - tomb_n
+            # with MOR levels the per-level key deletes also kill shadowed
+            # versions, so total_rows - delete_rows over-subtracts (a
+            # fresh delta insert's key-delete kills nothing); the pruned
+            # stats aggregation already knows each key's winner — live
+            # rows are the keys whose winner is not a tombstone
+            live_rows = stats.filter(~F.col("_win_tomb")).count()
+        else:
+            # LWW keeps ONE row per key, so each deleted key's only
+            # physical row is its tombstone — the delete removes exactly it
+            live_rows = total_rows - tomb_n
+    finally:
+        if stats is not None:
+            stats.unpersist()
     return {
         "metadata": meta_path,
         "manifest_list": manifest_list,
-        "data_files": len(entries),
-        "delete_files": len(del_entries),
+        "data_files": len(data),
+        "delete_files": len(deletes),
         "delta_levels": n_levels,
         # False: the chain was out-of-order (late lower-seq events in a
         # later delta) and the delta keys' winners were re-encoded as one
@@ -731,49 +779,19 @@ def export_iceberg(
         "zero_copy_chain": zero_copy_chain,
         "physical_rows": total_rows,
         "deleted_keys": tomb_n,
-        "delete_rows": sum(del_counts.values()),
+        "delete_rows": sum(n for _, (n, _) in deletes),
         "live_rows": live_rows,
     }
 
 
-def _footer_stats(fs, path: str) -> tuple[int, int]:
-    """(row count, byte size) for one parquet file — a footer read plus
-    a stat. Shared by the exporter and the landing-zone writer so the
-    manifest stats can never drift between them."""
-    n, size, _ = _footer_stats_multi(fs, path, {})
-    return n, size
-
-
-def _seq_bound_cell(field_id: int, bounds, i: int):
-    """One Iceberg bounds-map cell for the seq field, or None when the
-    footer had no usable stats. Values use the spec's single-value binary
-    serialization: long = 8-byte little-endian."""
-    if bounds is None:
-        return None
-    import struct
-
-    return [{"key": field_id, "value": struct.pack("<q", int(bounds[i]))}]
-
-
-def _footer_stats_bounds(fs, path: str, seq_col: str):
-    """(row count, byte size, [min_seq, max_seq] | None) — one footer
-    read, shared with the manifest-stats path so nothing drifts."""
-    n, size, bnds = _footer_stats_multi(fs, path, {seq_col: None})
-    return n, size, bnds.get(seq_col)
-
-
-def _pooled_stats_bounds(fs, paths, seq_col: str):
-    """_footer_stats_bounds over many files on a thread pool."""
-    return [
-        (n, size, bnds.get(seq_col))
-        for n, size, bnds in _pooled_stats_multi(fs, paths, {seq_col: None})
-    ]
-
+# ---------------------------------------------------------------------------
+# footer stats and bounds
+# ---------------------------------------------------------------------------
 
 def _numeric_bound_cols(schema_fields) -> dict:
     """{name: (field-id, iceberg type)} for the top-level int/long fields
-    of an Iceberg schema — the columns landing manifests record bounds
-    for (seq cursors, timestamps-as-longs; strings would need the spec's
+    of an Iceberg schema — the columns manifests record bounds for (seq
+    cursors, timestamps-as-longs; strings would need the spec's
     truncation rules and buy the tail nothing)."""
     return {
         f["name"]: (f["id"], f["type"])
@@ -782,59 +800,45 @@ def _numeric_bound_cols(schema_fields) -> dict:
     }
 
 
-def _pack_bound(val, typ: str) -> bytes:
-    """Iceberg single-value serialization for int/long bounds."""
-    import struct
-
-    return struct.pack("<i" if typ == "int" else "<q", int(val))
-
-
 def _bounds_cells(bnds: dict, cols: dict):
     """(lower_bounds, upper_bounds) cell lists for a data_file entry from
-    per-column footer bounds; None when no column had usable stats."""
+    per-column footer bounds; None when no column had usable stats.
+    Values use the spec's single-value serialization: int = 4-byte,
+    long = 8-byte little-endian."""
     lo, hi = [], []
     for name, (fid, typ) in cols.items():
         b = bnds.get(name)
         if b is None:
             continue
-        lo.append({"key": fid, "value": _pack_bound(b[0], typ)})
-        hi.append({"key": fid, "value": _pack_bound(b[1], typ)})
+        fmt = "<i" if typ == "int" else "<q"
+        lo.append({"key": fid, "value": struct.pack(fmt, int(b[0]))})
+        hi.append({"key": fid, "value": struct.pack(fmt, int(b[1]))})
     return (lo or None, hi or None)
 
 
-def _footer_stats_multi(fs, path: str, cols: dict):
-    """(rows, size, {col: [lo, hi]}) — one footer read, bounds for every
-    requested numeric column."""
+def _pooled_stats_multi(fs, paths, cols: dict):
+    """[(rows, size, {col: [lo, hi]})] per parquet file — one footer read
+    each, bounds for every requested numeric column. The reads run on a
+    thread pool: they are IO-bound and independent, so a
+    many-hundred-file commit never walks object-store footers serially
+    on the driver."""
+    from concurrent.futures import ThreadPoolExecutor
+
     import pyarrow.parquet as pq
 
-    from arc_spark.lake.table import _footer_seq_bounds
-
-    with fs.seekable_input(path) as f:
-        md = pq.ParquetFile(f).metadata
-    bnds = {}
-    for name in cols:
-        b = _footer_seq_bounds(md, name)
-        if b is not None:
-            bnds[name] = b
-    return md.num_rows, fs.size(path), bnds
-
-
-def _pooled_stats_multi(fs, paths, cols: dict):
-    """_footer_stats_multi over many files on a thread pool."""
-    from concurrent.futures import ThreadPoolExecutor
+    def one(path):
+        with fs.seekable_input(path) as f:
+            md = pq.ParquetFile(f).metadata
+        bnds = {name: _footer_seq_bounds(md, name) for name in cols}
+        return md.num_rows, fs.size(path), {
+            k: b for k, b in bnds.items() if b is not None
+        }
 
     paths = list(paths)
     if not paths:
         return []
     with ThreadPoolExecutor(max_workers=16) as pool:
-        return list(pool.map(lambda p: _footer_stats_multi(fs, p, cols), paths))
-
-
-def _pooled_stats(fs, paths) -> list[tuple[int, int]]:
-    """_footer_stats over many files on a thread pool — the reads are
-    IO-bound and independent, so a many-hundred-file commit never walks
-    object-store footers serially on the driver."""
-    return [(n, size) for n, size, _ in _pooled_stats_multi(fs, paths, {})]
+        return list(pool.map(one, paths))
 
 
 def _schema_history(prev: dict | None, schema_json: dict):
@@ -865,7 +869,8 @@ def _schema_history(prev: dict | None, schema_json: dict):
 
 def _cas_metadata(fs, locker, root: str, meta_path: str, payload: bytes,
                   out_version: int) -> bool:
-    """Atomically publish an Iceberg metadata version + advance the hint.
+    """Atomically publish an Iceberg metadata version + advance the hint
+    — the compare-and-swap under :func:`_commit`, the one commit path.
 
     Returns False when the version already exists (the caller lost the
     race and must re-derive against the winner's chain). With a
@@ -898,7 +903,7 @@ def _cas_metadata(fs, locker, root: str, meta_path: str, payload: bytes,
     def _highest() -> int:
         h = out_version
         for name in fs.listdir(meta_dir):
-            m = re.match(r"v(\d+)\.metadata\.json$", name)
+            m = _VERSION.match(name)
             if m:
                 h = max(h, int(m.group(1)))
         return h
@@ -923,7 +928,7 @@ def _cas_metadata(fs, locker, root: str, meta_path: str, payload: bytes,
 # ---------------------------------------------------------------------------
 
 def expire_iceberg_snapshots(fs, root: str, live_rel: set[str], *,
-                             locker=None, _retry: int = 0):
+                             locker=None):
     """Reconcile the exported Iceberg metadata chain with a lake GC pass.
 
     ``live_rel`` is the set of ROOT-relative parquet paths the surviving
@@ -943,8 +948,9 @@ def expire_iceberg_snapshots(fs, root: str, live_rel: set[str], *,
     - snapshots whose data files are all still live SURVIVE untouched;
     - snapshots referencing any GC'd file are dropped from a NEW metadata
       version (snapshot-log filtered, current-snapshot-id/refs moved to
-      the newest survivor) — old v*.metadata.json files stay on disk, as
-      real Iceberg leaves them;
+      the newest survivor), committed through the same CAS loop as every
+      other Iceberg commit — a lost race re-runs the reconciliation
+      against the winner's chain instead of clobbering it;
     - manifest-list / manifest Avro files referenced by no surviving
       snapshot are deleted, as are orphaned ones from crashed or
       CAS-losing exports. Like the lake GC that calls this, the reap
@@ -954,104 +960,68 @@ def expire_iceberg_snapshots(fs, root: str, live_rel: set[str], *,
       removed (the mirror must be re-published with export_iceberg) and
       ``mirror_removed`` is True.
     """
-    from arc_spark.formats.avro import read_ocf_bytes
-    from arc_spark.lake.iceberg_read import resolve_metadata_file
-
-    meta_dir = fs_join(root, "metadata")
-    try:
-        meta_path = resolve_metadata_file(fs, root, prefer_hint=False)
-    except (FileNotFoundError, ValueError):
-        return None
-    meta = json.loads(fs.read_bytes(meta_path))
-
     def rel(p: str) -> str:
         return p[len(root):].lstrip("/") if p.startswith(root) else p
 
-    surviving, keep_files, keep_avro = [], set(), set()
-    for s in meta.get("snapshots", []):
-        try:
-            _, manifests = read_ocf_bytes(fs.read_bytes(s["manifest-list"]))
-        except FileNotFoundError:
-            continue  # already half-expired: drop it
-        ok, own_rel, avros = True, [], [s["manifest-list"]]
-        for m in manifests:
-            avros.append(m["manifest_path"])
-            _, entries = read_ocf_bytes(fs.read_bytes(m["manifest_path"]))
-            for e in entries:
+    def derive(head: _Head):
+        if head.prev is None:
+            return None, None
+        snaps = head.prev.get("snapshots", [])
+        surviving, keep_files, keep_avro = [], set(), set()
+        for s in snaps:
+            try:
+                walked = list(_walk(fs, s))
+            except FileNotFoundError:
+                continue  # already half-expired: drop it
+            ok, own = True, set()
+            for _m, e in walked:
+                if e is None:
+                    continue
                 r = rel(e["data_file"]["file_path"])
-                if (
-                    e["data_file"].get("content", 0) == 0
-                    and not r.startswith("data/iceberg-")
-                ):
+                if (e["data_file"].get("content", 0) == 0
+                        and not r.startswith("data/iceberg-")):
                     # a LAKE parquet referenced in place: the snapshot
                     # survives iff the lake GC keeps it
-                    if r not in live_rel:
-                        ok = False
+                    ok = ok and r in live_rel
                 else:
                     # EXPORT-OWNED file (equality deletes, re-encoded
                     # delta winners): it lives in no lake manifest by
                     # construction — it survives exactly as long as its
                     # snapshot does, so it must never vote against it
-                    own_rel.append(r)
-        if ok:
-            surviving.append(s)
-            keep_files |= set(own_rel)
-            keep_avro |= {a.rsplit("/", 1)[-1] for a in avros}
+                    own.add(r)
+            if ok:
+                surviving.append(s)
+                keep_files |= own
+                keep_avro |= {p.rsplit("/", 1)[-1] for p in
+                              [s["manifest-list"],
+                               *(m["manifest_path"] for m, _ in walked)]}
+        plan = (len(surviving), len(snaps) - len(surviving), keep_files,
+                keep_avro)
+        if not surviving or len(surviving) == len(snaps):
+            return None, plan
+        cur = max(surviving, key=lambda s: s.get("sequence-number", 0))
+        return _expired(
+            head, surviving, **{
+                "current-snapshot-id": cur["snapshot-id"],
+                "refs": {"main": {"snapshot-id": cur["snapshot-id"],
+                                  "type": "branch"}},
+            },
+        ), plan
 
-    dropped = len(meta.get("snapshots", [])) - len(surviving)
-    if not surviving:
+    plan = _commit(fs, root, locker, "expire_iceberg_snapshots", derive)
+    if plan is None:
+        return None
+    kept, dropped, keep_files, keep_avro = plan
+    meta_dir = fs_join(root, "metadata")
+    if not kept:
         fs.rmtree(meta_dir)
         return {"keep_files": set(), "snapshots_kept": 0,
                 "snapshots_dropped": dropped, "mirror_removed": True}
-
-    if dropped:
-        cur = max(surviving, key=lambda s: s.get("sequence-number", 0))
-        keep_ids = {s["snapshot-id"] for s in surviving}
-        m = re.match(r".*v(\d+)\.metadata\.json$", meta_path)
-        out_version = int(m.group(1)) + 1
-        now_ms = max(
-            int(time.time() * 1000), int(meta.get("last-updated-ms", 0)) + 1
-        )
-        new_meta = {
-            **meta,
-            "last-updated-ms": now_ms,
-            "current-snapshot-id": cur["snapshot-id"],
-            "refs": {"main": {"snapshot-id": cur["snapshot-id"],
-                              "type": "branch"}},
-            "snapshots": surviving,
-            "snapshot-log": [
-                e for e in meta.get("snapshot-log", [])
-                if e["snapshot-id"] in keep_ids
-            ],
-            "metadata-log": [
-                *meta.get("metadata-log", []),
-                {"metadata-file": meta_path,
-                 "timestamp-ms": int(meta.get("last-updated-ms", 0))},
-            ],
-        }
-        # CAS: a concurrent export may have landed this version — its
-        # metadata references snapshots our filtering never saw, so
-        # redo the reconciliation against the new chain instead of
-        # clobbering it
-        committed = _cas_metadata(
-            fs, locker, root,
-            fs_join(meta_dir, f"v{out_version}.metadata.json"),
-            json.dumps(new_meta, indent=2).encode(), out_version,
-        )
-        if not committed:
-            if _retry >= 3:
-                raise RuntimeError(
-                    f"expire_iceberg_snapshots: lost the metadata CAS at "
-                    f"{meta_dir} v{out_version} 3 times"
-                )
-            return expire_iceberg_snapshots(
-                fs, root, live_rel, locker=locker, _retry=_retry + 1
-            )
     # reap manifest-list/manifest Avro of dropped (or orphaned) snapshots
     for name in fs.listdir(meta_dir):
         if name.endswith(".avro") and name not in keep_avro:
             fs.delete(fs_join(meta_dir, name))
-    return {"keep_files": keep_files, "snapshots_kept": len(surviving),
+    return {"keep_files": keep_files, "snapshots_kept": kept,
             "snapshots_dropped": dropped, "mirror_removed": False}
 
 
@@ -1078,8 +1048,63 @@ def export_catalog_iceberg(spark, catalog, *, version: int | None = None) -> dic
     }
 
 
-def write_iceberg(spark, df, root: str, *, mode: str = "append",
-                  _retry: int = 0, _batch_dir: str | None = None) -> dict:
+# ---------------------------------------------------------------------------
+# the landing zone: append/overwrite, compaction, expiry
+# ---------------------------------------------------------------------------
+
+def _append_only(head: _Head, refusal: str) -> list:
+    """The head's live data files, with record counts / sizes filled from
+    footers where a foreign manifest omitted them; ValueError(refusal)
+    when the table carries delete files (it belongs to an upsert
+    writer)."""
+    files, deletes = head.files
+    if deletes:
+        raise ValueError(refusal)
+    need = [f.path for f in files if f.rows is None or f.size is None]
+    if need:
+        fixed = dict(zip(need, _pooled_stats_multi(head.fs, need, {})))
+        files = [f._replace(rows=fixed[f.path][0], size=fixed[f.path][1])
+                 if f.path in fixed else f for f in files]
+    return files
+
+
+def _carried(files, snapshot_id: int) -> list:
+    """EXISTING entries carrying ``files`` forward at their original data
+    sequence numbers, adding-snapshot ids and bounds (verbatim — a
+    commit must not erode older files' scan-pruning metadata)."""
+    return [
+        _entry(0, snapshot_id if f.added_by is None else f.added_by, f.seq,
+               f.path, f.rows, f.size, bounds=f.bounds)
+        for f in files
+    ]
+
+
+def _landing_properties(head: _Head, name_mapping: str) -> dict:
+    """Table properties of a landing-writer commit. ``arc.bounds.tight``
+    claims ATTAINED (not merely conservative) manifest bounds: the
+    Iceberg spec only requires upper_bounds >= the column max, so a
+    metadata-only max_seq probe may treat a bound as the true max ONLY
+    when every commit came from this engine's landing writers
+    (footer-exact bounds). The PROPERTY is just a fast precondition —
+    standard Iceberg writers preserve table properties verbatim across
+    commits, so a foreign append would keep it. The PROOF is
+    per-snapshot: every landing snapshot stamps arc.bounds.tight into
+    its summary, and max_seq_bound requires the marker on EVERY snapshot
+    in the chain before trusting bounds as attained — a foreign commit
+    lacks the marker and demotes the claim to conservative, exactly the
+    spec default. The lake export writes no such claim."""
+    tight = head.prev is None or (
+        (head.prev.get("properties") or {}).get("arc.bounds.tight") == "true"
+    )
+    return {
+        "schema.name-mapping.default": name_mapping,
+        "write.format.default": "parquet",
+        "commit.retry.num-retries": "1",
+        **({"arc.bounds.tight": "true"} if tight else {}),
+    }
+
+
+def write_iceberg(spark, df, root: str, *, mode: str = "append") -> dict:
     """Land a plain DataFrame as (or append a snapshot to) an Apache
     Iceberg v2 table at ``root`` — the minimal landing-zone writer.
 
@@ -1090,309 +1115,81 @@ def write_iceberg(spark, df, root: str, *, mode: str = "append",
     own. ``mode='append'`` adds this batch's files to the previous
     snapshot's file set (a real Iceberg append); ``mode='overwrite'``
     starts the table over with only this batch. The metadata chain,
-    name mapping, CAS commit and snapshot history follow the same code
-    paths the lake exporter uses, so everything ``read_iceberg`` / any
+    name mapping, CAS commit and snapshot history are the one commit
+    path the lake exporter uses, so everything ``read_iceberg`` / any
     spec-compliant reader supports (time travel, schema-id reuse) holds
     here too. No deletes are ever written — a landing zone is
     append-only by design; use a LakeTable when you need upserts."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append/overwrite, got {mode!r}")
     fs = get_fs(root, spark)
-    meta_dir = fs_join(root, "metadata")
-    fs.mkdirs(meta_dir)
+    refusal = ("write_iceberg appends to append-only tables; this table "
+               "carries delete files — it belongs to an upsert writer")
+    # validated BEFORE the batch write, so a refused call leaves no
+    # orphans inside the foreign table's data directory
+    head = _head(fs, root)
+    if mode == "append":
+        _append_only(head, refusal)
 
-    prev, prev_path = None, None
-    try:
-        from arc_spark.lake.iceberg_read import (
-            _load_snapshot_files,
-            resolve_metadata_file,
-        )
-
-        prev_path = resolve_metadata_file(fs, root, prefer_hint=False)
-        prev = json.loads(fs.read_bytes(prev_path))
-    except (FileNotFoundError, ValueError):
-        pass
-
-    if prev:
-        m = re.match(r".*v(\d+)\.metadata\.json$", prev_path)
-        out_version = int(m.group(1)) + 1
-        base_seq = int(prev.get("last-sequence-number", 0))
-        snapshot_id = max(
-            (s["snapshot-id"] for s in prev.get("snapshots", [])), default=0
-        ) + 1
-        now_ms = max(int(time.time() * 1000),
-                     int(prev.get("last-updated-ms", 0)) + 1)
-    else:
-        out_version, base_seq, snapshot_id = 1, 0, 1
-        now_ms = int(time.time() * 1000)
-    seq = base_seq + 1
-
-    # Carry the previous snapshot's live files forward at their original
-    # data sequence numbers (a true append — old files are EXISTING),
-    # with record counts / sizes / adding-snapshot ids straight from the
-    # previous manifest: an append is O(this batch) footer IO, not
-    # O(table files), and entry snapshot_id keeps meaning "snapshot that
-    # ADDED the file" (Iceberg v2 spec) for provenance tooling.
-    # Validated BEFORE any batch write so a refused call (a table with
-    # delete files belongs to an upsert writer) leaves no orphans inside
-    # the foreign table's data directory.
-    carried = []
-    if prev and mode == "append" and prev.get("current-snapshot-id") is not None:
-        data_files, deletes = _load_snapshot_files(
-            fs, prev, with_stats=True, with_bounds=True
-        )
-        if deletes:
-            raise ValueError(
-                "write_iceberg appends to append-only tables; this table "
-                "carries delete files — it belongs to an upsert writer"
-            )
-        carried = data_files
-
-    # a CAS-loss retry reuses the already-written batch files — only the
-    # metadata derivation repeats
-    batch_dir = _batch_dir
-    if batch_dir is None:
-        batch_dir = fs_join(root, "data", f"append-{uuid.uuid4().hex[:12]}")
-        df.write.mode("overwrite").parquet(batch_dir)
-    new_files = [
-        fs_join(batch_dir, name) for name in fs.listdir(batch_dir)
-        if name.endswith(".parquet")
-    ]
-
-    schema_json, name_mapping, _ids, last_col_id = _build_schema(
-        df.schema, {}
-    )
-    # per-ATTEMPT uid (see export_iceberg): concurrent writers racing
-    # from the same prev must never share manifest avro paths
-    uid = f"w{out_version}-{uuid.uuid4().hex[:16]}"
-
-    # foreign manifests may omit stats; fill from footers in one pool
-    need = [c[0] for c in carried if c[2] is None or c[3] is None]
-    if need:
-        fixed = dict(zip(need, _pooled_stats(fs, need)))
-        carried = [
-            (p, s, *(fixed[p] if p in fixed else (n, sz)), a, b)
-            for p, s, n, sz, a, b in carried
-        ]
-
+    # the batch is written once; a CAS loss re-derives only the metadata
+    batch_dir = fs_join(root, "data", f"append-{uuid.uuid4().hex[:12]}")
+    df.write.mode("overwrite").parquet(batch_dir)
+    schema_json, name_mapping, _ids, last_col_id = _build_schema(df.schema, {})
     num_cols = _numeric_bound_cols(schema_json["fields"])
-    entries, total_rows, new_rows = [], 0, 0
-    for path, fseq, n, size, added_by, (lo_b, hi_b) in carried:  # EXISTING
-        total_rows += n
-        entries.append({
-            "status": 0,
-            "snapshot_id": added_by if added_by is not None else snapshot_id,
-            "sequence_number": fseq,
-            "file_sequence_number": fseq,
-            "data_file": {
-                "content": 0, "file_path": path, "file_format": "PARQUET",
-                "partition": {}, "record_count": n,
-                "file_size_in_bytes": size,
-                # bounds pass through verbatim — an append must not erode
-                # older files' scan-pruning metadata
-                "lower_bounds": lo_b, "upper_bounds": hi_b,
-                "equality_ids": None,
-            },
-        })
-    new_stats = list(zip(new_files, _pooled_stats_multi(fs, new_files, num_cols)))
+    paths = [fs_join(batch_dir, name) for name in fs.listdir(batch_dir)
+             if name.endswith(".parquet")]
     # Empty partitions write zero-row parquet files (a filtered or skewed
     # upstream frame); manifesting them pollutes every future append's
     # carried list and defeats bounds pruning (no footer stats -> read
     # conservatively). Drop them from BOTH the manifest and the disk.
-    for path, (n, _sz, _b) in new_stats:
-        if n == 0:
+    new = []
+    for path, st in zip(paths, _pooled_stats_multi(fs, paths, num_cols)):
+        if st[0] == 0:
             fs.delete(path)
-    new_stats = [t for t in new_stats if t[1][0] > 0]
-    new_files = [t[0] for t in new_stats]
-    for path, (n, size, bnds) in new_stats:
-        total_rows += n
-        new_rows += n
-        lo_b, hi_b = _bounds_cells(bnds, num_cols)
-        entries.append({
-            "status": 1,  # ADDED
-            "snapshot_id": snapshot_id,
-            "sequence_number": seq,
-            "file_sequence_number": seq,
-            "data_file": {
-                "content": 0, "file_path": path, "file_format": "PARQUET",
-                "partition": {}, "record_count": n,
-                "file_size_in_bytes": size,
-                # int/long column bounds from the same footer read — this
-                # is what lets a seq-cursor tail skip caught-up files
-                "lower_bounds": lo_b, "upper_bounds": hi_b,
-                "equality_ids": None,
-            },
-        })
+        else:
+            new.append((path, st))
+    new_rows = sum(n for _, (n, _, _) in new)
 
-    schemas, schema_id = _schema_history(prev, schema_json)
-    meta_path, manifest_list = _publish_landing_snapshot(
-        fs, root,
-        prev=prev, prev_path=prev_path, uid=uid, entries=entries,
-        seq=seq, min_seq=min([c[1] for c in carried] + [seq]),
-        snapshot_id=snapshot_id, out_version=out_version, now_ms=now_ms,
-        operation="append" if mode == "append" else "overwrite",
-        summary={"added-data-files": str(len(new_files)),
-                 "added-records": str(new_rows)},
-        schemas=schemas, schema_id=schema_id, schema_json=schema_json,
-        name_mapping=name_mapping,
-        last_col_id=max(
-            last_col_id, int(prev.get("last-column-id", 0)) if prev else 0
-        ),
-        counts=(len(new_files), len(carried), 0,
-                new_rows, total_rows - new_rows, 0),
-    )
-    if meta_path is None:
-        if _retry >= 3:
-            raise RuntimeError(
-                f"write_iceberg: lost the metadata CAS at {root} "
-                f"v{out_version} 3 times — concurrent writers are racing "
-                "faster than the retry budget"
-            )
-        # lost the race: re-derive against the winner's chain, keeping
-        # this attempt's batch files (they are committed by the retry)
-        return write_iceberg(spark, df, root, mode=mode,
-                             _retry=_retry + 1, _batch_dir=batch_dir)
-    return {
-        "metadata": meta_path,
-        "manifest_list": manifest_list,
-        "data_files": len(entries),
-        "added_files": len(new_files),
-        "added_rows": new_rows,
-        "total_rows": total_rows,
-        "snapshot_id": snapshot_id,
-    }
+    def derive(head: _Head):
+        # Carry the previous snapshot's live files forward (a true append
+        # — old files are EXISTING), with record counts / sizes / adding-
+        # snapshot ids straight from the previous manifest: an append is
+        # O(this batch) footer IO, not O(table files), and entry
+        # snapshot_id keeps meaning "snapshot that ADDED the file"
+        # (Iceberg v2 spec) for provenance tooling.
+        carried = _append_only(head, refusal) if mode == "append" else []
+        sid, seq = head.snapshot_id, head.seq
+        entries = _carried(carried, sid) + [
+            # int/long column bounds from the same footer read — this is
+            # what lets a seq-cursor tail skip caught-up files
+            _entry(1, sid, seq, path, n, size,
+                   bounds=_bounds_cells(bnds, num_cols))
+            for path, (n, size, bnds) in new
+        ]
+        schemas, schema_id = _schema_history(head.prev, schema_json)
+        manifest_list = _write_manifest(
+            fs, head, sid, seq, schema_json, schema_id,
+            [(0, entries, seq, min([f.seq for f in carried] + [seq]))],
+        )
+        metadata = _snapshot_metadata(
+            head, snapshot_id=sid, seq=seq, manifest_list=manifest_list,
+            schemas=schemas, schema_id=schema_id, last_col_id=last_col_id,
+            properties=_landing_properties(head, json.dumps(name_mapping)),
+            summary={"operation": mode, "arc.bounds.tight": "true",
+                     "added-data-files": str(len(new)),
+                     "added-records": str(new_rows)},
+        )
+        return metadata, {
+            "metadata": head.path,
+            "manifest_list": manifest_list,
+            "data_files": len(entries),
+            "added_files": len(new),
+            "added_rows": new_rows,
+            "total_rows": new_rows + sum(f.rows for f in carried),
+            "snapshot_id": sid,
+        }
 
-
-def _publish_landing_snapshot(
-    fs, root: str, *, prev, prev_path, uid, entries, seq, min_seq,
-    snapshot_id, out_version, now_ms, operation, summary, schemas,
-    schema_id, schema_json, name_mapping, last_col_id, counts,
-):
-    """Write one landing-zone snapshot — manifest avro, manifest list,
-    metadata JSON — and CAS-commit it. Shared by :func:`write_iceberg`
-    (append/overwrite) and :func:`compact_iceberg` (replace) so the two
-    writers can never drift on the spec bookkeeping. ``counts`` is
-    (added_files, existing_files, deleted_files, added_rows,
-    existing_rows, deleted_rows). Returns ``(meta_path, manifest_list)``
-    or ``(None, None)`` when the CAS loses — the caller owns the retry
-    policy (re-derive against the winner's chain)."""
-    meta_dir = fs_join(root, "metadata")
-    (n_added, n_existing, n_deleted,
-     added_rows, existing_rows, deleted_rows) = counts
-    manifest_meta = {
-        "schema": json.dumps(schema_json), "schema-id": str(schema_id),
-        "partition-spec": "[]", "partition-spec-id": "0",
-        "format-version": "2",
-    }
-    data_manifest = fs_join(meta_dir, f"manifest-data-{uid}.avro")
-    fs.write_bytes(
-        data_manifest,
-        write_ocf_bytes(
-            _manifest_entry_schema(), entries, codec="null",
-            extra_meta={**manifest_meta, "content": "data"},
-        ),
-    )
-    manifest_list = fs_join(meta_dir, f"snap-{snapshot_id}-{uid}.avro")
-    fs.write_bytes(
-        manifest_list,
-        write_ocf_bytes(
-            _manifest_file_schema(),
-            [{
-                "manifest_path": data_manifest,
-                "manifest_length": fs.size(data_manifest),
-                "partition_spec_id": 0, "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": min_seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": n_added,
-                "existing_files_count": n_existing,
-                "deleted_files_count": n_deleted,
-                "added_rows_count": added_rows,
-                "existing_rows_count": existing_rows,
-                "deleted_rows_count": deleted_rows,
-            }],
-            codec="null",
-            extra_meta={"snapshot-id": str(snapshot_id),
-                        "sequence-number": str(seq), "format-version": "2"},
-        ),
-    )
-    metadata = {
-        "format-version": 2,
-        "table-uuid": prev["table-uuid"] if prev else str(
-            uuid.uuid5(uuid.NAMESPACE_URL, root)
-        ),
-        "location": root,
-        "last-sequence-number": seq,
-        "last-updated-ms": now_ms,
-        "last-column-id": last_col_id,
-        "current-schema-id": schema_id,
-        "schemas": schemas,
-        "default-spec-id": 0,
-        "partition-specs": [{"spec-id": 0, "fields": []}],
-        "last-partition-id": 999,
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {
-            "schema.name-mapping.default": json.dumps(name_mapping),
-            "write.format.default": "parquet",
-            "commit.retry.num-retries": "1",
-            # ATTAINED (not merely conservative) manifest bounds: the
-            # Iceberg spec only requires upper_bounds >= the column max,
-            # so a metadata-only max_seq probe may treat a bound as the
-            # true max ONLY when every commit came from this engine's
-            # landing writers (footer-exact bounds). The PROPERTY is just
-            # a fast precondition — standard Iceberg writers preserve
-            # table properties verbatim across commits, so a foreign
-            # append would keep it. The PROOF is per-snapshot: every
-            # engine-written snapshot stamps arc.bounds.tight into its
-            # summary (below), and max_seq_bound requires the marker on
-            # EVERY snapshot in the chain before trusting bounds as
-            # attained — a foreign commit lacks the marker and demotes
-            # the claim to conservative, exactly the spec default.
-            **(
-                {"arc.bounds.tight": "true"}
-                if prev is None
-                or (prev.get("properties") or {}).get("arc.bounds.tight")
-                == "true"
-                else {}
-            ),
-        },
-        "current-snapshot-id": snapshot_id,
-        "refs": {"main": {"snapshot-id": snapshot_id, "type": "branch"}},
-        "snapshots": [
-            *([s for s in prev.get("snapshots", [])] if prev else []),
-            {
-                "snapshot-id": snapshot_id,
-                "timestamp-ms": now_ms,
-                "sequence-number": seq,
-                # per-snapshot attained-bounds marker: the evidence the
-                # metadata-only max_seq probe requires on EVERY snapshot
-                # (a table property alone survives foreign appends)
-                "summary": {
-                    "operation": operation,
-                    "arc.bounds.tight": "true",
-                    **summary,
-                },
-                "manifest-list": manifest_list,
-                "schema-id": schema_id,
-            },
-        ],
-        "snapshot-log": [
-            *(prev.get("snapshot-log", []) if prev else []),
-            {"snapshot-id": snapshot_id, "timestamp-ms": now_ms},
-        ],
-        "metadata-log": [
-            *(prev.get("metadata-log", []) if prev else []),
-            *([{"metadata-file": prev_path,
-                "timestamp-ms": int(prev.get("last-updated-ms", 0))}]
-              if prev else []),
-        ],
-    }
-    meta_path = fs_join(meta_dir, f"v{out_version}.metadata.json")
-    if not _cas_metadata(fs, None, root, meta_path,
-                         json.dumps(metadata, indent=2).encode(), out_version):
-        return None, None
-    return meta_path, manifest_list
+    return _commit(fs, root, None, "write_iceberg", derive, head)
 
 
 def compact_iceberg(
@@ -1400,7 +1197,6 @@ def compact_iceberg(
     small_file_mb: int = 32,
     target_file_mb: int = 128,
     min_input_files: int = 4,
-    _retry: int = 0, _out: tuple | None = None,
 ) -> dict:
     """Bin-pack an append-only landing zone's small files into
     target-sized ones, committed as one Iceberg ``replace`` snapshot.
@@ -1437,180 +1233,109 @@ def compact_iceberg(
     Returns ``{"status": "noop"|"compacted", ...}`` with file/row
     counts; reference analogue: Iceberg's RewriteDataFiles action.
     """
-    from arc_spark.lake.iceberg_read import (
-        _load_snapshot_files,
-        resolve_metadata_file,
-    )
-
     fs = get_fs(root, spark)
-    prev_path = resolve_metadata_file(fs, root, prefer_hint=False)
-    prev = json.loads(fs.read_bytes(prev_path))
-    if prev.get("current-snapshot-id") is None:
+    head = _head(fs, root)
+    if head.prev is None:
+        raise FileNotFoundError(f"no Iceberg metadata under {root}")
+    if head.prev.get("current-snapshot-id") is None:
         return {"status": "noop", "reason": "no current snapshot"}
-    data_files, deletes = _load_snapshot_files(
-        fs, prev, with_stats=True, with_bounds=True
-    )
-    if deletes:
-        raise ValueError(
-            "compact_iceberg maintains append-only landing zones; this "
-            "table carries delete files — it belongs to an upsert writer "
-            "(use LakeTable.compact for the lake's own tables)"
-        )
-    # foreign manifests may omit stats; fill from footers once
-    need = [t[0] for t in data_files if t[2] is None or t[3] is None]
-    if need:
-        fixed = dict(zip(need, _pooled_stats(fs, need)))
-        data_files = [
-            (p, s, *(fixed[p] if p in fixed else (n, sz)), a, b)
-            for p, s, n, sz, a, b in data_files
-        ]
-
-    if _out is None:
-        small = [t for t in data_files if t[3] < small_file_mb * 1024 * 1024]
-        if len(small) < min_input_files:
-            return {"status": "noop", "small_files": len(small),
-                    "min_input_files": min_input_files}
-        small_paths = [t[0] for t in small]
-        total_bytes = sum(t[3] for t in small)
-        n_out = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
-        out_dir = fs_join(root, "data", f"compact-{uuid.uuid4().hex[:12]}")
-        (spark.read.option("mergeSchema", "true").parquet(*small_paths)
-             .coalesce(int(n_out)).write.mode("overwrite")
-             .parquet(out_dir))
-    else:
-        # CAS-loss retry: the packed output and input set are fixed; only
-        # the metadata derivation repeats against the winner's chain
-        out_dir, small_paths = _out
-        live = {t[0] for t in data_files}
-        gone = [p for p in small_paths if p not in live]
-        if gone:
-            raise RuntimeError(
-                "compact_iceberg: a concurrent rewrite removed "
-                f"{len(gone)} of this compaction's input files (e.g. "
-                f"{gone[0]}) — two compactors are racing; run one"
-            )
-    small_set = set(small_paths)
-    kept = [t for t in data_files if t[0] not in small_set]
-    small = [t for t in data_files if t[0] in small_set]
+    refusal = ("compact_iceberg maintains append-only landing zones; this "
+               "table carries delete files — it belongs to an upsert writer "
+               "(use LakeTable.compact for the lake's own tables)")
+    small = [f for f in _append_only(head, refusal)
+             if f.size < small_file_mb * 1024 * 1024]
+    if len(small) < min_input_files:
+        return {"status": "noop", "small_files": len(small),
+                "min_input_files": min_input_files}
+    small_paths = {f.path for f in small}
+    total_bytes = sum(f.size for f in small)
+    n_out = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
+    out_dir = fs_join(root, "data", f"compact-{uuid.uuid4().hex[:12]}")
+    (_read_data(spark, head.prev, [f.path for f in small])
+        .coalesce(int(n_out)).write.mode("overwrite").parquet(out_dir))
     new_files = sorted(
         fs_join(out_dir, name) for name in fs.listdir(out_dir)
         if name.endswith(".parquet")
     )
-
-    m = re.match(r".*v(\d+)\.metadata\.json$", prev_path)
-    out_version = int(m.group(1)) + 1
-    seq = int(prev.get("last-sequence-number", 0)) + 1
-    snapshot_id = max(s["snapshot-id"] for s in prev["snapshots"]) + 1
-    now_ms = max(int(time.time() * 1000),
-                 int(prev.get("last-updated-ms", 0)) + 1)
-    rewrite_seq = max(t[1] for t in small)  # newest input's data sequence
-
-    entries, kept_rows = [], 0
-    # current schema verbatim: a rewrite never evolves the schema
-    schema_id = int(prev.get("current-schema-id", 0))
-    schemas = list(prev.get("schemas") or [])
-    if not schemas and prev.get("schema"):
-        # v1-style metadata: single "schema" field instead of history
-        schemas = [{**prev["schema"], "schema-id": schema_id}]
-    schema_json = next(
-        (s for s in schemas if s.get("schema-id") == schema_id), None
+    packed = _pooled_stats_multi(
+        fs, new_files, _numeric_bound_cols(_current_schema(head.prev)["fields"])
     )
-    if schema_json is None:
-        raise ValueError(
-            f"compact_iceberg: current schema id {schema_id} not found in "
-            f"{prev_path} — table metadata carries no resolvable schema"
-        )
-
-    num_cols = _numeric_bound_cols(schema_json["fields"])
-    for path, fseq, n, size, added_by, (lo_b, hi_b) in kept:  # EXISTING
-        kept_rows += n
-        entries.append({
-            "status": 0,
-            "snapshot_id": added_by if added_by is not None else snapshot_id,
-            "sequence_number": fseq,
-            "file_sequence_number": fseq,
-            "data_file": {
-                "content": 0, "file_path": path, "file_format": "PARQUET",
-                "partition": {}, "record_count": n,
-                "file_size_in_bytes": size,
-                "lower_bounds": lo_b, "upper_bounds": hi_b,
-                "equality_ids": None,
-            },
-        })
-    packed_rows = 0
-    for path, (n, size, bnds) in zip(
-        new_files, _pooled_stats_multi(fs, new_files, num_cols)
-    ):
-        packed_rows += n
-        lo_b, hi_b = _bounds_cells(bnds, num_cols)
-        entries.append({
-            "status": 1,  # ADDED — but by a replace: appends-consumers skip
-            "snapshot_id": snapshot_id,
-            "sequence_number": rewrite_seq,
-            "file_sequence_number": seq,
-            "data_file": {
-                "content": 0, "file_path": path, "file_format": "PARQUET",
-                "partition": {}, "record_count": n,
-                "file_size_in_bytes": size,
-                # a bin-pack merges files, so its bounds are the inputs'
-                # union — recomputed from the packed footer, never guessed
-                "lower_bounds": lo_b, "upper_bounds": hi_b,
-                "equality_ids": None,
-            },
-        })
-    in_rows = sum(t[2] for t in small)
+    packed_rows = sum(n for n, _, _ in packed)
+    in_rows = sum(f.rows for f in small)
     if packed_rows != in_rows:
         raise RuntimeError(
             f"compact_iceberg: packed {packed_rows} rows from {in_rows} "
             "input rows — refusing to commit a lossy rewrite"
         )
-    name_mapping = json.loads(
-        (prev.get("properties") or {}).get("schema.name-mapping.default", "[]")
-    )
-    meta_path, manifest_list = _publish_landing_snapshot(
-        fs, root,
-        prev=prev, prev_path=prev_path,
-        uid=f"c{out_version}-{uuid.uuid4().hex[:16]}",
-        entries=entries, seq=seq,
-        min_seq=min([t[1] for t in kept] + [rewrite_seq]),
-        snapshot_id=snapshot_id, out_version=out_version, now_ms=now_ms,
-        operation="replace",
-        summary={"added-data-files": str(len(new_files)),
-                 "deleted-data-files": str(len(small)),
-                 "added-records": str(packed_rows),
-                 "deleted-records": str(in_rows)},
-        schemas=schemas, schema_id=schema_id, schema_json=schema_json,
-        name_mapping=name_mapping,
-        last_col_id=int(prev.get("last-column-id", 0)),
-        counts=(len(new_files), len(kept), len(small),
-                packed_rows, kept_rows, in_rows),
-    )
-    if meta_path is None:
-        if _retry >= 3:
+
+    def derive(head: _Head):
+        files = _append_only(head, refusal)
+        gone = small_paths - {f.path for f in files}
+        if gone:
             raise RuntimeError(
-                f"compact_iceberg: lost the metadata CAS at {root} "
-                f"v{out_version} 3 times — writers are racing faster than "
-                "the retry budget"
+                "compact_iceberg: a concurrent rewrite removed "
+                f"{len(gone)} of this compaction's input files (e.g. "
+                f"{min(gone)}) — two compactors are racing; run one"
             )
-        return compact_iceberg(
-            spark, root, small_file_mb=small_file_mb,
-            target_file_mb=target_file_mb, min_input_files=min_input_files,
-            _retry=_retry + 1, _out=(out_dir, small_paths),
+        kept = [f for f in files if f.path not in small_paths]
+        # newest input's data sequence
+        rewrite_seq = max(f.seq for f in files if f.path in small_paths)
+        # current schema verbatim: a rewrite never evolves the schema
+        schema_json = _current_schema(head.prev)
+        schema_id = int(head.prev.get("current-schema-id", 0))
+        schemas = head.prev.get("schemas") or [{**schema_json, "schema-id": schema_id}]
+        num_cols = _numeric_bound_cols(schema_json["fields"])
+        sid = head.snapshot_id
+        entries = _carried(kept, sid) + [
+            # ADDED — but by a replace: appends-consumers skip it. A
+            # bin-pack merges files, so its bounds are the inputs' union,
+            # recomputed from the packed footer, never guessed
+            _entry(1, sid, rewrite_seq, path, n, size, file_seq=head.seq,
+                   bounds=_bounds_cells(bnds, num_cols))
+            for path, (n, size, bnds) in zip(new_files, packed)
+        ]
+        manifest_list = _write_manifest(
+            fs, head, sid, head.seq, schema_json, schema_id,
+            [(0, entries, head.seq, min([f.seq for f in kept] + [rewrite_seq]))],
+            deleted=(len(small), in_rows),
         )
-    return {
-        "status": "compacted",
-        "metadata": meta_path,
-        "manifest_list": manifest_list,
-        "input_files": len(small),
-        "output_files": len(new_files),
-        "rows": packed_rows,
-        "kept_files": len(kept),
-        "snapshot_id": snapshot_id,
-    }
+        name_mapping = (head.prev.get("properties") or {}).get(
+            "schema.name-mapping.default", "[]")
+        metadata = _snapshot_metadata(
+            head, snapshot_id=sid, seq=head.seq, manifest_list=manifest_list,
+            schemas=schemas, schema_id=schema_id, last_col_id=0,
+            properties=_landing_properties(head, name_mapping),
+            summary={"operation": "replace", "arc.bounds.tight": "true",
+                     "added-data-files": str(len(new_files)),
+                     "deleted-data-files": str(len(small)),
+                     "added-records": str(packed_rows),
+                     "deleted-records": str(in_rows)},
+        )
+        return metadata, {
+            "status": "compacted",
+            "metadata": head.path,
+            "manifest_list": manifest_list,
+            "input_files": len(small),
+            "output_files": len(new_files),
+            "rows": packed_rows,
+            "kept_files": len(kept),
+            "snapshot_id": sid,
+        }
+
+    return _commit(fs, root, None, "compact_iceberg", derive, head)
 
 
-def expire_iceberg_landing(spark, root: str, *, keep_last: int = 2,
-                           _retry: int = 0) -> dict:
+def _files_and_avros(fs, snapshot: dict):
+    """(every file path an entry references, manifest avro names)."""
+    paths, avros = set(), {snapshot["manifest-list"].rsplit("/", 1)[-1]}
+    for m, e in _walk(fs, snapshot):
+        avros.add(m["manifest_path"].rsplit("/", 1)[-1])
+        if e is not None:
+            paths.add(e["data_file"]["file_path"])
+    return paths, avros
+
+
+def expire_iceberg_landing(spark, root: str, *, keep_last: int = 2) -> dict:
     """Expire old snapshots of an append-only landing zone and reclaim
     the files only they reference — the space-recovery half of
     :func:`compact_iceberg` (the rewrite keeps its small input files on
@@ -1619,124 +1344,80 @@ def expire_iceberg_landing(spark, root: str, *, keep_last: int = 2,
 
     Keeps the newest ``keep_last`` snapshots (the current one always
     survives), commits a new metadata version listing only the
-    survivors, then deletes data files and manifest Avros referenced by
-    no survivor. Old ``v*.metadata.json`` files stay on disk, as real
-    Iceberg leaves them. A consumer whose ``read_iceberg_appends``
-    cursor names an expired snapshot gets that function's explicit
-    re-bootstrap error rather than silent row loss. Maintenance owns
-    the table while this runs (the lake-GC discipline); a CAS loss to a
-    racing appender re-derives once against the winner's chain.
+    survivors through the one CAS loop every Iceberg commit runs (a loss
+    to a racing appender re-derives against the winner's chain), then
+    deletes data files and manifest Avros referenced by no survivor.
+    Old ``v*.metadata.json`` files stay on disk, as real Iceberg leaves
+    them. A consumer whose ``read_iceberg_appends`` cursor names an
+    expired snapshot gets that function's explicit re-bootstrap error
+    rather than silent row loss. Maintenance owns the table while this
+    runs (the lake-GC discipline).
 
     Mirrors Iceberg's own ``expire_snapshots`` semantics;
     :func:`expire_iceberg_snapshots` is the sibling for lake-mirror
     exports (where file liveness is decided by the lake GC, not age).
     """
-    from arc_spark.formats.avro import read_ocf_bytes
-    from arc_spark.lake.iceberg_read import resolve_metadata_file
-
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     fs = get_fs(root, spark)
-    meta_dir = fs_join(root, "metadata")
-    meta_path = resolve_metadata_file(fs, root, prefer_hint=False)
-    meta = json.loads(fs.read_bytes(meta_path))
-    snaps = sorted(meta.get("snapshots", []),
-                   key=lambda s: int(s.get("sequence-number", 0)))
-    if len(snaps) <= keep_last:
-        return {"status": "noop", "snapshots": len(snaps),
-                "keep_last": keep_last}
-    kept, dropped = snaps[-keep_last:], snaps[:-keep_last]
 
-    def _files_and_avros(snapshot):
-        """(every data-file path an entry references, manifest avros)."""
-        paths, avros = set(), [snapshot["manifest-list"]]
-        _, manifests = read_ocf_bytes(fs.read_bytes(snapshot["manifest-list"]))
-        for m in manifests:
-            avros.append(m["manifest_path"])
-            _, entries = read_ocf_bytes(fs.read_bytes(m["manifest_path"]))
-            for e in entries:
-                paths.add(e["data_file"]["file_path"])
-        return paths, avros
+    def derive(head: _Head):
+        if head.prev is None:
+            raise FileNotFoundError(f"no Iceberg metadata under {root}")
+        snaps = sorted(head.prev.get("snapshots", []),
+                       key=lambda s: int(s.get("sequence-number", 0)))
+        if len(snaps) <= keep_last:
+            return None, ({"status": "noop", "snapshots": len(snaps),
+                           "keep_last": keep_last}, [], set())
+        kept, dropped = snaps[-keep_last:], snaps[:-keep_last]
+        keep_files, keep_avro = set(), set()
+        for s in kept:
+            p, a = _files_and_avros(fs, s)
+            keep_files |= p
+            keep_avro |= a
+        drop_files, drop_avro = set(), set()
+        for s in dropped:
+            try:
+                p, a = _files_and_avros(fs, s)
+            except FileNotFoundError:
+                continue  # already half-expired
+            drop_files |= p
+            drop_avro |= a
+        # Attained-bounds laundering guard: max_seq_bound proves exactness
+        # from per-snapshot summary markers, but files a foreign snapshot
+        # ADDED can outlive it as EXISTING entries in later engine
+        # snapshots. Expiring an UNMARKED snapshot would then leave a
+        # chain where every listed snapshot is marked while a foreign
+        # (merely conservative) bound is still live — so if any dropped
+        # snapshot lacks the marker, strip the table property for good,
+        # exactly the "one foreign commit and the claim is gone"
+        # semantics the property documents.
+        props = dict(head.prev.get("properties") or {})
+        if props.get("arc.bounds.tight") == "true" and any(
+            (s.get("summary") or {}).get("arc.bounds.tight") != "true"
+            for s in dropped
+        ):
+            props.pop("arc.bounds.tight", None)
+        reap = sorted(drop_files - keep_files)
+        return _expired(head, kept, properties=props), ({
+            "status": "expired",
+            "snapshots_kept": len(kept),
+            "snapshots_dropped": len(dropped),
+            "data_files_deleted": len(reap),
+        }, reap, drop_avro - keep_avro)
 
-    keep_files, keep_avro = set(), set()
-    for s in kept:
-        p, a = _files_and_avros(s)
-        keep_files |= p
-        keep_avro |= {x.rsplit("/", 1)[-1] for x in a}
-    drop_files, drop_avro = set(), set()
-    for s in dropped:
-        try:
-            p, a = _files_and_avros(s)
-        except FileNotFoundError:
-            continue  # already half-expired
-        drop_files |= p
-        drop_avro |= {x.rsplit("/", 1)[-1] for x in a}
-    reap = sorted(drop_files - keep_files)
-
-    keep_ids = {s["snapshot-id"] for s in kept}
-    m = re.match(r".*v(\d+)\.metadata\.json$", meta_path)
-    out_version = int(m.group(1)) + 1
-    # Attained-bounds laundering guard: max_seq_bound proves exactness
-    # from per-snapshot summary markers, but files a foreign snapshot
-    # ADDED can outlive it as EXISTING entries in later engine snapshots.
-    # Expiring an UNMARKED snapshot would then leave a chain where every
-    # listed snapshot is marked while a foreign (merely conservative)
-    # bound is still live — so if any dropped snapshot lacks the marker,
-    # strip the table property for good, exactly the "one foreign commit
-    # and the claim is gone" semantics the property documents.
-    props = dict(meta.get("properties") or {})
-    if props.get("arc.bounds.tight") == "true" and any(
-        (s.get("summary") or {}).get("arc.bounds.tight") != "true"
-        for s in dropped
-    ):
-        props.pop("arc.bounds.tight", None)
-    new_meta = {
-        **meta,
-        "properties": props,
-        "last-updated-ms": max(
-            int(time.time() * 1000), int(meta.get("last-updated-ms", 0)) + 1
-        ),
-        "snapshots": kept,
-        "snapshot-log": [
-            e for e in meta.get("snapshot-log", [])
-            if e["snapshot-id"] in keep_ids
-        ],
-        "metadata-log": [
-            *meta.get("metadata-log", []),
-            {"metadata-file": meta_path,
-             "timestamp-ms": int(meta.get("last-updated-ms", 0))},
-        ],
-    }
-    if not _cas_metadata(
-        fs, None, root, fs_join(meta_dir, f"v{out_version}.metadata.json"),
-        json.dumps(new_meta, indent=2).encode(), out_version,
-    ):
-        if _retry >= 3:
-            raise RuntimeError(
-                f"expire_iceberg_landing: lost the metadata CAS at {root} "
-                f"v{out_version} 3 times"
-            )
-        return expire_iceberg_landing(spark, root, keep_last=keep_last,
-                                      _retry=_retry + 1)
+    result, reap, avros = _commit(fs, root, None, "expire_iceberg_landing",
+                                  derive)
     # the new version is committed: nothing can reach the dropped
-    # snapshots through the chain head anymore — reap their exclusives
-    for p in reap:
+    # snapshots through the chain head anymore — reap their exclusives.
+    # The avro reap is scoped to the DROPPED snapshots' manifests — never
+    # a blanket "everything unknown" sweep, which would race a concurrent
+    # appender's just-committed manifests and leave the table head
+    # dangling
+    meta_dir = fs_join(root, "metadata")
+    for p in [*reap, *(fs_join(meta_dir, n) for n in sorted(avros))]:
         try:
             fs.delete(p)
         except FileNotFoundError:
             pass
-    # avro reap scoped to the DROPPED snapshots' manifests — never a
-    # blanket "everything unknown" sweep, which would race a concurrent
-    # appender's just-committed manifests (the one race the docstring
-    # promises to survive) and leave the table head dangling
-    for name in sorted(drop_avro - keep_avro):
-        try:
-            fs.delete(fs_join(meta_dir, name))
-        except FileNotFoundError:
-            pass
-    return {
-        "status": "expired",
-        "snapshots_kept": len(kept),
-        "snapshots_dropped": len(dropped),
-        "data_files_deleted": len(reap),
-    }
+    return result

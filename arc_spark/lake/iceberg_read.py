@@ -23,7 +23,8 @@ Scan semantics implemented:
   data files with a smaller-or-equal data sequence number (spec rule);
 - column resolution: ``schema.name-mapping.default`` when present (the
   spec's mechanism for id-less files — also how renames surface), else
-  direct name match; columns cast to the Iceberg schema's types.
+  direct name match; files are read under the current Iceberg schema's
+  types, never a footer-inferred schema (``_read_data``).
 
 Limitations (documented, loud): parquet data files only (the format this
 engine's whole stack speaks), no merge-on-read ``row-lineage``/v3
@@ -42,6 +43,7 @@ from __future__ import annotations
 
 import json
 import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,22 +132,44 @@ def resolve_metadata_file(fs, table_path: str, *,
     return fs_join(meta_dir, best[1])
 
 
-def _load_snapshot_files(fs, meta: dict, snapshot_id=None, *,
-                         with_stats: bool = False,
-                         with_bounds: bool = False):
-    """(data_files, deletes) for the chosen snapshot.
+def _walk(fs, snap: dict, keep=None):
+    """Yield ``(manifest record, entry)`` for every entry of ``snap``'s
+    manifests — the one manifest walker readers, writers and both
+    expiries share. ``keep(record)`` skips a manifest without parsing
+    it; a manifest with no entries yields ``(record, None)`` once, so a
+    caller collecting manifest paths still sees it."""
+    _, manifests = read_ocf_bytes(fs.read_bytes(snap["manifest-list"]))
+    for m in manifests:
+        if keep is not None and not keep(m):
+            continue
+        _, entries = read_ocf_bytes(fs.read_bytes(m["manifest_path"]))
+        if not entries:
+            yield m, None
+        for e in entries:
+            yield m, e
 
-    data_files: [(path, data_seq)]; deletes: [(path, seq, content,
-    equality_ids)] with content 1=position, 2=equality.
 
-    ``with_stats=True`` widens each data_files tuple to (path, data_seq,
-    record_count, file_size_in_bytes, added_snapshot_id) so appenders
-    can carry prior entries forward without re-reading N parquet footers
-    per commit (the stats are already in the manifest being parsed).
-    ``with_bounds=True`` appends one more element: the raw
-    (lower_bounds, upper_bounds) cell lists exactly as the manifest
-    carries them (list of {key: field-id, value: bytes} or None) —
-    appenders pass them through, readers decode for scan pruning."""
+class DataFile(NamedTuple):
+    """One live data file of a snapshot, as its manifest entry lists it.
+    ``bounds`` is the raw (lower_bounds, upper_bounds) cell lists
+    ({key: field-id, value: bytes} or None): appenders pass them
+    through, readers decode them for scan pruning."""
+
+    path: str
+    seq: int
+    rows: int | None
+    size: int | None
+    added_by: int | None
+    bounds: tuple
+
+
+def _load_snapshot_files(fs, meta: dict, snapshot_id=None):
+    """(data_files, deletes) for the chosen snapshot (current by default).
+
+    data_files: [DataFile]; deletes: [(path, seq, content,
+    equality_ids)] with content 1=position, 2=equality. DELETED entries
+    are skipped, and a null entry sequence number inherits the
+    manifest's (v2 inheritance rule)."""
     if snapshot_id is None:
         snapshot_id = meta.get("current-snapshot-id")
     snap = next(
@@ -158,36 +182,24 @@ def _load_snapshot_files(fs, meta: dict, snapshot_id=None, *,
             f"snapshot {snapshot_id} not found; available: "
             f"{[s['snapshot-id'] for s in meta.get('snapshots', [])]}"
         )
-    _, manifests = read_ocf_bytes(fs.read_bytes(snap["manifest-list"]))
     data_files, deletes = [], []
-    for m in manifests:
-        m_seq = m.get("sequence_number", 0)
-        _, entries = read_ocf_bytes(fs.read_bytes(m["manifest_path"]))
-        for e in entries:
-            if e.get("status") == 2:  # DELETED entry: file left the table
-                continue
-            seq = e.get("sequence_number")
-            if seq is None:
-                seq = m_seq  # v2 inheritance from the manifest entry
-            d = e["data_file"]
-            content = d.get("content", 0)
-            if content == 0:
-                if with_stats:
-                    t = (
-                        d["file_path"], seq,
-                        d.get("record_count"),
-                        d.get("file_size_in_bytes"),
-                        e.get("snapshot_id"),
-                    )
-                else:
-                    t = (d["file_path"], seq)
-                if with_bounds:
-                    t = t + ((d.get("lower_bounds"), d.get("upper_bounds")),)
-                data_files.append(t)
-            elif content == 1:
-                deletes.append((d["file_path"], seq, 1, None))
-            elif content == 2:
-                deletes.append((d["file_path"], seq, 2, d.get("equality_ids")))
+    for m, e in _walk(fs, snap):
+        if e is None or e.get("status") == 2:  # DELETED: file left the table
+            continue
+        seq = e.get("sequence_number")
+        if seq is None:
+            seq = m.get("sequence_number", 0)
+        d = e["data_file"]
+        content = d.get("content", 0)
+        if content == 0:
+            data_files.append(DataFile(
+                d["file_path"], seq, d.get("record_count"),
+                d.get("file_size_in_bytes"), e.get("snapshot_id"),
+                (d.get("lower_bounds"), d.get("upper_bounds")),
+            ))
+        else:
+            deletes.append((d["file_path"], seq, content,
+                            d.get("equality_ids") if content == 2 else None))
     return data_files, deletes
 
 
@@ -254,27 +266,22 @@ def max_seq_bound(table_path: str, *, seq_field: str = "seq",
         s.get("snapshot-id") == cur for s in meta.get("snapshots", [])
     ):
         return None, True  # created but never committed to
-    schema_id = meta.get("current-schema-id", 0)
-    schema = next(
-        (s for s in meta.get("schemas", []) if s.get("schema-id") == schema_id),
-        meta.get("schema"),
-    )
-    if schema is None:
+    try:
+        schema = _current_schema(meta)
+    except ValueError:
         return None, False
     fid = next(
         (f["id"] for f in schema["fields"] if f["name"] == seq_field), None
     )
     if fid is None:
         return None, True  # column absent -> vacuously empty
-    data_files, deletes = _load_snapshot_files(
-        fs, meta, with_stats=True, with_bounds=True
-    )
+    data_files, deletes = _load_snapshot_files(fs, meta)
     best, any_rows = None, False
-    for _p, _s, n, _sz, _a, (_lo, hi_raw) in data_files:
-        if n == 0:
+    for f in data_files:
+        if f.rows == 0:
             continue
         any_rows = True
-        hi = _decode_num_bound(hi_raw, fid)
+        hi = _decode_num_bound(f.bounds[1], fid)
         if hi is None:
             return None, False  # a file without bounds could hold the max
         best = hi if best is None else max(best, hi)
@@ -297,26 +304,47 @@ def max_seq_bound(table_path: str, *, seq_field: str = "seq",
     return best, tight and not deletes
 
 
-def _schema_projection(fields, nm, present_cols):
-    """Select-list projecting raw parquet columns onto the Iceberg
-    schema: name-mapping candidates coalesced, spec types cast, columns
-    added after a file was written filled with typed nulls."""
-    sel = []
+def _current_schema(meta: dict) -> dict:
+    """The metadata's current schema (v2 ``schemas`` history, or the v1
+    single ``schema`` field)."""
+    sid = meta.get("current-schema-id", 0)
+    for s in meta.get("schemas") or [meta.get("schema")]:
+        if s and s.get("schema-id", 0) == sid:
+            return s
+    raise ValueError(f"current schema id {sid} not found in the table metadata")
+
+
+def _ddl(fields) -> str:
+    return ", ".join(f"`{f['name']}` {_spark_type(f['type'])}" for f in fields)
+
+
+def _read_data(spark, meta: dict, paths, *extra) -> DataFrame:
+    """Data files read under the metadata's current schema — the one data
+    read every Iceberg reader and the compactor share. The scan is handed
+    the schema plus each ``schema.name-mapping.default`` alias typed as
+    its field, so Spark infers and merges no footers (a footer merge
+    rejects an int file beside a long one, which a legal int->long
+    promotion leaves behind; the parquet readers widen int->long and
+    float->double on read). Each field coalesces its names (the current
+    one first); a column missing from a file reads NULL. ``extra``
+    columns (e.g. ``_metadata`` fields) ride along in the projection."""
+    fields = _current_schema(meta)["fields"]
+    props = meta.get("properties") or {}
+    nm = {e["field-id"]: e["names"]
+          for e in json.loads(props.get("schema.name-mapping.default", "[]"))}
+    taken = {f["name"].lower() for f in fields}
+    read, sel = list(fields), []
     for f in fields:
-        name, target = f["name"], _spark_type(f["type"])
-        candidates = [name]
-        if nm and f["id"] in nm:
-            candidates = list(nm[f["id"]]) + [name]
-        present = [c for c in candidates if c in present_cols]
-        if present:
-            col = F.coalesce(*[F.col(f"`{c}`") for c in present]) if len(
-                present
-            ) > 1 else F.col(f"`{present[0]}`")
-            sel.append(col.cast(target).alias(name))
-        else:
-            # column added to the schema after these files were written
-            sel.append(F.lit(None).cast(target).alias(name))
-    return sel
+        names = [f["name"]]
+        for a in nm.get(f["id"], ()):
+            if a.lower() not in taken:
+                taken.add(a.lower())
+                names.append(a)
+                read.append({"name": a, "type": f["type"]})
+        cols = [F.col(f"`{n}`") for n in names]
+        sel.append((F.coalesce(*cols) if len(cols) > 1 else cols[0]).alias(f["name"]))
+    df = spark.read.schema(_ddl(read)).parquet(*paths)
+    return df.select(*sel, *extra)
 
 
 def read_iceberg(
@@ -350,45 +378,30 @@ def read_iceberg(
         raise ValueError(
             f"format-version {meta['format-version']} not supported (v1/v2)"
         )
-    schemas = meta.get("schemas") or [meta.get("schema")]
-    by_id = {s.get("schema-id", 0): s for s in schemas if s}
-    schema = by_id.get(meta.get("current-schema-id", 0)) or schemas[0]
-    fields = schema["fields"]
+    fields = _current_schema(meta)["fields"]
     id_to_name = {f["id"]: f["name"] for f in fields}
 
-    pruning = min_seq is not None or max_seq is not None
-    data_files, deletes = _load_snapshot_files(
-        fs, meta, snapshot_id, with_stats=pruning, with_bounds=pruning,
-    )
-    if pruning:
+    data_files, deletes = _load_snapshot_files(fs, meta, snapshot_id)
+    if min_seq is not None or max_seq is not None:
         fid = next((f["id"] for f in fields if f["name"] == seq_field), None)
         kept = []
-        for p, s, n, _sz, _a, (lo_raw, hi_raw) in data_files:
-            if n == 0:
+        for f in data_files:
+            if f.rows == 0:
                 continue  # foreign tables may manifest empty files
             if min_seq is not None:
-                hi = _decode_num_bound(hi_raw, fid) if fid is not None else None
+                hi = _decode_num_bound(f.bounds[1], fid) if fid is not None else None
                 if hi is not None and hi <= min_seq:
                     continue  # entirely behind the resume cursor
             if max_seq is not None:
-                lo = _decode_num_bound(lo_raw, fid) if fid is not None else None
+                lo = _decode_num_bound(f.bounds[0], fid) if fid is not None else None
                 if lo is not None and lo > max_seq:
                     continue  # entirely ahead of the epoch window
-            kept.append((p, s))
+            kept.append(f)
         data_files = kept
     if not data_files:
-        ddl = ", ".join(
-            f"`{f['name']}` {_spark_type(f['type'])}" for f in fields
-        )
         from arc_spark.schema import empty_df
 
-        return empty_df(spark, ddl)
-
-    nm = None
-    props = meta.get("properties") or {}
-    if "schema.name-mapping.default" in props:
-        nm = {e["field-id"]: e["names"]
-              for e in json.loads(props["schema.name-mapping.default"])}
+        return empty_df(spark, _ddl(fields))
 
     if not deletes:
         # Append-only fast path (landing zones, plain exports): the
@@ -398,34 +411,19 @@ def read_iceberg(
         # is pure scan-stage overhead — measured 25-30% of replay
         # throughput on a delete-free landing tail — so read and
         # project the schema directly.
-        raw = spark.read.option("mergeSchema", "true").parquet(
-            *[p for p, _ in data_files]
-        )
-        return raw.select(*_schema_projection(fields, nm, raw.columns))
+        return _read_data(spark, meta, [f.path for f in data_files])
 
-    raw = (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*[p for p, _ in data_files])
-        .select(
-            "*",
-            F.col("_metadata.file_path").alias("_ice_file"),
-            F.col("_metadata.row_index").alias("_ice_pos"),
-        )
-    )
     # data sequence number per file (for delete applicability), attached
     # via a tiny broadcast lookup on the normalized path
     seq_df = spark.createDataFrame(
-        [(_norm_path(p), int(s)) for p, s in data_files],
+        [(_norm_path(f.path), int(f.seq)) for f in data_files],
         "_ice_file_n string, _ice_seq bigint",
     )
-    raw = raw.withColumn("_ice_file_n", _NORM_COL(F.col("_ice_file"))).join(
-        F.broadcast(seq_df), "_ice_file_n"
-    )
-
-    out = raw.select(
-        *_schema_projection(fields, nm, raw.columns),
-        "_ice_file_n", "_ice_seq", "_ice_pos",
-    )
+    out = _read_data(
+        spark, meta, [f.path for f in data_files],
+        _NORM_COL(F.col("_metadata.file_path")).alias("_ice_file_n"),
+        F.col("_metadata.row_index").alias("_ice_pos"),
+    ).join(F.broadcast(seq_df), "_ice_file_n")
 
     # Apply deletes in O(1) joins per delete KIND, not per delete FILE: a
     # filter/anti-join/union per file would double the plan at every
@@ -501,26 +499,18 @@ def _added_data_files(fs, snap: dict) -> list[str]:
     snapshot_id matches count — an EXISTING carry-forward of the same
     file must not re-read."""
     sid = snap["snapshot-id"]
-    _, manifests = read_ocf_bytes(fs.read_bytes(snap["manifest-list"]))
-    out = []
-    for m in manifests:
-        if m.get("content", 0) != 0:
-            continue  # delete manifest: nothing to read incrementally
-        added_by = m.get("added_snapshot_id")
-        if added_by is not None and added_by != sid:
-            continue
-        if m.get("added_files_count") == 0:
-            continue
-        _, entries = read_ocf_bytes(fs.read_bytes(m["manifest_path"]))
-        for e in entries:
-            if e.get("status") != 1:
-                continue
-            esid = e.get("snapshot_id")
-            if esid is not None and esid != sid:
-                continue
-            if e["data_file"].get("content", 0) == 0:
-                out.append(e["data_file"]["file_path"])
-    return out
+
+    def keep(m):  # delete manifests add nothing to read incrementally
+        return (m.get("content", 0) == 0
+                and m.get("added_snapshot_id") in (None, sid)
+                and m.get("added_files_count") != 0)
+
+    return [
+        e["data_file"]["file_path"] for _m, e in _walk(fs, snap, keep)
+        if e is not None and e.get("status") == 1
+        and e.get("snapshot_id") in (None, sid)
+        and e["data_file"].get("content", 0) == 0
+    ]
 
 
 def read_iceberg_appends(
@@ -587,7 +577,7 @@ def read_iceberg_appends(
         # bootstrap: the full current live set, never a snapshot diff —
         # surviving append snapshots may not cover rows whose original
         # files a compaction rewrote and an expiry reclaimed
-        new_paths = [p for p, _s in live_files]
+        new_paths = [f.path for f in live_files]
     else:
         new_paths = []
         for s in sorted(snaps, key=lambda s: int(s.get("sequence-number", 0))):
@@ -609,37 +599,17 @@ def read_iceberg_appends(
                 )
             new_paths.extend(_added_data_files(fs, s))
     if not new_paths:
-        schema = next(
-            s for s in (meta.get("schemas") or [meta.get("schema")])
-            if s and s.get("schema-id", 0) == meta.get("current-schema-id", 0)
-        )
-        ddl = ", ".join(
-            f"`{f['name']}` {_spark_type(f['type'])}" for f in schema["fields"]
-        )
         from arc_spark.schema import empty_df
 
-        return empty_df(spark, ddl), cur_id
-    return (
-        spark.read.option("mergeSchema", "true").parquet(*new_paths),
-        cur_id,
-    )
+        return empty_df(spark, _ddl(_current_schema(meta)["fields"])), cur_id
+    return _read_data(spark, meta, new_paths), cur_id
 
 
 def iceberg_table_schema(spark: SparkSession, table_path: str):
     """The table's CURRENT schema as a Spark StructType, resolved purely
     from the metadata JSON — zero data-file IO. The cheap alternative to
-    building a full read_iceberg scan just to call ``.schema`` (which
-    footer-reads every data file for merge inference)."""
+    building a full read_iceberg scan (manifests walked, files listed)
+    just to call ``.schema``."""
     fs = get_fs(table_path, spark)
     meta = json.loads(fs.read_bytes(resolve_metadata_file(fs, table_path)))
-    schema = next(
-        (s for s in (meta.get("schemas") or [meta.get("schema")])
-         if s and s.get("schema-id", 0) == meta.get("current-schema-id", 0)),
-        None,
-    )
-    if schema is None:
-        raise ValueError(f"{table_path}: no current schema in metadata")
-    ddl = ", ".join(
-        f"`{f['name']}` {_spark_type(f['type'])}" for f in schema["fields"]
-    )
-    return spark.createDataFrame([], ddl).schema
+    return spark.createDataFrame([], _ddl(_current_schema(meta)["fields"])).schema

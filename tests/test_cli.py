@@ -19,6 +19,12 @@ def _run(*argv: str, env_extra: dict | None = None) -> subprocess.CompletedProce
     )
 
 
+# the 1024-bucket example configs read an optional ``numBuckets`` override
+# (HOCON ``${?num.buckets}``, resolved from the environment), so a
+# 2000-event test stream need not pay for the shipped 10^10-row bucket count
+_SMALL = {"num.buckets": "8"}
+
+
 def test_cli_runs_job_with_params(tmp_path):
     src = tmp_path / "in.csv"
     src.write_text("id,v\n1,a\n2,b\n3,c\n")
@@ -166,6 +172,7 @@ def test_example_replay_config_runs(tmp_path):
         f"--events.uri={stream}",
         f"--table.uri={tmp_path / 'lake'}",
         f"--quarantine.uri={tmp_path / 'quarantine'}",
+        env_extra=_SMALL,
     )
     assert r.returncode == 0, r.stderr[-3000:]
     events = [json.loads(line) for line in r.stderr.splitlines() if line.startswith("{")]
@@ -249,14 +256,14 @@ def test_example_bootstrap_config_runs(tmp_path):
         f"--events.uri={stream}",
         f"--table.uri={tmp_path / 'lake'}",
     )
-    r = _run(*args)
+    r = _run(*args, env_extra=_SMALL)
     assert r.returncode == 0, r.stderr[-3000:]
     events = [json.loads(l) for l in r.stderr.splitlines() if l.startswith("{")]
     epochs = [e for e in events if e.get("event") == "epoch.complete"]
     assert epochs and min(e["start_seq"] for e in epochs) == cut + 1
 
     # rerun: bootstrap fenced, stream exhausted — still succeeds
-    r2 = _run(*args)
+    r2 = _run(*args, env_extra=_SMALL)
     assert r2.returncode == 0, r2.stderr[-3000:]
     events2 = [json.loads(l) for l in r2.stderr.splitlines() if l.startswith("{")]
     assert any(e.get("event") == "exit" and e.get("status") == "success" for e in events2)

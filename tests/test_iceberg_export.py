@@ -1508,3 +1508,228 @@ def test_expiry_strips_tight_claim_when_dropping_unmarked_snapshot(spark, tmp_pa
     # all LISTED snapshots are now marked, but the claim must be gone:
     # the foreign file's bound is still live as an EXISTING entry
     assert v2 == 299 and exact2 is False
+
+
+# -- reads after a legal int -> long promotion ------------------------------
+
+def test_mirror_export_and_read_after_partial_widening(spark, tmp_path):
+    """A widening COW merge (int -> long) that rewrote one bucket leaves
+    int and long files side by side; a delta then makes the export build
+    its level statistics. The export reads the lake files under the
+    manifest schema and read_iceberg under the Iceberg schema, so neither
+    has footers to reconcile: the mirror round-trips all 8 keys."""
+    from arc_spark.lake.iceberg_read import read_iceberg
+
+    old = "repo string, path string, seq long, n int, op string"
+    new = "repo string, path string, seq long, n long, op string"
+    t = LakeTable(str(tmp_path / "wide"))
+    base = spark.createDataFrame(
+        [("r", f"p{i}", i + 1, i, "upsert") for i in range(8)], old)
+    t.create(base.drop("op").schema, ["repo", "path"], num_buckets=4)
+    t.merge(spark, base, epoch=0, start_seq=1, end_seq=8, mode="cow")
+    t.merge(spark, spark.createDataFrame([("r", "p0", 20, 2**40, "upsert")], new),
+            epoch=1, start_seq=20, end_seq=20, mode="cow")
+    t.merge(spark, spark.createDataFrame([("r", "p1", 30, 2**41, "upsert")], new),
+            epoch=2, start_seq=30, end_seq=30, mode="delta")
+    assert t.snapshot().delta_files
+
+    res = export_iceberg(spark, t)
+    assert res["live_rows"] == 8 and res["delta_levels"] == 1
+    want = t.read(spark).select("path", "seq", "n")
+    got = read_iceberg(spark, t.root).select(*want.columns)
+    assert dict(got.dtypes)["n"] == "bigint"
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    rows = {r["path"]: r["n"] for r in got.collect()}
+    assert rows["p0"] == 2**40 and rows["p1"] == 2**41 and rows["p2"] == 2
+
+
+def test_landing_reads_after_int_to_long_promotion(spark, tmp_path):
+    """A landing zone whose second batch widens ``n`` from int to long:
+    the full read, the pruned seq-cursor read, both incremental reads and
+    compaction all read under the current schema (n long) instead of
+    merging footers."""
+    from arc_spark.lake.iceberg_export import compact_iceberg, write_iceberg
+    from arc_spark.lake.iceberg_read import read_iceberg, read_iceberg_appends
+
+    root = str(tmp_path / "land")
+    r1 = write_iceberg(spark, spark.range(0, 10).selectExpr(
+        "id AS seq", "CAST(id AS INT) AS n"), root)
+    write_iceberg(spark, spark.range(10, 20).selectExpr(
+        "id AS seq", "id * 1000000000000 AS n"), root)
+    want = sorted((i, i if i < 10 else i * 10**12) for i in range(20))
+
+    def rows(df):
+        assert dict(df.dtypes)["n"] == "bigint"
+        return sorted((r["seq"], r["n"]) for r in df.collect())
+
+    assert rows(read_iceberg(spark, root)) == want
+    assert rows(read_iceberg(spark, root, min_seq=4)) == want[5:]
+    boot, _ = read_iceberg_appends(spark, root)
+    assert rows(boot) == want
+    inc, _ = read_iceberg_appends(spark, root, r1["snapshot_id"])
+    assert rows(inc) == want[10:]
+    res = compact_iceberg(spark, root, small_file_mb=32, min_input_files=2)
+    assert res["status"] == "compacted" and res["rows"] == 20
+    assert rows(read_iceberg(spark, root)) == want
+
+
+def test_export_int_seq_bounds_are_four_bytes(spark, tmp_path):
+    """The spec's single-value serialization of an ``int`` is 4-byte
+    little-endian: an exported table whose seq column is int carries
+    4-byte seq bounds that decode to the parquet footer's min/max."""
+    import struct
+
+    import pyarrow.parquet as pq
+
+    t = LakeTable(str(tmp_path / "intseq"))
+    df = spark.createDataFrame(
+        [("r", f"p{i}", i + 1, "upsert") for i in range(12)],
+        "repo string, path string, seq int, op string")
+    t.create(df.drop("op").schema, ["repo", "path"], num_buckets=3)
+    t.merge(spark, df, epoch=0, start_seq=1, end_seq=12, mode="cow")
+    res = export_iceberg(spark, t)
+    fs = LocalFS()
+    meta = json.loads(fs.read_bytes(res["metadata"]))
+    field = next(f for f in meta["schemas"][0]["fields"] if f["name"] == "seq")
+    assert field["type"] == "int"
+    _, manifests = read_ocf_bytes(fs.read_bytes(res["manifest_list"]))
+    checked = 0
+    for m in manifests:
+        _, entries = read_ocf_bytes(fs.read_bytes(m["manifest_path"]))
+        for e in entries:
+            d = e["data_file"]
+            if d["content"] != 0:
+                continue
+            cells = (d["lower_bounds"] or []) + (d["upper_bounds"] or [])
+            assert len(cells) == 2 and all(len(c["value"]) == 4 for c in cells)
+            lo = struct.unpack("<i", d["lower_bounds"][0]["value"])[0]
+            hi = struct.unpack("<i", d["upper_bounds"][0]["value"])[0]
+            md = pq.ParquetFile(d["file_path"]).metadata
+            stats = [md.row_group(i).column(j).statistics
+                     for i in range(md.num_row_groups)
+                     for j in range(md.num_columns)
+                     if md.row_group(i).column(j).path_in_schema == "seq"]
+            assert (lo, hi) == (min(s.min for s in stats), max(s.max for s in stats))
+            checked += 1
+    assert checked == res["data_files"] > 0
+
+
+# -- the one CAS loop, raced for every commit kind --------------------------
+
+def _cas_setup(spark, tmp_path, op):
+    """(root, table | None, run(fs)) for one commit kind on a small table."""
+    from arc_spark.lake.iceberg_export import (
+        compact_iceberg,
+        expire_iceberg_landing,
+        expire_iceberg_snapshots,
+        write_iceberg,
+    )
+
+    root = str(tmp_path / op)
+    if op in ("append", "compact", "expire_landing"):
+        for lo in (0, 10, 20):
+            write_iceberg(spark, spark.range(lo, lo + 10).selectExpr(
+                "id AS seq", "id * 3 AS v"), root)
+        return root, None, {
+            "append": lambda fs: write_iceberg(
+                spark, spark.range(30, 40).selectExpr("id AS seq", "id * 3 AS v"),
+                root),
+            "compact": lambda fs: compact_iceberg(
+                spark, root, small_file_mb=32, min_input_files=2),
+            "expire_landing": lambda fs: expire_iceberg_landing(
+                spark, root, keep_last=1),
+        }[op]
+    ddl = "repo string, path string, seq long, op string"
+    t = LakeTable(root)
+    base = spark.createDataFrame([("r", f"p{i}", i + 1, "upsert") for i in range(4)], ddl)
+    t.create(base.drop("op").schema, ["repo", "path"], num_buckets=2)
+    t.merge(spark, base, epoch=0, start_seq=1, end_seq=4, mode="cow")
+    export_iceberg(spark, t)
+    if op == "export":
+        return root, t, lambda fs: export_iceberg(spark, t)
+    # every file of the first export is rewritten, then exported again:
+    # the GC that keeps only the current lake files drops the first one
+    t.merge(spark, spark.createDataFrame(
+        [("r", f"p{i}", i + 10, "upsert") for i in range(4)], ddl),
+        epoch=1, start_seq=10, end_seq=13, mode="cow")
+    export_iceberg(spark, t)
+    live = set(t.snapshot().file_list())
+    return root, t, lambda fs: expire_iceberg_snapshots(fs, root, live)
+
+
+@pytest.mark.parametrize("losses", [1, 4])
+@pytest.mark.parametrize("op,what", [
+    ("append", "write_iceberg"),
+    ("compact", "compact_iceberg"),
+    ("export", "export_iceberg"),
+    ("expire_mirror", "expire_iceberg_snapshots"),
+    ("expire_landing", "expire_iceberg_landing"),
+])
+def test_every_commit_kind_retries_a_lost_cas(spark, tmp_path, monkeypatch,
+                                              op, what, losses):
+    """Each Iceberg commit kind runs the one CAS loop: a concurrent writer
+    publishing the target metadata version first (here: a re-commit of
+    the current snapshot under a new id) makes the commit re-derive
+    against the winner's chain and publish the next version, keeping the
+    winner's snapshot; losing 4 times raises a RuntimeError naming the
+    operation. A raced landing append writes its batch once."""
+    import os
+
+    import arc_spark.lake.iceberg_export as ice
+    from arc_spark.lake.iceberg_read import resolve_metadata_file
+
+    root, table, run = _cas_setup(spark, tmp_path, op)
+    inner = LocalFS()
+    start = resolve_metadata_file(inner, root)
+    start_v = int(start.rsplit("/v", 1)[1].split(".")[0])
+
+    class RacedFS:
+        """The next ``left`` metadata commits lose to a racing writer."""
+
+        def __init__(self):
+            self.left, self.winners = losses, []
+
+        def __getattr__(self, name):
+            return getattr(inner, name)
+
+        def create_exclusive(self, path, data):
+            if self.left and path.endswith(".metadata.json"):
+                self.left -= 1
+                head = json.loads(inner.read_bytes(resolve_metadata_file(inner, root)))
+                cur = next(s for s in head["snapshots"]
+                           if s["snapshot-id"] == head["current-snapshot-id"])
+                sid = 900 + len(self.winners)
+                seq = head["last-sequence-number"] + 1
+                self.winners.append(sid)
+                inner.write_bytes(path, json.dumps({
+                    **head, "last-sequence-number": seq,
+                    "snapshots": [*head["snapshots"],
+                                  {**cur, "snapshot-id": sid, "sequence-number": seq}],
+                    "current-snapshot-id": sid,
+                    "refs": {"main": {"snapshot-id": sid, "type": "branch"}},
+                }).encode())
+            return inner.create_exclusive(path, data)
+
+    raced = RacedFS()
+    monkeypatch.setattr(ice, "get_fs", lambda *a, **k: raced)
+    if table is not None:
+        table._fs = raced
+
+    def append_dirs():
+        return [n for n in os.listdir(f"{root}/data") if n.startswith("append-")]
+
+    before = append_dirs() if op == "append" else None
+    if losses == 4:
+        with pytest.raises(RuntimeError, match=what):
+            run(raced)
+    else:
+        run(raced)
+        head = resolve_metadata_file(inner, root)
+        assert head.endswith(f"v{start_v + 2}.metadata.json")
+        meta = json.loads(inner.read_bytes(head))
+        assert raced.winners[0] in [s["snapshot-id"] for s in meta["snapshots"]]
+        sids = [s["snapshot-id"] for s in meta["snapshots"]]
+        assert len(sids) == len(set(sids))
+    assert raced.left == 0 and len(raced.winners) == losses
+    if op == "append":
+        assert len(append_dirs()) == len(before) + 1
