@@ -40,9 +40,12 @@ implement three interchangeable strategies and verify they agree:
     boundaries (no per-row Python).
 
 All strategies produce identical output when (keys, seq) is unique (the
-native generator's invariant); :func:`dedup_by_key` makes it unique first
-by collapsing verbatim re-deliveries (:func:`collapse_redelivered`, fused
-into the unsalted thin aggregate).
+native generator's invariant). :func:`dedup_by_key` also collapses
+verbatim re-deliveries: ``window``, ``sort_partitions`` and salted
+``thin`` run :func:`collapse_redelivered` first; unsalted ``thin`` takes
+:func:`lww_thin_collapse_redelivered`, whose one thin aggregate counts
+the copies and collapses them among its winners, so an at-least-once
+epoch costs one thin aggregate and one checkpoint, like a clean one.
 """
 
 from __future__ import annotations
@@ -346,37 +349,62 @@ def collapse_redelivered(
 def lww_thin_collapse_redelivered(
     df: DataFrame, keys: list[str], seq_col: str = "seq"
 ) -> tuple[DataFrame, int]:
-    """Fused ``collapse_redelivered`` + thin LWW: one thin scan instead
-    of two. One grouped aggregate answers both questions: per key,
-    ``count(*) == count_distinct(seq)`` iff no (keys, seq) group is
-    duplicated (count_distinct ignores NULL seqs, so a null-seq row also
-    fails the equality and takes the safe path), and ``max(seq)`` is
-    already the LWW winner. On the clean path (the overwhelmingly common
-    case) the fat rows join back against that winner set directly —
-    identical output to collapse-then-LWW. Duplicates fall back to the
-    exact collapse + plain thin LWW, which also counts them exactly.
+    """Fused ``collapse_redelivered`` + thin LWW: one thin aggregate,
+    one ``localCheckpoint`` and one ``first()`` whether or not the input
+    carries re-deliveries.
+
+    Per key the aggregate gives the LWW winner, ``max(seq)``, and ``_e``,
+    the rows ``collapse_redelivered`` would drop: repeats of a non-null
+    seq (``count(seq) - count_distinct(seq)``) plus all but one NULL-seq
+    row (``window`` groups NULLs; only ``DedupTransform`` input can hold
+    a NULL seq, the epoch kernel rejects one). Their sum is
+    ``events_redelivered``.
+
+    A key with ``_e == 0`` joins back against its winner exactly as thin
+    LWW does. A key with copies may have copies of its winning row, so
+    its semi-joined rows go through ``dropDuplicates(keys)``: each carries
+    the winning (keys, seq), so keeping any one is what collapse-then-LWW
+    keeps. Each side broadcasts its own winner set while it holds at most
+    :data:`DEFAULT_MAX_BROADCAST_WINNERS` keys, so then only the dirty
+    keys' winning rows cross a shuffle; a side past the cap sort-merge
+    joins, shuffling the fat rows. A clean batch runs the plain semi join
+    alone. NULL keys group as in ``window`` (the join is null-safe,
+    ``dropDuplicates`` groups NULLs).
 
     Returns ``(deduped_df, events_redelivered)``.
     """
-    thin = df.select(*keys, F.col(seq_col))
-    stats = thin.groupBy(*keys).agg(
-        F.max(seq_col).alias(seq_col),
-        F.count(F.lit(1)).alias("_nr"),
-        F.count_distinct(F.col(seq_col)).alias("_nd"),
-    ).localCheckpoint(eager=True)
-    row = stats.agg(
-        F.coalesce(F.sum(F.col("_nr") - F.col("_nd")), F.lit(0)).alias("_e"),
-        F.count(F.lit(1)).alias("_k"),
-    ).first()
-    if int(row["_e"]) != 0:
-        collapsed, extras = collapse_redelivered(df, keys, seq_col)
-        return (
-            last_writer_wins(collapsed, keys, seq_col, strategy="thin"),
-            extras,
+    seq = F.col(seq_col)
+    null_seqs = F.count(F.lit(1)) - F.count(seq)
+    stats = (
+        df.select(*keys, seq)
+        .groupBy(*keys)
+        .agg(
+            F.max(seq).alias(seq_col),
+            (
+                F.count(seq) - F.count_distinct(seq)
+                + F.greatest(null_seqs - 1, F.lit(0))
+            ).alias("_e"),
         )
-    winners = stats.select(*keys, F.col(seq_col))
-    broadcast = row["_k"] <= DEFAULT_MAX_BROADCAST_WINNERS
-    return _key_seq_join(df, winners, keys, seq_col, "left_semi", broadcast), 0
+        .localCheckpoint(eager=True)
+    )
+    row = stats.agg(
+        F.coalesce(F.sum("_e"), F.lit(0)).alias("_e"),
+        F.count(F.lit(1)).alias("_k"),
+        F.count(F.when(F.col("_e") > 0, 1)).alias("_d"),
+    ).first()
+    redelivered, n_dirty = int(row["_e"]), int(row["_d"])
+
+    def join_back(winners: DataFrame, n: int) -> DataFrame:
+        return _key_seq_join(
+            df, winners.select(*keys, seq), keys, seq_col, "left_semi",
+            n <= DEFAULT_MAX_BROADCAST_WINNERS,
+        )
+
+    if redelivered == 0:
+        return join_back(stats, row["_k"]), 0
+    clean = join_back(stats.filter(F.col("_e") == 0), row["_k"] - n_dirty)
+    dirty = join_back(stats.filter(F.col("_e") > 0), n_dirty).dropDuplicates(keys)
+    return clean.unionByName(dirty), redelivered
 
 
 def _lww_thin(

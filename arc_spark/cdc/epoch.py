@@ -22,6 +22,11 @@ The redelivery collapse is always on (``apply.dedup_by_key``): the thin
 LWW strategy keeps every verbatim copy of a duplicated ``(keys, seq)``
 row and the MERGE would write each, and any source can deliver such
 copies (a Debezium restart, a producer re-landing an Iceberg batch).
+With the default unsalted ``thin`` the collapse costs no extra pass: the
+winner aggregate also counts the copies, and only the winning rows of
+keys that have copies go through one ``dropDuplicates``, so an epoch
+holding a re-landed batch runs the clean epoch's jobs plus the two of
+that collapse.
 Keys and seq come from the target table's snapshot, so LWW resolves over
 the keys the MERGE matches on. The batch drivers also share
 :func:`read_events` and the epoch loop of :class:`EpochDriver`.

@@ -176,7 +176,7 @@ def parse_pipeline(
             from arc_spark.pipeline.hocon import HoconError, parse_hocon
 
             try:
-                config = parse_hocon(text)
+                config = parse_hocon(text, params=ctx.args)
             except HoconError as e:
                 raise ConfigError(
                     [f"invalid config: not JSON ({json_err}) nor HOCON ({e})"]

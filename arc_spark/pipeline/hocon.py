@@ -17,7 +17,9 @@ reference's own test fixtures (``src/test/resources/conf/*.conf``) use:
 - value concatenation on one line (``${BASE}"/path/file.csv"``)
 - ``${path}`` substitutions resolved from the document itself, falling
   back to environment variables; unresolved ones are left intact for the
-  pipeline's own ``${param}`` resolution pass
+  pipeline's own ``${param}`` resolution pass. An optional ``${?path}``
+  takes a job parameter (``--path=value``) first, since the pipeline's
+  ``${param}`` pass fills only ``${key}``/``${key=default}``
 - duplicate keys: objects deep-merge, scalars override (HOCON semantics)
 - ``include "uri"`` (also ``include file(...)/url(...)/required(...)``)
   splicing, resolved relative to the including file
@@ -311,27 +313,31 @@ def _get_path(obj: Any, path: str) -> Any:
     return cur
 
 
-def _resolve_substitutions(node: Any, root: dict) -> Any:
+def _resolve_substitutions(node: Any, root: dict, params: dict) -> Any:
     if isinstance(node, _Subst):
+        if node.optional and node.path in params:
+            return params[node.path]
         try:
             target = _get_path(root, node.path)
             if target is node:  # ``a = ${?a}``: the earlier value of a
                 raise KeyError(node.path)
-            return _resolve_substitutions(target, root)
+            return _resolve_substitutions(target, root, params)
         except KeyError:
             if node.path in os.environ:
                 return os.environ[node.path]
             if node.optional:
-                return _resolve_substitutions(node.fallback, root)
+                return _resolve_substitutions(node.fallback, root, params)
             return node.raw  # leave for the pipeline's ${param} pass
     if isinstance(node, dict):
-        return {k: _resolve_substitutions(v, root) for k, v in node.items()}
+        return {k: _resolve_substitutions(v, root, params) for k, v in node.items()}
     if isinstance(node, list):
-        return [_resolve_substitutions(v, root) for v in node]
+        return [_resolve_substitutions(v, root, params) for v in node]
     if isinstance(node, str) and "${" in node:
         # substitutions embedded in concatenated strings
         def repl(m: re.Match) -> str:
             sub = _Subst(m.group(0))
+            if sub.optional and sub.path in params:
+                return str(params[sub.path])
             try:
                 return str(_get_path(root, sub.path))
             except KeyError:
@@ -352,15 +358,19 @@ def _load_include(target: str, base_dir: str | None) -> dict:
     return sub._parse_object(root=True)
 
 
-def parse_hocon(text: str, *, base_dir: str | None = None) -> dict:
-    """Parse HOCON text (a JSON superset) into a plain dict."""
+def parse_hocon(
+    text: str, *, base_dir: str | None = None, params: dict | None = None
+) -> dict:
+    """Parse HOCON text (a JSON superset) into a plain dict. ``params``
+    (the job's ``--key=value`` arguments) resolve an optional ``${?key}``
+    before the document and the environment do."""
     p = _Parser(text, base_dir=base_dir)
     p._skip_ws()
     doc = p._parse_object() if p._peek() == "{" else p._parse_object(root=True)
     p._skip_ws()
     if p.i < p.n:
         raise p._err(f"trailing content: {p.s[p.i:p.i+20]!r}")
-    return _resolve_substitutions(doc, doc)
+    return _resolve_substitutions(doc, doc, params or {})
 
 
 # ---------------------------------------------------------------------------

@@ -136,3 +136,55 @@ def test_retired_strategies_and_kernels_raise(spark):
             last_writer_wins(df, ["k"], "seq", strategy=strategy)
     with pytest.raises(ValueError, match="impl must be"):
         normalize_and_fingerprint(df, impl="pandas")
+
+
+def test_relanded_iceberg_epoch_job_shape(spark, tmp_path):
+    """A 400-event Iceberg epoch whose batch was landed twice verbatim
+    (a producer retry) costs at most 2 Spark jobs more than a clean
+    400-event epoch, and both run exactly one localCheckpoint job: the
+    fused thin LWW keeps its one winner aggregate and collapses copies
+    among the winners (the dirty keys' semi join and dropDuplicates)
+    instead of re-running collapse_redelivered and a second thin LWW
+    (13 more jobs and a second checkpoint before it was fused)."""
+    from pyspark.sql import functions as F
+
+    from arc_spark.cdc.generator import write_change_stream
+    from arc_spark.lake.iceberg_export import write_iceberg
+
+    stream = write_change_stream(spark, str(tmp_path / "ev"), 400, seed=3, num_partitions=4)
+    events = spark.read.parquet(stream)
+    sc = spark.sparkContext
+
+    def epoch(tag, batches):
+        land = str(tmp_path / f"land-{tag}")
+        table, _ = create_table_for_stream(
+            spark, stream, str(tmp_path / f"lake-{tag}"), num_buckets=2
+        )
+        for lo, hi in batches:
+            write_iceberg(
+                spark, events.filter((F.col("seq") >= lo) & (F.col("seq") <= hi)), land
+            )
+        runner = ReplayRunner(spark, land, table, events_format="iceberg", batch_size=400)
+        group = f"test-relanded-shape-{tag}"
+        sc.setJobGroup(group, group)
+        try:
+            (rec,) = runner.run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        st = sc.statusTracker()
+        names = []
+        for j in sorted(st.getJobIdsForGroup(group)):
+            stages = [st.getStageInfo(s) for s in st.getJobInfo(j).stageIds]
+            names.append(" ".join(s.name for s in stages if s is not None))
+        return rec, names
+
+    clean, clean_jobs = epoch("clean", [(0, 399)])
+    relanded, relanded_jobs = epoch("relanded", [(0, 199), (0, 199)])
+    assert clean["events_read"] == relanded["events_read"] == 400
+    assert clean["events_redelivered"] == 0
+    assert relanded["events_redelivered"] == 200 - relanded["schema_changes"] // 2
+    assert relanded["mode"] == clean["mode"]
+    assert len(relanded_jobs) <= len(clean_jobs) + 2, (clean_jobs, relanded_jobs)
+    for jobs in (clean_jobs, relanded_jobs):
+        assert sum("localCheckpoint" in n for n in jobs) == 1, jobs

@@ -76,6 +76,40 @@ def test_optional_substitution_through_include(tmp_path, monkeypatch):
     assert doc == {"job": {"n": 3}}
 
 
+def test_optional_substitution_takes_job_params_first(monkeypatch):
+    """A ``--key=value`` job parameter fills ``${?key}`` ahead of the
+    document and the environment, including inside a concatenation; the
+    pipeline's ``${param}`` pass fills only ``${key}``/``${key=default}``,
+    so without this the shipped example overrides were unreachable from
+    the command line."""
+    from arc_spark.pipeline.config import parse_pipeline
+    from arc_spark.pipeline.core import PipelineContext
+
+    monkeypatch.setenv("HOCON_BUCKETS", "16")
+    monkeypatch.delenv("lock.uri", raising=False)
+    monkeypatch.delenv("num.buckets", raising=False)
+    text = (
+        "x = 7\na = 1\na = ${?x}\nn = 1024\nn = ${?HOCON_BUCKETS}\n"
+        'p = "/root/"${?sub}'
+    )
+    assert parse_hocon(text, params={"x": "9", "HOCON_BUCKETS": "8", "sub": "s"}) == {
+        "x": 7, "a": "9", "n": "8", "p": "/root/s",
+    }
+    assert parse_hocon(text) == {"x": 7, "a": 7, "n": "16", "p": "/root/"}
+
+    uris = {"events.uri": "/e", "table.uri": "/t", "quarantine.uri": "/q", "snapshot.uri": "/s", "snapshot.seq": "0"}
+    for conf in ("cdc_replay.conf", "cdc_bootstrap.conf"):
+        with open(os.path.join(os.path.dirname(__file__), "..", "examples", conf)) as f:
+            body = f.read()
+        for args, buckets, lock in (
+            ({"num.buckets": "8", "lock.uri": "/locks"}, "8", "/locks"),
+            ({}, 1024, None),
+        ):
+            ctx = PipelineContext(spark=None, environment="test", args={**uris, **args})
+            params = parse_pipeline(body, ctx).stages[0].params
+            assert (params["numBuckets"], params["commitLockURI"]) == (buckets, lock), conf
+
+
 def test_parse_hocon_is_json_superset():
     j = {"stages": [{"type": "X", "name": "n", "params": {"a": [1, 2]}}]}
     assert parse_hocon(json.dumps(j)) == j

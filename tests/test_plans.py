@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -357,27 +359,115 @@ def test_statistics_exact_distinct_split_jobs_match_and_skip_flags(spark):
 
 def test_fused_redelivery_lww_matches_split_form(spark):
     """lww_thin_collapse_redelivered must equal collapse_redelivered +
-    thin LWW on both a clean stream and one with verbatim re-deliveries,
-    and report the same extras count."""
+    thin LWW as a bag (a duplicated output row counts), and report the
+    same extras count, on a clean stream, one with verbatim
+    re-deliveries, and each redelivery shape the fused winners split
+    into clean and dirty keys: a copy of only a losing row, a copy of
+    the winning row, three copies, copies in NULL-key groups and NULL-seq
+    copies (only DedupTransform input can carry a NULL seq). window and
+    sort_partitions through dedup_by_key must agree too."""
     from arc_spark.cdc.apply import (
         collapse_redelivered,
+        dedup_by_key,
         last_writer_wins,
         lww_thin_collapse_redelivered,
     )
     from arc_spark.cdc.generator import change_stream
 
+    keys = ["repo", "path"]
+    schema = "repo string, path string, seq long, content string, op string"
+    base = [
+        ("r", "a", 1, "a1", "insert"), ("r", "a", 2, "a2", "update"),
+        ("r", "b", 3, "b3", "insert"), ("r", "b", 4, "b4", "update"),
+        ("r", "c", 5, "c5", "insert"),
+        (None, "n", 6, "n6", "insert"), (None, "n", 7, "n7", "update"),
+        (None, None, 8, "nn8", "insert"),
+        ("r", "z", None, "z0", "insert"), ("r", "z", 9, "z9", "update"),
+        ("r", "y", None, "y0", "insert"),
+    ]
+    shapes = {
+        "losing row copied": [("r", "a", 1, "a1", "insert")],
+        "winning row copied": [("r", "b", 4, "b4", "update")],
+        "three copies": [("r", "c", 5, "c5", "insert")] * 2,
+        "null-key copies": [
+            (None, "n", 7, "n7", "update"), (None, "n", 6, "n6", "insert"),
+            (None, None, 8, "nn8", "insert"), (None, None, 8, "nn8", "insert"),
+        ],
+        "null-seq copies": [
+            ("r", "z", None, "z0", "insert"),
+            ("r", "y", None, "y0", "insert"), ("r", "y", None, "y0", "insert"),
+        ],
+    }
     clean = change_stream(spark, 2000, num_partitions=4).filter(
         F.col("op") != "schema-change"
     )
-    dup = clean.unionByName(clean.limit(50))  # 50 verbatim re-deliveries
-    for df, want_extras in ((clean, 0), (dup, 50)):
-        fused, extras = lww_thin_collapse_redelivered(df, ["repo", "path"], "seq")
-        collapsed, extras2 = collapse_redelivered(df, ["repo", "path"], "seq")
-        split = last_writer_wins(collapsed, ["repo", "path"], "seq", strategy="thin")
-        assert extras == extras2 == want_extras
-        cols = sorted(fused.columns)
-        assert fused.select(cols).exceptAll(split.select(cols)).count() == 0
-        assert split.select(cols).exceptAll(fused.select(cols)).count() == 0
+    cases = [
+        ("clean stream", clean, 0),
+        ("50 re-deliveries", clean.unionByName(clean.limit(50)), 50),
+        ("small clean", spark.createDataFrame(base, schema).repartition(3), 0),
+    ] + [
+        (name, spark.createDataFrame(base + extra, schema).repartition(3), len(extra))
+        for name, extra in shapes.items()
+    ]
+
+    def bag(out):  # rows with multiplicity, column order fixed
+        return Counter(tuple(r) for r in out.select(sorted(out.columns)).collect())
+
+    for name, df, want_extras in cases:
+        fused, extras = lww_thin_collapse_redelivered(df, keys, "seq")
+        collapsed, extras2 = collapse_redelivered(df, keys, "seq")
+        split = last_writer_wins(collapsed, keys, "seq", strategy="thin")
+        assert extras == extras2 == want_extras, name
+        got = bag(fused)
+        assert got == bag(split), name
+        ki = [sorted(df.columns).index(k) for k in keys]
+        assert sum(got.values()) == len({tuple(r[i] for i in ki) for r in got}), name
+        for s in ("window", "sort_partitions"):
+            other, other_extras = dedup_by_key(df, keys, "seq", strategy=s)
+            assert other_extras == want_extras, (name, s)
+            assert bag(other) == got, (name, s)
+
+
+def test_fused_redelivery_broadcasts_each_side_by_its_own_size(
+    spark, monkeypatch, tmp_path
+):
+    """Past the broadcast cap the clean keys sort-merge join, but the few
+    keys with copies still broadcast, so a flood of clean keys does not
+    send the dirty side's fat rows through a shuffle join. Output stays
+    equal to collapse + thin LWW on every side of the cap. Spark's own
+    size-based broadcast is off, so only the explicit hint can broadcast."""
+    from arc_spark.cdc import apply
+    from arc_spark.cdc.generator import change_stream
+
+    keys = ["repo", "path"]
+    clean = change_stream(spark, 400, num_partitions=4).filter(
+        F.col("op") != "schema-change"
+    )
+    clean.unionByName(clean.limit(3)).write.parquet(str(tmp_path / "dup"))
+    dup = spark.read.parquet(str(tmp_path / "dup"))
+    n_keys = clean.select(*keys).distinct().count()
+
+    def joins(out):
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return plan.count("BroadcastHashJoin"), plan.count("SortMergeJoin")
+
+    collapsed, _ = apply.collapse_redelivered(dup, keys, "seq")
+    split = apply.last_writer_wins(collapsed, keys, "seq", strategy="thin")
+    want = Counter(tuple(r) for r in split.select(sorted(split.columns)).collect())
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        for cap, shape in ((n_keys, (2, 0)), (3, (1, 1)), (0, (0, 2))):
+            monkeypatch.setattr(apply, "DEFAULT_MAX_BROADCAST_WINNERS", cap)
+            fused, extras = apply.lww_thin_collapse_redelivered(dup, keys, "seq")
+            assert extras == 3
+            assert joins(fused) == shape, cap
+            got = Counter(
+                tuple(r) for r in fused.select(sorted(fused.columns)).collect()
+            )
+            assert got == want, cap
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
 
 
 def test_simhash_accepts_string_ids(spark):
